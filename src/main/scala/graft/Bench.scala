@@ -57,6 +57,23 @@ object Bench {
       try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
     } catch { case scala.util.control.NonFatal(_) => -1.0 }
 
+  private[graft] def stripz(s: String): String =
+    if (s.contains('.')) {
+      val t = s.reverse.dropWhile(_ == '0').reverse
+      if (t.endsWith(".")) t.dropRight(1) else t
+    } else s
+
+  /** Tiered value format: 2 decimals below `thresh`, 1 decimal to 10 s,
+    * whole seconds beyond — relative quantization stays under ~5-10%
+    * exactly where absolute seconds are large enough to absorb it. The
+    * 2-decimal tier clamps a positive time to 0.01, so it never prints
+    * as 0. */
+  private[graft] def tiered(v: Double, thresh: Double): String =
+    if (v < 0) "-1"
+    else if (v < thresh) stripz(f"${if (v > 0) math.max(v, 0.01) else v}%.2f")
+    else if (v < 10) stripz(f"$v%.1f")
+    else stripz(f"$v%.0f")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -281,19 +298,6 @@ object Bench {
     // the quiet mirror) — the line's job is the driver parse, not the
     // archive; load1/canary detail lives there too now, and `sf` degrades
     // to the directory basename before any timing precision is dropped.
-    def stripz(s: String): String =
-      if (s.contains('.')) {
-        val t = s.reverse.dropWhile(_ == '0').reverse
-        if (t.endsWith(".")) t.dropRight(1) else t
-      } else s
-    // tiered value format: 2 decimals below `thresh`, 1 decimal to 10 s,
-    // whole seconds beyond — relative quantization stays under ~5-10%
-    // exactly where absolute seconds are large enough to absorb it
-    def tiered(v: Double, thresh: Double): String =
-      if (v < 0) "-1"
-      else if (v < thresh) stripz(f"$v%.2f")
-      else if (v < 10) stripz(f"$v%.1f")
-      else stripz(f"$v%.0f")
     def qsJson(fmt: Double => String): String =
       results.map { case (k, best, _) => s""""${short(k)}":${fmt(best)}""" }
         .mkString("{", ",", "}")

@@ -89,7 +89,7 @@ class BloomDedupGate(spark: SparkSession, storePath: String,
     *
     * The fresh/suspect branches and the empty-suspect probe each
     * re-execute the batch's plan — materialize expensive inputs first
-    * (`localCheckpoint`, as [[graft.streaming.BronzePipeline.contentGatedIngest]]
+    * (`localCheckpoint`, as [[graft.streaming.BronzePipeline.ingest]]
     * does with its staging read) so the re-executions hit memory, not
     * the source.
     */

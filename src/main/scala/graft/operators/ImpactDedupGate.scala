@@ -53,10 +53,9 @@ object ImpactDedupGate {
     * Checkpoint contract: ONE batch-bounded checkpointed frame (the
     * refusal id set) rides aboard the returned plan — the consumer's
     * releaseTree frees it (the Verify discipline; [[ingest]] and
-    * [[graft.streaming.BronzePipeline.lexGatedIngest]] do). The batch
-    * plan re-executes once inside the gate — callers on expensive
-    * inputs materialize the batch first (the sibling ingests' `once`
-    * discipline).
+    * [[graft.streaming.BronzePipeline.ingest]] do). The batch plan
+    * re-executes once inside the gate — callers on expensive inputs
+    * materialize the batch first (as that ingest driver does).
     */
   def gate(batch: DataFrame, indexPath: String, tau: Double = 0.8,
       qTerms: Int = 10,

@@ -3538,7 +3538,8 @@ object TextOps {
       //     never cut, so nothing lies below it;
       //   - no accepted product a+b collides with an EXISTING symbol
       //     (the symbol universe is exactly single chars plus prior
-      //     products, known driver-side): a collision would conflate
+      //     products, known driver-side) or with another product
+      //     accepted in the same batch: a collision would conflate
       //     new (x, ab) pairs with live (x, ab) counts, and the SUM of
       //     two individually-bounded counts is not bounded.
       // Equal counts among accepted non-interacting candidates are safe:
@@ -3560,21 +3561,32 @@ object TextOps {
         val cand = top.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
         val complete = cand.length <= want // table never cut
         val usable = if (complete) cand.length else cand.length - 1
-        val known: Set[String] =
-          learned.map(p => p._1 + p._2).toSet // prior products; singles can't equal a 2+-char product
+        // prior products. Assumes one single symbol = one UTF-16 code
+        // unit, so no single can equal a product (2+ units). charSyms
+        // splits by code point — a supplementary char is one 2-unit
+        // symbol, still safe only because its two halves never stand as
+        // adjacent symbols of their own
+        val known: Set[String] = learned.map(p => p._1 + p._2).toSet
         val accepted = scala.collection.mutable.ArrayBuffer(cand(0))
-        var stop = false
+        var stop = known.contains(cand(0)._1 + cand(0)._2)
         while (!stop && accepted.length < usable.min(want)) {
           val c = cand(accepted.length)
           val prevSyms = accepted.flatMap(x => Seq(x._1, x._2)).toSet
+          val product = c._1 + c._2
           val safe =
             !prevSyms.contains(c._1) && !prevSyms.contains(c._2) &&
-            accepted.forall(x => !known.contains(x._1 + x._2)) &&
+            !known.contains(product) &&
+            !accepted.exists(x => x._1 + x._2 == product) &&
             (complete || cand.last._3 < c._3) &&
-            // accepted pairs are exempt from the interaction bound: a
-            // fully-applied merge's own pair count is 0 afterwards (a
-            // greedy pass leaves no adjacent (a, b), and merges never
-            // re-create one — symbols only fuse, never split)
+            // a self-pair (s, s) fuses OVERLAPPING runs: its products
+            // pair up — (ss, ss), (ss, s) — from its own occurrences,
+            // bounded only by its own count, which no later candidate
+            // beats (10×"aaaa" + 5×"cd": (aa, aa) = 10 outranks (c, d))
+            accepted.forall(x => x._1 != x._2) &&
+            // otherwise accepted pairs are exempt from the interaction
+            // bound: a fully-applied merge's own pair count is 0
+            // afterwards (a greedy pass leaves no adjacent (a, b), and
+            // merges never re-create one — symbols only fuse, never split)
             cand.take(usable).forall(x =>
               accepted.contains(x) ||
                 !(Seq(x._1, x._2).exists(prevSyms.contains) && x._3 >= c._3))

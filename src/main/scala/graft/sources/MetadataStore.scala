@@ -81,7 +81,7 @@ object MetadataStore {
     * in the append→marker window cannot silently lose data even if the
     * batch is never retried: [[read]] ignores attempt-without-commit
     * batches, so the orphaned etags never gate a future delivery out.
-    * Streaming retries get this for free — `BronzePipeline.gatedIngest`
+    * Streaming retries get this for free — `BronzePipeline.ingest`
     * derives batchId from the replayed micro-batch id.
     *
     * The returned frame is an eager checkpoint (it must not re-read the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * ingest edge. The fetch function is pluggable (an HTTP client in
   * production, a fake in specs — credential plumbing stays outside the
   * engine); each fetched page lands atomically as one JSONL file in the
-  * staging directory that [[graft.streaming.BronzePipeline.gatedIngest]]
+  * staging directory that [[graft.streaming.BronzePipeline.ingest]]
   * tails, so pacing, cursoring, and retry live HERE while exactly-once
   * and dedup stay where they already are (checkpoint + etag gate).
   *

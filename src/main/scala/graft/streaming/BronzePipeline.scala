@@ -2,12 +2,29 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.CacheHygiene
+import graft.operators.{BloomDedupGate, ImpactDedupGate, IncrementalDedup, TextOps, Validate}
 import graft.sources.{BronzeLayer, ManifestTable, MetadataStore}
+
+/** One stage of the streaming ingest chain [[BronzePipeline.ingest]]
+  * drives. `keep` returns the batch rows to pass on and may write the
+  * batch's audit rows — score and drift tables as a per-`batch_id`
+  * dynamic overwrite, so a crash-replayed batch REPLACES its own rows.
+  * `afterCommit` sees the batch's rows as committed to bronze, after the
+  * commit (see `ingest` for why). A separate trait so a chain can take
+  * any stage — a spec substitutes a fault-injecting one.
+  */
+trait Gate {
+  def keep(batch: DataFrame, batchId: String): DataFrame
+  def afterCommit(committed: => DataFrame): Unit = ()
+}
 
 /** End-to-end incremental bronze → silver pipeline: the reference's daily
   * Airflow pull + transform (finnoio/jobhouse dags/extract_raw_jobs.py)
@@ -23,18 +40,9 @@ import graft.sources.{BronzeLayer, ManifestTable, MetadataStore}
   */
 object BronzePipeline {
 
-  /** The staging-zone row schema every ingest surface binds. ONE
-    * definition: the literal used to be copy-pasted across six
-    * readStream sites, where adding a column and missing one copy would
-    * silently null it in that single ingest path.
-    */
-  private[streaming] val StagingSchema =
+  /** The staging-zone row schema [[ingest]] binds. */
+  private val StagingSchema =
     "posting_id STRING, raw_content STRING, source STRING, extracted_at TIMESTAMP"
-
-  /** The staging readStream every ingest variant tails. */
-  private[streaming] def stagingStream(spark: SparkSession,
-      path: String): DataFrame =
-    spark.readStream.schema(StagingSchema).json(path)
 
   /** The silver projection of the streaming bronze tail. */
   def silverStream(spark: SparkSession, bronzePath: String): DataFrame =
@@ -43,78 +51,69 @@ object BronzePipeline {
       .withColumn("content_chars", length(col("raw_content")).cast("long"))
       .withColumn("extracted_date", to_date(col("extracted_at")))
 
-  /** Streaming gated ingest: tail a landing zone of raw JSONL drops and
-    * route every micro-batch through `MetadataStore.ingestWithGate`, so
+  /** THE streaming ingest edge — the reference's extract → dedup check →
+    * bronze flow as one incremental drain. Tail a landing zone of raw
+    * JSONL drops, pass every micro-batch through `gates` in order, and
+    * land what they keep through [[MetadataStore.ingestWithGate]], so
     * re-delivered payloads are dropped against the PERSISTENT seen-set —
     * unlike `EventsStream.dedupStream`, whose in-stream state only spans
     * the watermark horizon. The checkpoint makes each landing file
     * process exactly once; the etag gate makes same-content re-drops
-    * (new files, old payloads) land nowhere. This is the full reference
-    * ingest edge (extract → dedup check → bronze + metadata) as one
-    * incremental flow.
+    * (new files, old payloads) land nowhere.
     *
-    * Batch ids are namespaced by a per-checkpoint pipeline id: micro-batch
-    * ids alone restart at 0 whenever the checkpoint is deleted/rebuilt,
-    * and a bare `stream-00000` would collide with the previous
-    * checkpoint's commit marker — the gate would treat the fresh
-    * micro-batch as already committed and silently drop its rows.
+    * Per micro-batch:
+    *   1. the staging read is materialized ONCE (only when `gates` is
+    *      non-empty): every gate's branches, probes and audit writes and
+    *      the ingest re-consume it, and un-checkpointed each action
+    *      would re-read and re-parse the staging JSON;
+    *   2. `keep` folds over the gates in order; the commit lands the
+    *      last gate's rows in bronze + metadata;
+    *   3. every checkpoint the chain minted is released (`releaseTree`
+    *      over each stage — the commit was their final consumer);
+    *   4. each gate's `afterCommit` sees the batch's rows READ BACK from
+    *      bronze (read only if some gate uses them). Ordering is the
+    *      crash discipline: a crashed batch can never poison a gate's
+    *      store with content that isn't in bronze, and a replay of an
+    *      already-committed batch (whose ingest lands nothing, the etags
+    *      being in the store) still re-records its rows from the
+    *      committed files instead of losing them forever.
     */
-  def gatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String,
-      checkpointPath: String): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val fresh = MetadataStore.ingestWithGate(batch.toDF(), bronzePath, metaPath, f"$pid-$id%05d")
-        // the ingest's internal writes were the frame's only consumers here
-        graft.CacheHygiene.release(fresh)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  def ingest(spark: SparkSession, stagingPath: String, bronzePath: String,
+      metaPath: String, checkpointPath: String, gates: Seq[Gate]): StreamingQuery =
+    drainBatches(spark, spark.readStream.schema(StagingSchema).json(stagingPath),
+        checkpointPath) { (batch, batchId) =>
+      val stages = ArrayBuffer(
+        if (gates.isEmpty) batch else CacheHygiene.materialize(batch, "bronze batch"))
+      try {
+        gates.foreach(g => stages += g.keep(stages.last, batchId))
+        CacheHygiene.release(
+          MetadataStore.ingestWithGate(stages.last, bronzePath, metaPath, batchId))
+      } finally if (gates.nonEmpty) CacheHygiene.releaseTree(stages.toSeq: _*)
+      lazy val committed = BronzeLayer.readBatch(spark, bronzePath, batchId)
+      gates.foreach(_.afterCommit(committed))
+    }
 
-  /** [[gatedIngest]] with the reference's model validation in front
-    * (finnoio/jobhouse src/common/data.py RawJobPosting): each
-    * micro-batch splits on [[graft.operators.Validate.rawPostingRules]];
-    * valid rows ride the exact-dedup gate to bronze, invalid rows land
+  /** The reference's model validation (finnoio/jobhouse
+    * src/common/data.py RawJobPosting): each micro-batch splits on
+    * [[Validate.rawPostingRules]]; valid rows pass on, invalid rows land
     * in a quarantine dir WITH the rules they broke and their batch id —
     * visible for repair/replay, never silently landed (a null key
     * poisons downstream joins) and never silently dropped (an upstream
     * extractor bug stays invisible). Quarantine appends are at-least-
-    * once on crash-replay; quarantined rows carry their batch id, so
-    * replay duplicates dedupe trivially downstream.
+    * once on crash-replay (quarantined rows carry their batch id, so
+    * replay duplicates dedupe trivially downstream) — and must stay
+    * appends: [[reAdmitQuarantine]]'s file-precise capture relies on
+    * every write landing as fresh files.
     */
-  def validatedGatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, quarantinePath: String,
-      checkpointPath: String): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // ONE materialization of the staging read: the empty-quarantine
-        // probe, the quarantine write, and the gate's ingest all consume
-        // it — un-checkpointed, each action re-reads the JSON and
-        // re-evaluates every rule (three scans per micro-batch)
-        val once = graft.CacheHygiene.materialize(batch.toDF(), "bronze batch")
-        try {
-          val (valid, quarantined) =
-            graft.operators.Validate.split(once, graft.operators.Validate.rawPostingRules)
-          if (!quarantined.isEmpty)
-            quarantined.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(quarantinePath)
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(valid, bronzePath, metaPath, batchId))
-        } finally graft.CacheHygiene.release(once)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def validateGate(quarantinePath: String): Gate = (batch, batchId) => {
+    val (valid, quarantined) = Validate.split(batch, Validate.rawPostingRules)
+    if (!quarantined.isEmpty)
+      quarantined.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(quarantinePath)
+    valid
   }
 
-  /** The quarantine's way back in — [[validatedGatedIngest]] lands rule
+  /** The quarantine's way back in — [[validateGate]] lands rule
     * breakers visibly, and this closes the loop: apply `fix` (a repair
     * transform — backfill a field, re-encode a payload; identity to just
     * re-test), REVALIDATE against the same rules, ingest the rows that
@@ -138,7 +137,7 @@ object BronzePipeline {
     * is FILE-PRECISE: the parquet files captured at entry are the only
     * ones read, still-failing rows append as fresh files BEFORE the
     * captured files delete, and rows appended concurrently by a live
-    * [[validatedGatedIngest]] stream are in neither set — untouched,
+    * [[validateGate]] stream are in neither set — untouched,
     * they wait for the next pass (safe to run against a live stream).
     * Every crash point leaves still-failing rows present, at worst
     * duplicated; quarantine replay duplicates (its appends are
@@ -165,7 +164,7 @@ object BronzePipeline {
     if (!f.exists(quarRoot)) return (0L, 0L)
     // FILE-PRECISE snapshot: capture the quarantine's parquet files at
     // entry and operate on exactly those. Rows appended CONCURRENTLY by
-    // a live validatedGatedIngest micro-batch land in files outside this
+    // a live validateGate micro-batch land in files outside this
     // list — never read here, never deleted, they simply wait for the
     // next pass. (The previous whole-dir swap moved the dir aside and
     // deleted it, destroying concurrent appends with it.)
@@ -233,237 +232,114 @@ object BronzePipeline {
         .foreach(st => f.delete(st.getPath, true))
   }
 
-  /** Full content hygiene on the streaming ingest edge: the exact
-    * re-delivery gate (persistent etags, [[MetadataStore.ingestWithGate]])
-    * composed with NEAR-dup gating against everything previously ingested
-    * ([[graft.operators.IncrementalDedup]] band signatures). A re-worded
-    * or re-whitespaced copy of an already-ingested posting — same tokens,
+  /** The gate family's (doc_id, text) view of staging rows. */
+  private def asDocs(rows: DataFrame): DataFrame =
+    rows.withColumn("doc_id", xxhash64(col("posting_id")))
+      .withColumn("text", col("raw_content"))
+
+  private def docsOf(committed: DataFrame): DataFrame =
+    committed.select(xxhash64(col("posting_id")).as("doc_id"),
+      col("raw_content").as("text"))
+
+  /** NEAR-dup gating against everything previously ingested
+    * ([[IncrementalDedup]] band signatures): a re-worded or
+    * re-whitespaced copy of an already-ingested posting — same tokens,
     * different bytes, so the etag gate alone would admit it — never
-    * reaches bronze.
-    *
-    * Ordering is load-bearing: signatures derive from the batch's rows
-    * IN BRONZE (read back after the commit), not from the ingest's
-    * return value — so a crashed batch can never poison the near-dup
-    * store with content that isn't in bronze, AND a replay of an
-    * already-committed batch (whose ingest returns empty, the etags
-    * being in the store) still re-records its signatures from the
-    * committed files instead of losing them forever. Signature appends
-    * are at-least-once — duplicates are harmless to a semi-join gate.
-    * Near-dups WITHIN one micro-batch both land (cross-batch is this
-    * gate's job; in-batch pairs are q30/q36's).
+    * reaches bronze. The gate preserves every input column, so the batch
+    * rides through it whole. Signature appends are at-least-once —
+    * duplicates are harmless to a semi-join gate. Near-dups WITHIN one
+    * micro-batch both land (cross-batch is this gate's job; in-batch
+    * pairs are q30/q36's).
     */
-  def nearDupGatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, sigPath: String,
-      checkpointPath: String): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // ONE materialization: gate() consumes the batch's band
-        // signatures in two join branches and the docs again in its
-        // anti-join — un-checkpointed, the staging JSON re-reads ~3×
-        // and the MinHash signatures compute twice per micro-batch
-        // (the gate's own scaladoc instruction; every sibling ingest
-        // checkpoints its batch for the same reason)
-        val once = graft.CacheHygiene.materialize(batch.toDF(), "bronze batch")
-        try {
-          // gate() preserves every input column, so the whole batch rides
-          // through it - no second join to recover the survivors
-          val survivors = graft.operators.IncrementalDedup.gate(
-              once.withColumn("doc_id", xxhash64(col("posting_id")))
-                .withColumn("text", col("raw_content")),
-              sigPath)
-            .drop("doc_id", "text")
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(survivors, bronzePath, metaPath, batchId))
-          val committed = BronzeLayer.readBatch(spark, bronzePath, batchId)
-          graft.operators.IncrementalDedup.appendSignatures(
-            committed.select(xxhash64(col("posting_id")).as("doc_id"),
-              col("raw_content").as("text")), sigPath)
-        } finally graft.CacheHygiene.release(once)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def nearDupGate(sigPath: String): Gate = new Gate {
+    def keep(batch: DataFrame, batchId: String): DataFrame =
+      IncrementalDedup.gate(asDocs(batch), sigPath).drop("doc_id", "text")
+    override def afterCommit(committed: => DataFrame): Unit =
+      IncrementalDedup.appendSignatures(docsOf(committed), sigPath)
   }
 
-  /** Streaming ingest through the LEXICAL impact-index gate (r20 — the
-    * lexical tier's streaming parity with [[nearDupGatedIngest]]'s
-    * MinHash and [[SemanticDedupGate]]'s embedding path): a batch
-    * posting whose bag of top BM25 terms is already ≥ τ-covered by a
-    * document in the PERSISTED impact store
-    * ([[graft.operators.ImpactDedupGate]]) never reaches bronze, and
-    * committed survivors merge into the store's posting heads so the
-    * NEXT batch gates against them.
-    *
-    * Same crash discipline as the sibling gates: the store append runs
-    * on the batch's rows IN BRONZE (read back after the commit), with
-    * `ifAbsent = true` so a replay of a committed batch re-records
-    * idempotently (the store's id registry drops the already-recorded
-    * rows) instead of failing loudly mid-recovery. Staleness: the
-    * store's frozen scoring context is the operator's to maintain —
-    * run [[graft.operators.TextOps.impactIndexDrift]] (or gate a
-    * snapshot through requireImpactFresh) on the re-freeze cadence;
-    * this wiring deliberately doesn't tokenize a corpus per
-    * micro-batch.
+  /** The LEXICAL impact-index gate (the lexical tier's streaming parity
+    * with [[nearDupGate]]'s MinHash and [[SemanticDedupGate]]'s embedding
+    * path): a batch posting whose bag of top BM25 terms is already
+    * ≥ τ-covered by a document in the PERSISTED impact store
+    * ([[ImpactDedupGate]]) never reaches bronze, and committed survivors
+    * merge into the store's posting heads so the NEXT batch gates against
+    * them — with `ifAbsent = true`, so a replay of a committed batch
+    * re-records idempotently (the store's id registry drops the
+    * already-recorded rows) instead of failing loudly mid-recovery.
+    * Staleness: the store's frozen scoring context is the operator's to
+    * maintain — run [[TextOps.impactIndexDrift]] (or gate a snapshot
+    * through requireImpactFresh) on the re-freeze cadence; this gate
+    * deliberately doesn't tokenize a corpus per micro-batch.
     */
-  def lexGatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, indexPath: String,
-      checkpointPath: String, tau: Double = 0.8): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // ONE materialization: the gate consumes the batch in its
-        // registry anti-join and its scoring read — un-checkpointed,
-        // the staging JSON would re-read per branch (the sibling
-        // ingests' shared discipline)
-        val once = graft.CacheHygiene.materialize(batch.toDF(), "bronze batch")
-        try {
-          val survivors = graft.operators.ImpactDedupGate.gate(
-              once.withColumn("doc_id", xxhash64(col("posting_id")))
-                .withColumn("text", col("raw_content")),
-              indexPath, tau)
-            .drop("doc_id", "text")
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(survivors, bronzePath, metaPath, batchId))
-          // the gate's refusal frame rides aboard the survivors plan
-          // (its documented checkpoint contract); the commit above was
-          // its final consumer — free it, or a long-running stream
-          // accumulates one batch-bounded frame per micro-batch
-          graft.CacheHygiene.releaseTree(survivors)
-          val committed = BronzeLayer.readBatch(spark, bronzePath, batchId)
-          graft.operators.TextOps.impactIndexAppend(
-            committed.select(xxhash64(col("posting_id")).as("doc_id"),
-              col("raw_content").as("text")),
-            indexPath, ifAbsent = true)
-        } finally graft.CacheHygiene.release(once)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def lexGate(indexPath: String, tau: Double = 0.8): Gate = new Gate {
+    def keep(batch: DataFrame, batchId: String): DataFrame =
+      ImpactDedupGate.gate(asDocs(batch), indexPath, tau).drop("doc_id", "text")
+    override def afterCommit(committed: => DataFrame): Unit =
+      TextOps.impactIndexAppend(docsOf(committed), indexPath, ifAbsent = true)
   }
 
-  /** Streaming ingest through the NORMALIZED-content gate (r14), priced
-    * by [[graft.operators.BloomDedupGate]]: whitespace/case/reformatting
-    * copies — which the metadata gate's byte-exact etag misses and the
-    * near-dup gate would only catch past its similarity threshold — are
-    * dropped before they land, and because the gate runs FIRST, Bloom
-    * negatives (the bulk of a mostly-fresh batch) reach the metadata
-    * join pre-shrunk. Same crash discipline as the near-dup gate:
-    * fingerprints are recorded from the rows that actually COMMITTED,
-    * after the commit, so a replayed batch heals a crash between commit
-    * and record.
+  /** The NORMALIZED-content gate, priced by [[BloomDedupGate]]:
+    * whitespace/case/reformatting copies — which the metadata gate's
+    * byte-exact etag misses and the near-dup gate would only catch past
+    * its similarity threshold — are dropped before they land, and placed
+    * ahead of the commit, Bloom negatives (the bulk of a mostly-fresh
+    * batch) reach the metadata join pre-shrunk. One filter per drain:
+    * construction rebuilds it from the fingerprint store, which IS the
+    * restart-recovery path; committed rows' fingerprints are recorded
+    * after the commit.
     */
-  def contentGatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, fpStorePath: String,
-      checkpointPath: String): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    // one gate per drain: construction rebuilds the filter from the
-    // store, which IS the restart-recovery path
-    val gate = new graft.operators.BloomDedupGate(spark, fpStorePath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // materialize the staging read ONCE: the gate's fresh/suspect
-        // branches re-execute their input plan, and without this the
-        // staging JSON would be re-read and re-hashed per branch
-        val once = graft.CacheHygiene.materialize(batch.toDF(), "bronze batch")
-        try {
-          val survivors = gate.gate(once, textCol = "raw_content")
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(survivors, bronzePath, metaPath, batchId))
-          val committed = BronzeLayer.readBatch(spark, bronzePath, batchId)
-          gate.record(committed, textCol = "raw_content")
-        } finally graft.CacheHygiene.release(once)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def contentGate(spark: SparkSession, fpStorePath: String): Gate = new Gate {
+    private val bloom = new BloomDedupGate(spark, fpStorePath)
+    def keep(batch: DataFrame, batchId: String): DataFrame =
+      bloom.gate(batch, textCol = "raw_content")
+    override def afterCommit(committed: => DataFrame): Unit =
+      bloom.record(committed, textCol = "raw_content")
   }
 
-  /** THE composed streaming curation path — the streaming mirror of the
-    * batch chain PipelineEndToEndSpec proves: per micro-batch,
-    *
-    *   1. drift row FIRST, on the raw arrivals (upstream drift must show
-    *      before the mixture reshapes the distribution),
-    *   2. √-temperature downsample by persisted reference rates
-    *      ([[MixtureGate.applyRates]] — dominant sources flatten at the
-    *      door, unknown sources admit whole),
-    *   3. normalized-content Bloom gate (joinless negatives, suspects
-    *      broadcast-verified against the fingerprint store),
-    *   4. exact-etag metadata gate → bronze commit,
-    *   5. committed rows' fingerprints recorded (crash between commit
-    *      and record heals by replay — the store is rebuilt from truth).
-    *
-    * Every stage is the already-spec'd component; this method is the
-    * wiring plus the one materialization the branches share.
+  /** In-batch normalized-content dedup: the Bloom gate is CROSS-batch by
+    * contract (it verifies against the store), so two normalized copies
+    * arriving in the SAME batch need this keep-min pass. Keyed by the
+    * fingerprint ALONE — an equi-join on (fp, posting_id) would let two
+    * same-id same-fingerprint rows with different raw bytes BOTH survive
+    * (r14 advice) — and the survivor is min of the full row struct
+    * (posting_id first), so ties are deterministic where a
+    * dropDuplicates or min_by would pick arbitrarily. Null raw_content ⇒
+    * null fingerprint: such rows drop explicitly (a groupBy would pool
+    * ALL of them into one group and land a single null-content row,
+    * merging unrelated malformed postings); a row with no content has no
+    * dedup identity and nothing to ingest. Checkpointed: the Bloom
+    * gate's empty-suspect probe and the ingest's materialization are
+    * separate ACTIONS, and the dedup shuffle + struct-min agg would
+    * re-execute per consumer.
+    */
+  val fingerprintDedupGate: Gate = (batch, _) => {
+    val dataCols = batch.columns.toSeq
+    val ordered = ("posting_id" +: dataCols.filterNot(_ == "posting_id")).map(col)
+    CacheHygiene.materialize(
+      batch.withColumn("__fp", TextOps.fingerprint(col("raw_content")))
+        .filter(col("__fp").isNotNull)
+        .groupBy("__fp")
+        .agg(min(struct(ordered: _*)).as("__r"))
+        .select(dataCols.map(c => col(s"__r.$c")): _*),
+      "curated batch")
+  }
+
+  /** THE composed streaming curation chain — the streaming mirror of the
+    * batch chain PipelineEndToEndSpec proves: drift FIRST, on the raw
+    * arrivals (upstream drift must show before the mixture reshapes the
+    * distribution); √-temperature downsample by persisted reference
+    * rates; in-batch fingerprint dedup; the normalized-content Bloom
+    * gate; then the driver's exact-etag commit and fingerprint record.
     */
   def curatedIngest(spark: SparkSession, stagingPath: String,
       bronzePath: String, metaPath: String, fpStorePath: String,
       ratesPath: String, refHistPath: String, driftPath: String,
-      checkpointPath: String, driftThreshold: Double = 0.25): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    val gate = new graft.operators.BloomDedupGate(spark, fpStorePath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        val once = graft.CacheHygiene.materialize(batch.toDF(), "bronze batch")
-        try {
-          DriftMonitor.recordDrift(spark, refHistPath, once, driftPath,
-            batchId, driftThreshold)
-          val sampled = MixtureGate.applyRates(spark, ratesPath, once,
-            "source", "raw_content")
-          // the Bloom gate is CROSS-batch by contract (it verifies against
-          // the store); two normalized copies arriving in the SAME batch
-          // need this intra-batch keep-min dedup. Keyed by __fp ALONE —
-          // an equi-join on (__fp, posting_id) would let two same-id
-          // same-fingerprint rows with different raw bytes BOTH survive
-          // (r14 advice) — and the survivor is min of the full row struct
-          // (posting_id first), so ties are deterministic where a
-          // dropDuplicates or min_by would pick arbitrarily.
-          val fp = graft.operators.TextOps.fingerprint(col("raw_content"))
-          val dataCols = sampled.columns.toSeq
-          val ordered = ("posting_id" +: dataCols.filterNot(_ == "posting_id")).map(col)
-          // null raw_content ⇒ null fingerprint. The old equi-join dropped
-          // such rows (null keys never match); groupBy would instead pool
-          // ALL of them into one group and land a single null-content row
-          // in bronze, merging unrelated malformed postings. Keep the
-          // drop, explicitly: a row with no content has no dedup identity
-          // and nothing to ingest.
-          // checkpointed: the Bloom gate's empty-suspect probe and the
-          // ingest's materialization are separate ACTIONS — without
-          // this, the mixture filter + dedup shuffle + struct-min agg
-          // re-execute per consumer (the staging-read checkpoint above
-          // covers only the scan, not this aggregation)
-          val batchDeduped = graft.CacheHygiene.materialize(
-            sampled.withColumn("__fp", fp)
-              .filter(col("__fp").isNotNull)
-              .groupBy("__fp")
-              .agg(org.apache.spark.sql.functions.min(struct(ordered: _*)).as("__r"))
-              .select(dataCols.map(c => col(s"__r.$c")): _*),
-            "curated batch")
-          try {
-            val survivors = gate.gate(batchDeduped, textCol = "raw_content")
-            graft.CacheHygiene.release(
-              MetadataStore.ingestWithGate(survivors, bronzePath, metaPath, batchId))
-            val committed = BronzeLayer.readBatch(spark, bronzePath, batchId)
-            gate.record(committed, textCol = "raw_content")
-          } finally graft.CacheHygiene.release(batchDeduped)
-        } finally graft.CacheHygiene.release(once)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      checkpointPath: String, driftThreshold: Double = 0.25): StreamingQuery =
+    ingest(spark, stagingPath, bronzePath, metaPath, checkpointPath, Seq(
+      DriftMonitor.gate(refHistPath, driftPath, driftThreshold),
+      MixtureGate.gate(ratesPath), fingerprintDedupGate,
+      contentGate(spark, fpStorePath)))
 
   /** Streaming gold mart over the silver tail: per-source hourly posting
     * counts and payload volume. Watermarked, so aggregation state stays
@@ -499,7 +375,7 @@ object BronzePipeline {
     * checkpoint — whose micro-batch ids restart at 0 — gets a fresh
     * namespace and can never alias an older run's committed batches.
     */
-  private[streaming] def pipelineId(spark: SparkSession, checkpointPath: String): String = {
+  private def pipelineId(spark: SparkSession, checkpointPath: String): String = {
     val dir = new Path(checkpointPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val f = new Path(dir, "_graft_pipeline_id")
@@ -561,19 +437,9 @@ object BronzePipeline {
     * Empty micro-batches commit nothing.
     */
   def runOnceToTable(spark: SparkSession, bronzePath: String,
-      silverTable: String, checkpointPath: String): StreamingQuery = {
-    val pid = pipelineId(spark, checkpointPath)
-    silverStream(spark, bronzePath).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          ManifestTable.commitIdempotent(batch.toDF(), silverTable,
-            f"$pid-$id%05d", statsCols = Seq("extracted_date", "source"))
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      silverTable: String, checkpointPath: String): StreamingQuery =
+    drainToTable(spark, silverStream(spark, bronzePath), silverTable,
+      checkpointPath, Seq("extracted_date", "source"))
 
   /** [[martRunOnce]] with the gold mart as a [[ManifestTable]]: each
     * drain's finalized hours land as one atomic commit with min/max
@@ -585,16 +451,34 @@ object BronzePipeline {
     * what makes the per-commit hour ranges selective.
     */
   def martRunOnceToTable(spark: SparkSession, bronzePath: String,
-      martTable: String, checkpointPath: String): StreamingQuery = {
+      martTable: String, checkpointPath: String): StreamingQuery =
+    drainToTable(spark, goldMartStream(spark, bronzePath), martTable,
+      checkpointPath, Seq("hour", "source"))
+
+  /** Each non-empty micro-batch of `stream` as one idempotent commit to
+    * `table`. */
+  private def drainToTable(spark: SparkSession, stream: DataFrame,
+      table: String, checkpointPath: String,
+      statsCols: Seq[String]): StreamingQuery =
+    drainBatches(spark, stream, checkpointPath) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        ManifestTable.commitIdempotent(batch, table, batchId, statsCols = statsCols)
+    }
+
+  /** The scaffold every foreachBatch drain shares: run `body` on each
+    * available micro-batch under its namespaced batch id, then stop.
+    * Batch ids are namespaced by the per-checkpoint [[pipelineId]]:
+    * micro-batch ids alone restart at 0 whenever the checkpoint is
+    * deleted/rebuilt, and a bare `stream-00000` would collide with the
+    * previous checkpoint's commit marker — the gate would treat the
+    * fresh micro-batch as already committed and silently drop its rows.
+    */
+  private def drainBatches(spark: SparkSession, stream: DataFrame,
+      checkpointPath: String)(body: (DataFrame, String) => Unit): StreamingQuery = {
     val pid = pipelineId(spark, checkpointPath)
-    goldMartStream(spark, bronzePath).writeStream
+    stream.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          ManifestTable.commitIdempotent(batch.toDF(), martTable,
-            f"$pid-$id%05d", statsCols = Seq("hour", "source"))
-        ()
-      }
+      .foreachBatch((batch: Dataset[Row], id: Long) => body(batch.toDF(), f"$pid-$id%05d"))
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.CacheHygiene
 import graft.operators.TextOps
-import graft.sources.MetadataStore
+import graft.sources.ParquetSink
 
 /** Streaming CCNet quality gate — q119 at the ingest edge (Wenzek et
   * al. 2020 run continuously): the per-language unigram LM and the
@@ -119,44 +119,25 @@ object CcnetGate {
       .withColumnRenamed("__lang", "lang")
   }
 
-  /** [[BronzePipeline.gatedIngest]] with the CCNet gate in front:
-    * every micro-batch is language-ID'd, scored against the frozen
-    * model, `tail` rows are dropped at the door (the CCNet cut), and
-    * survivors — including `unscored` ones — ride the exact-dedup
-    * metadata gate to bronze. Bronze stays the RAW schema (the bronze
-    * writer's contract); the per-row curation evidence
-    * (posting_id, lang, nll, bucket — tail rows included, so the drop
-    * is auditable) lands in `scoresPath`, batch-partitioned with
-    * dynamic overwrite: a crash-replayed batch REPLACES its own score
-    * rows, the DriftMonitor discipline. */
-  def gatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, modelPath: String,
-      scoresPath: String, checkpointPath: String): StreamingQuery = {
-    val pid = BronzePipeline.pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // one scoring pass feeds the survivor filter AND the score
-        // table — without the checkpoint the LM join would run twice
-        val scored = graft.CacheHygiene.materialize(
-          scoreBatch(spark, modelPath, batch.toDF(),
-            "posting_id", "raw_content", TextOps.langIdExpr(col("raw_content"))),
-          "ccnet-gate batch")
-        try {
-          val survivors = scored.filter(col("bucket") =!= "tail")
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(survivors, bronzePath, metaPath,
-              batchId))
-          graft.sources.ParquetSink.overwritePartitions(
-            scored.select(col("posting_id"), col("lang"), col("nll"),
-              col("bucket"), lit(batchId).as("batch_id")),
-            scoresPath, Seq("batch_id"))
-        } finally graft.CacheHygiene.release(scored)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** The CCNet cut as an ingest [[Gate]]: every micro-batch is
+    * language-ID'd and scored against the frozen model, `tail` rows are
+    * dropped at the door, and survivors — including `unscored` ones —
+    * pass on with the staging schema (bronze stays the RAW schema, the
+    * bronze writer's contract). The per-row curation evidence
+    * (posting_id, lang, nll, bucket — tail rows included, so the drop is
+    * auditable) lands in `scoresPath`. The scored batch is checkpointed:
+    * it feeds both the score table and the survivor filter, and the LM
+    * join would otherwise run twice.
+    */
+  def gate(modelPath: String, scoresPath: String): Gate = (batch, batchId) => {
+    val scored = CacheHygiene.materialize(
+      scoreBatch(batch.sparkSession, modelPath, batch,
+        "posting_id", "raw_content", TextOps.langIdExpr(col("raw_content"))),
+      "ccnet-gate batch")
+    ParquetSink.overwritePartitions(
+      scored.select(col("posting_id"), col("lang"), col("nll"),
+        col("bucket"), lit(batchId).as("batch_id")),
+      scoresPath, Seq("batch_id"))
+    scored.filter(col("bucket") =!= "tail").drop("lang", "nll", "bucket")
   }
 }

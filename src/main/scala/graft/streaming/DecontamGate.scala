@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.CacheHygiene
 import graft.operators.TextOps
-import graft.sources.MetadataStore
+import graft.sources.ParquetSink
 
 /** Streaming benchmark-decontamination gate — q65/q123 at the ingest
   * edge: the eval registry's distinct n-gram hashes are persisted ONCE
@@ -92,46 +92,24 @@ object DecontamGate {
       .withColumn("contaminated", col("n_shared_grams") > maxSharedGrams.toLong)
   }
 
-  /** [[BronzePipeline.gatedIngest]] with the decontamination gate in
-    * front: every micro-batch is screened against the frozen registry,
-    * contaminated rows are held at the door, and survivors ride the
-    * exact-dedup metadata gate to bronze. Bronze keeps the RAW schema;
-    * the per-row screening evidence (posting_id, n_shared_grams,
-    * contaminated — held rows included, so the drop is auditable) lands
-    * in `scoresPath`, batch-partitioned with dynamic overwrite so a
-    * crash-replayed batch REPLACES its own score rows (the
-    * DriftMonitor/CcnetGate discipline). */
-  def gatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, registryPath: String,
-      scoresPath: String, checkpointPath: String,
-      maxSharedGrams: Int = 0): StreamingQuery = {
-    val pid = BronzePipeline.pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // one screening pass feeds the survivor filter AND the score
-        // table — without the checkpoint the registry probe would run
-        // twice per batch
-        val screened = graft.CacheHygiene.materialize(
-          screenBatch(spark, registryPath, batch.toDF(),
-            "posting_id", "raw_content", maxSharedGrams),
-          "decontam-gate batch")
-        try {
-          val survivors = screened.filter(!col("contaminated"))
-            .drop("n_shared_grams", "contaminated")
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(survivors, bronzePath, metaPath,
-              batchId))
-          graft.sources.ParquetSink.overwritePartitions(
-            screened.select(col("posting_id"), col("n_shared_grams"),
-              col("contaminated"), lit(batchId).as("batch_id")),
-            scoresPath, Seq("batch_id"))
-        } finally graft.CacheHygiene.release(screened)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** Decontamination as an ingest [[Gate]]: every micro-batch is
+    * screened against the frozen registry, contaminated rows are held at
+    * the door, and survivors pass on. The per-row screening evidence
+    * (posting_id, n_shared_grams, contaminated — held rows included, so
+    * the drop is auditable) lands in `scoresPath`. The screened batch is
+    * checkpointed: it feeds both the score table and the survivor
+    * filter, and the registry probe would otherwise run twice.
+    */
+  def gate(registryPath: String, scoresPath: String,
+      maxSharedGrams: Int = 0): Gate = (batch, batchId) => {
+    val screened = CacheHygiene.materialize(
+      screenBatch(batch.sparkSession, registryPath, batch,
+        "posting_id", "raw_content", maxSharedGrams),
+      "decontam-gate batch")
+    ParquetSink.overwritePartitions(
+      screened.select(col("posting_id"), col("n_shared_grams"),
+        col("contaminated"), lit(batchId).as("batch_id")),
+      scoresPath, Seq("batch_id"))
+    screened.filter(!col("contaminated")).drop("n_shared_grams", "contaminated")
   }
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.TextOps
-import graft.sources.{MetadataStore, ParquetSink}
+import graft.sources.ParquetSink
 
 /** Streaming quality-drift monitor — the continuous form of q92: the
   * reference quality histogram is computed once from a known-good window
@@ -23,11 +22,6 @@ import graft.sources.{MetadataStore, ParquetSink}
   * The PSI arithmetic ([[TextOps.psiFromHistograms]]) runs on aggregates.
   * Industry reading of the score: <0.1 stable, 0.1–0.25 drifting, >0.25
   * investigate (the default alert threshold).
-  *
-  * Crash-safety: drift rows are written with dynamic partition overwrite
-  * keyed by batch_id, so a foreachBatch replay after a crash REPLACES the
-  * batch's rows instead of duplicating them — the drift table stays
-  * exactly-once per (batch, source) like the ingest itself.
   */
 object DriftMonitor {
 
@@ -69,47 +63,17 @@ object DriftMonitor {
       TextOps.qualityHistogram(batch, grp, textCol, counts(0)), grp)
   }
 
-  /** One drift row per source for `batch`, (over)written under the
-    * batch's `driftPath` partition — the shared tail of
-    * [[monitoredIngest]] and [[BronzePipeline.curatedIngest]]. */
-  private[streaming] def recordDrift(spark: SparkSession, refHistPath: String,
-      batch: DataFrame, driftPath: String, batchId: String,
-      threshold: Double): Unit = {
-    val drift = psiAgainst(spark, refHistPath, batch,
-        "source", "raw_content")
-      .withColumn("alert", col("psi") > threshold)
-      .withColumn("batch_id", lit(batchId))
-    ParquetSink.overwritePartitions(drift, driftPath, Seq("batch_id"))
-  }
-
-  /** [[BronzePipeline.gatedIngest]] with the drift monitor riding each
-    * micro-batch: rows land through the exact-dedup metadata gate as
-    * usual, then the batch's quality distribution is scored against the
-    * reference and one drift row per source is (over)written under the
-    * batch's partition of `driftPath`.
-    */
-  def monitoredIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, refHistPath: String,
-      driftPath: String, checkpointPath: String,
-      threshold: Double = 0.25): StreamingQuery = {
-    val pid = BronzePipeline.pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batchId = f"$pid-$id%05d"
-        // one materialization: the gate consumes the batch and the
-        // histogram pass would otherwise re-read the staging JSON
-        val once = graft.CacheHygiene.materialize(batch.toDF(), "drift batch")
-        try {
-          graft.CacheHygiene.release(
-            MetadataStore.ingestWithGate(once, bronzePath, metaPath, batchId))
-          recordDrift(spark, refHistPath, once, driftPath, batchId,
-            threshold)
-        } finally graft.CacheHygiene.release(once)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** The drift monitor as an ingest [[Gate]]: one drift row per source
+    * for the batch, (over)written under the batch's `driftPath`
+    * partition; every row passes on (the monitor observes, it does not
+    * gate). */
+  def gate(refHistPath: String, driftPath: String,
+      threshold: Double = 0.25): Gate = (batch, batchId) => {
+    ParquetSink.overwritePartitions(
+      psiAgainst(batch.sparkSession, refHistPath, batch, "source", "raw_content")
+        .withColumn("alert", col("psi") > threshold)
+        .withColumn("batch_id", lit(batchId)),
+      driftPath, Seq("batch_id"))
+    batch
   }
 }

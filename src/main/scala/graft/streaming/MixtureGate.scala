@@ -2,9 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.TextOps
-import graft.sources.MetadataStore
 
 /** Streaming √-temperature source rebalance — q89 at the ingest edge:
   * keep-rates are computed ONCE from a reference window
@@ -41,33 +39,17 @@ object MixtureGate {
     // regardless of keep_rate — even for sources the gate promises to
     // admit whole. A mixture gate has no opinion about malformed rows:
     // admit them (coalesce → true) and let the pipeline's validation /
-    // dedup stages route them loudly (curatedIngest's fingerprint stage
-    // drops them with an explicit contract; validatedGatedIngest
-    // quarantines them).
+    // dedup stages route them loudly (the fingerprint dedup gate drops
+    // them with an explicit contract; the validate gate quarantines them).
     batch.join(broadcast(rates), Seq(grp), "left")
       .filter(coalesce(TextOps.mixtureKeep(col(textCol),
         coalesce(col("keep_rate"), lit(1.0))), lit(true)))
       .drop("keep_rate")
   }
 
-  /** [[BronzePipeline.gatedIngest]] with the mixture filter in front:
-    * micro-batches downsample by the persisted rates, survivors ride the
-    * exact-dedup metadata gate to bronze. */
-  def gatedIngest(spark: SparkSession, stagingPath: String,
-      bronzePath: String, metaPath: String, ratesPath: String,
-      checkpointPath: String, grp: String = "source",
-      textCol: String = "raw_content"): StreamingQuery = {
-    val pid = BronzePipeline.pipelineId(spark, checkpointPath)
-    val raw = BronzePipeline.stagingStream(spark, stagingPath)
-    raw.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val sampled = applyRates(spark, ratesPath, batch.toDF(), grp, textCol)
-        graft.CacheHygiene.release(
-          MetadataStore.ingestWithGate(sampled, bronzePath, metaPath, f"$pid-$id%05d"))
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  /** The mixture filter as an ingest [[Gate]]: micro-batches downsample
+    * by the persisted rates before the dedup gates. */
+  def gate(ratesPath: String, grp: String = "source",
+      textCol: String = "raw_content"): Gate =
+    (batch, _) => applyRates(batch.sparkSession, ratesPath, batch, grp, textCol)
 }

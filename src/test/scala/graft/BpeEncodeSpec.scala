@@ -79,6 +79,10 @@ class BpeEncodeSpec extends SparkSpec {
       // repeated-symbol words (aa pairs, overlap semantics) + chains
       ("overlaps", Seq.fill(7)("aaa") ++ Seq.fill(6)("aab") ++
         Seq.fill(5)("baa"), 4),
+      // self-pair runs: merging (a,a) turns each "aaaa" into (aa,aa),
+      // a new pair born of (a,a)'s own overlapping occurrences that
+      // outranks the disjoint runner-up (c,d) — the batch must stop
+      ("self-pair-runs", Seq.fill(10)("aaaa") ++ Seq.fill(5)("cd"), 3),
       // deep multi-round learning over a richer vocabulary
       ("deep", (for (a <- 'a' to 'f'; b <- 'a' to 'f')
         yield s"$a$b$a$b").zipWithIndex.flatMap { case (w, i) =>

@@ -18,20 +18,20 @@ class BronzePipelineSpec extends SparkSpec {
       rawPostings(rows).coalesce(1).write.mode("append").json(staging)
 
     drop(Seq("p1" -> "c1", "p2" -> "c2"))
-    BronzePipeline.gatedIngest(spark, staging, bronze, meta, checkpoint).awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint, Nil).awaitTermination()
     assert(BronzeLayer.readRaw(spark, bronze).count() == 2)
 
     // a NEW landing file re-delivers c2 and adds c3: the file is fresh
     // (checkpoint processes it) but the c2 payload must gate out
     drop(Seq("p3" -> "c2", "p4" -> "c3"))
-    BronzePipeline.gatedIngest(spark, staging, bronze, meta, checkpoint).awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint, Nil).awaitTermination()
     val rows = BronzeLayer.readRaw(spark, bronze)
     assert(rows.count() == 3, "re-dropped payload must not land")
     assert(rows.select("raw_content").distinct().count() == 3)
     assert(graft.sources.MetadataStore.read(spark, meta).count() == 3)
 
     // nothing new: no-op
-    BronzePipeline.gatedIngest(spark, staging, bronze, meta, checkpoint).awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint, Nil).awaitTermination()
     assert(BronzeLayer.readRaw(spark, bronze).count() == 3)
   }
 
@@ -44,8 +44,8 @@ class BronzePipelineSpec extends SparkSpec {
     val checkpoint = s"$root/ckpt"
     def drop(rows: Seq[(String, String)]): Unit =
       rawPostings(rows).coalesce(1).write.mode("append").json(staging)
-    def drain(): Unit = BronzePipeline.nearDupGatedIngest(
-      spark, staging, bronze, meta, sigs, checkpoint).awaitTermination()
+    def drain(): Unit = BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint,
+      Seq(BronzePipeline.nearDupGate(sigs))).awaitTermination()
 
     drop(Seq("p1" -> "spark shuffle join window agg scan filter sort"))
     drain()
@@ -81,8 +81,8 @@ class BronzePipelineSpec extends SparkSpec {
       idx)
     def drop(rows: Seq[(String, String)]): Unit =
       rawPostings(rows).coalesce(1).write.mode("append").json(staging)
-    def drain(): Unit = BronzePipeline.lexGatedIngest(
-      spark, staging, bronze, meta, idx, checkpoint).awaitTermination()
+    def drain(): Unit = BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint,
+      Seq(BronzePipeline.lexGate(idx))).awaitTermination()
 
     // L1 copies stored doc 2004's body byte-for-byte under a new id →
     // the store's heads cover its whole bag, gated out BEFORE bronze.
@@ -122,8 +122,8 @@ class BronzePipelineSpec extends SparkSpec {
     val checkpoint = s"$root/ckpt"
     def drop(rows: Seq[(String, String)]): Unit =
       rawPostings(rows).coalesce(1).write.mode("append").json(staging)
-    def drain(): Unit = BronzePipeline.contentGatedIngest(
-      spark, staging, bronze, meta, fps, checkpoint).awaitTermination()
+    def drain(): Unit = BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint,
+      Seq(BronzePipeline.contentGate(spark, fps))).awaitTermination()
 
     drop(Seq("c1" -> "identical body of recycled content here"))
     drain()
@@ -202,14 +202,14 @@ class BronzePipelineSpec extends SparkSpec {
       rawPostings(rows).coalesce(1).write.mode("append").json(staging)
 
     drop(Seq("p1" -> "c1"))
-    BronzePipeline.gatedIngest(spark, staging, bronze, meta, s"$root/ckpt1").awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, s"$root/ckpt1", Nil).awaitTermination()
     assert(BronzeLayer.readRaw(spark, bronze).count() == 1)
 
     // the checkpoint is lost and rebuilt: micro-batch ids restart at 0.
     // Without the per-checkpoint namespace, batch 0 aliases the committed
     // _commit_...00000 marker and the NEW payload is silently dropped.
     drop(Seq("p2" -> "c2"))
-    BronzePipeline.gatedIngest(spark, staging, bronze, meta, s"$root/ckpt2").awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, s"$root/ckpt2", Nil).awaitTermination()
     val rows = BronzeLayer.readRaw(spark, bronze)
     assert(rows.filter(col("raw_content") === "c2").count() == 1,
       "new payload after a checkpoint rebuild must land")

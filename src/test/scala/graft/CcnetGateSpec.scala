@@ -85,8 +85,8 @@ class CcnetGateSpec extends SparkSpec {
       "p_tail" -> "the qx1 qx2 qx3 qx4 qx5 qx6 qx7 qx8 qx9 is",
       "p_und" -> "zzz qqq www"))
     batch.coalesce(1).write.mode("append").json(staging)
-    CcnetGate.gatedIngest(spark, staging, bronze, meta, model,
-      s"$root/scores", s"$root/ckpt").awaitTermination()
+    graft.streaming.BronzePipeline.ingest(spark, staging, bronze, meta,
+      s"$root/ckpt", Seq(CcnetGate.gate(model, s"$root/scores"))).awaitTermination()
     val landed = BronzeLayer.readRaw(spark, bronze).collect()
       .map(_.getAs[String]("posting_id")).toSet
     assert(landed == Set("p_head", "p_und"),

@@ -98,8 +98,8 @@ class DecontamGateSpec extends SparkSpec {
       "p_clean" -> (1 to 30).map(i => s"clean$i").mkString(" "),
       "p_short" -> "too short to screen"))
     batch.coalesce(1).write.mode("append").json(staging)
-    DecontamGate.gatedIngest(spark, staging, s"$root/bronze", s"$root/meta",
-      s"$root/registry", s"$root/scores", s"$root/ckpt").awaitTermination()
+    graft.streaming.BronzePipeline.ingest(spark, staging, s"$root/bronze", s"$root/meta",
+      s"$root/ckpt", Seq(DecontamGate.gate(s"$root/registry", s"$root/scores"))).awaitTermination()
     val landed = BronzeLayer.readRaw(spark, s"$root/bronze").collect()
       .map(_.getAs[String]("posting_id")).toSet
     assert(landed == Set("p_clean", "p_short"),

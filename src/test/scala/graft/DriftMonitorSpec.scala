@@ -25,8 +25,8 @@ class DriftMonitorSpec extends SparkSpec {
       rawPostings((1 to 30).map(i => s"ref$i" -> soup(20, s"r$i"))),
       "source", "raw_content", refHist)
 
-    def drain(): Unit = DriftMonitor.monitoredIngest(
-      spark, staging, bronze, meta, refHist, drift, checkpoint).awaitTermination()
+    def drain(): Unit = graft.streaming.BronzePipeline.ingest(spark, staging, bronze, meta,
+      checkpoint, Seq(DriftMonitor.gate(refHist, drift))).awaitTermination()
     def drop(rows: Seq[(String, String)]): Unit =
       rawPostings(rows).coalesce(1).write.mode("append").json(staging)
 

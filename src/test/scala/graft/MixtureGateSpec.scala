@@ -38,7 +38,7 @@ class MixtureGateSpec extends SparkSpec {
       .union(post(smallRows, "small")).union(post(novelRows, "fresh-crawl"))
     batch.coalesce(1).write.mode("append").json(staging)
 
-    MixtureGate.gatedIngest(spark, staging, bronze, meta, rates, checkpoint)
+    graft.streaming.BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint, Seq(MixtureGate.gate(rates)))
       .awaitTermination()
     val landed = BronzeLayer.readRaw(spark, bronze)
     val bySrc = landed.groupBy("source").count().collect()

@@ -219,8 +219,8 @@ class PacedExtractorSpec extends SparkSpec {
     def tick(): Unit = {
       PacedExtractor.run(spark, fetch, s"$root/staging", s"$root/cursor",
         limiter, sleepMs = clock.sleepMs _)
-      graft.streaming.BronzePipeline.gatedIngest(spark, s"$root/staging",
-        s"$root/bronze", s"$root/meta", s"$root/ckpt-ingest").awaitTermination()
+      graft.streaming.BronzePipeline.ingest(spark, s"$root/staging",
+        s"$root/bronze", s"$root/meta", s"$root/ckpt-ingest", Nil).awaitTermination()
       graft.streaming.BronzePipeline.runOnce(spark, s"$root/bronze",
         s"$root/silver", s"$root/ckpt-silver").awaitTermination()
       graft.streaming.BronzePipeline.martRunOnce(spark, s"$root/bronze",
@@ -289,8 +289,8 @@ class PacedExtractorSpec extends SparkSpec {
       s"both streams' pages must land prefix-disambiguated, got ${files.mkString(",")}")
 
     // both streams flow through the etag-gated ingest exactly once
-    graft.streaming.BronzePipeline.gatedIngest(spark, staging,
-      s"$root/bronze", s"$root/meta", s"$root/ckpt").awaitTermination()
+    graft.streaming.BronzePipeline.ingest(spark, staging,
+      s"$root/bronze", s"$root/meta", s"$root/ckpt", Nil).awaitTermination()
     assert(graft.sources.BronzeLayer.readRaw(spark, s"$root/bronze").count() == 10,
       "10 distinct payloads across both streams must reach bronze exactly once")
   }
@@ -519,8 +519,8 @@ class PacedExtractorSpec extends SparkSpec {
     PacedExtractor.run(spark, fetch, staging, s"$root/cursor", limiter,
       sleepMs = clock.sleepMs _)
 
-    val q = graft.streaming.BronzePipeline.gatedIngest(
-      spark, staging, s"$root/bronze", s"$root/meta", s"$root/ckpt")
+    val q = graft.streaming.BronzePipeline.ingest(
+      spark, staging, s"$root/bronze", s"$root/meta", s"$root/ckpt", Nil)
     q.awaitTermination()
     val bronze = graft.sources.BronzeLayer.readRaw(spark, s"$root/bronze")
     assert(bronze.count() == 4,
@@ -602,8 +602,8 @@ class PacedExtractorSpec extends SparkSpec {
         s"query params must ride every request: $queries")
 
       // ... and through the full gated path into bronze
-      graft.streaming.BronzePipeline.gatedIngest(spark, s"$root/staging",
-        s"$root/bronze", s"$root/meta", s"$root/ckpt").awaitTermination()
+      graft.streaming.BronzePipeline.ingest(spark, s"$root/staging",
+        s"$root/bronze", s"$root/meta", s"$root/ckpt", Nil).awaitTermination()
       val bronze = graft.sources.BronzeLayer.readRaw(spark, s"$root/bronze")
       import org.apache.spark.sql.functions.col
       val rows = bronze.select("posting_id", "raw_content", "source").collect()
@@ -719,8 +719,8 @@ class PacedExtractorSpec extends SparkSpec {
         fetcher.fetchDetail, staging, s"$root/state2", limiter,
         batchSize = 4, backoffMs = 1L, tokens = Some(tp), filePrefix = "gen2-")
       assert(n3 == 7 && b3 == 2)
-      graft.streaming.BronzePipeline.gatedIngest(spark, staging,
-        s"$root/bronze", s"$root/meta", s"$root/ckpt").awaitTermination()
+      graft.streaming.BronzePipeline.ingest(spark, staging,
+        s"$root/bronze", s"$root/meta", s"$root/ckpt", Nil).awaitTermination()
       val bronze = graft.sources.BronzeLayer.readRaw(spark, s"$root/bronze")
       assert(bronze.count() == 7,
         "gen-2's re-delivered details must be gated: one bronze row per posting")

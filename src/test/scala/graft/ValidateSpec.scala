@@ -67,8 +67,8 @@ class ValidateSpec extends SparkSpec {
       ("p2", "broken payload", "hh"),
       (null, """{"title":"y"}""", "hh")))
       .coalesce(1).write.mode("append").json(staging)
-    BronzePipeline.validatedGatedIngest(
-      spark, staging, bronze, meta, quarantine, checkpoint).awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint,
+      Seq(BronzePipeline.validateGate(quarantine))).awaitTermination()
 
     val landed = BronzeLayer.readRaw(spark, bronze)
     assert(landed.count() == 1)
@@ -79,8 +79,8 @@ class ValidateSpec extends SparkSpec {
     assert(q.columns.contains(Validate.ViolationsCol) && q.columns.contains("batch_id"))
 
     // an idle drain quarantines nothing new and lands nothing new
-    BronzePipeline.validatedGatedIngest(
-      spark, staging, bronze, meta, quarantine, checkpoint).awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, checkpoint,
+      Seq(BronzePipeline.validateGate(quarantine))).awaitTermination()
     assert(BronzeLayer.readRaw(spark, bronze).count() == 1)
     assert(spark.read.parquet(quarantine).count() == 2)
   }
@@ -98,8 +98,8 @@ class ValidateSpec extends SparkSpec {
       ("p2", """{"title":"analyst"}""", null),
       ("p3", "broken payload", "hh")))
       .coalesce(1).write.mode("append").json(staging)
-    BronzePipeline.validatedGatedIngest(
-      spark, staging, bronze, meta, quarantine, s"$root/ckpt").awaitTermination()
+    BronzePipeline.ingest(spark, staging, bronze, meta, s"$root/ckpt",
+      Seq(BronzePipeline.validateGate(quarantine))).awaitTermination()
     assert(BronzeLayer.readRaw(spark, bronze).count() == 1)
     assert(spark.read.parquet(quarantine).count() == 2)
     val origBatchId = spark.read.parquet(quarantine)
