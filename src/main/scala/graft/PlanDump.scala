@@ -48,7 +48,7 @@ object PlanDump {
       // over the one checkpointed gram stream
       "q111_gopher_rules", "q112_target_select", "q113_dsir",
       // r15 batch 3 cont.: q114's keyed pair agg + bounded top-k,
-      // q115's zero-shuffle segmentation folds over the learned rules
+      // q115's zero-shuffle rank-table encode over the learned rules
       "q114_bpe_pairs", "q115_bpe_learn",
       // r15 batch 5: q122's broadcast query sample + bounded-heap
       // top-k, q123's corpus gram scan into the broadcast eval-set

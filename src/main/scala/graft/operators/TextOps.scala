@@ -3424,9 +3424,12 @@ object TextOps {
 
   // ---- BPE merge learning (Sennrich et al. 2016) --------------------
 
-  /** A token's BPE base symbols: its characters, in order. */
+  /** A token's BPE base symbols: its code points, in order. `(?s)`
+    * because Java's `.` skips U+0085, U+2028 and U+2029, which `\s+`
+    * leaves inside tokens — without it the token a, U+2028, b yields
+    * [a, b], a pair the text never holds. */
   private def charSyms(w: Column): Column =
-    regexp_extract_all(w, lit("."), lit(0))
+    regexp_extract_all(w, lit("(?s)."), lit(0))
 
   /** Non-empty lowercased tokens — BPE never sees zero-length words. */
   private def bpeTokens(text: Column): Column =
@@ -3438,12 +3441,12 @@ object TextOps {
       (x, y) => struct(x.as("a"), y.as("b")))
 
   /** One BPE merge (a, b) → ab applied greedily left-to-right to a
-    * symbol array — an aggregate-HOF fold, codegen'd, no UDF. Matches
-    * the reference implementation's non-overlapping semantics (and the
-    * oracle's bracketed-string `replace`): [a, a, a] under (a, a) →
-    * [aa, a]. The empty-accumulator branch guards the ANSI
-    * element_at(…, 0) error lazily (CaseWhen branches don't evaluate
-    * until taken — the §7 ANSI-division lesson).
+    * symbol array — [[bpeLearn]]'s per-round vocab update, an
+    * aggregate-HOF fold, no UDF. Matches the reference implementation's
+    * non-overlapping semantics (and the oracle's bracketed-string
+    * `replace`): [a, a, a] under (a, a) → [aa, a]. The empty-accumulator
+    * branch guards the ANSI element_at(…, 0) error lazily (CaseWhen
+    * branches don't evaluate until taken — the §7 ANSI-division lesson).
     */
   private def applyMerge(sym: Column, a: String, b: String): Column =
     aggregate(sym, array().cast("array<string>"), (acc, x) =>
@@ -3674,47 +3677,21 @@ object TextOps {
     learned.toList
   }
 
-  /** Segment every document with an ordered BPE merge list: each word's
-    * characters are fused rule by rule in learned order (on the
-    * training corpus this reproduces the trainer's own final state —
-    * the property the oracle checks). Emits per doc the symbol count
-    * and the space-joined segmentation. Pure per-row HOF folds over one
-    * corpus scan — zero shuffles. The expression tree grows linearly
-    * with the rule count (one nested transform per rule): fine for the
-    * merge-list sizes this surface learns (tens); the 1k+-merge
-    * production path is the [[graft.plans.BpeEncode]] rank-table kernel
-    * (q146), whose lowest-rank-first loop provably matches this fold on
-    * collision-free tables.
-    */
-  def bpeSegment(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val base = transform(bpeTokens(col("text")), w => charSyms(w))
-    val seg = merges.foldLeft(base) { case (c, (a, b)) =>
-      transform(c, w => applyMerge(w, a, b))
-    }
-    docs.select(col("doc_id"), seg.as("syms"))
-      .select(col("doc_id"),
-        aggregate(col("syms"), lit(0L), (n, s) => n + size(s))
-          .as("n_symbols"),
-        array_join(transform(col("syms"), s => array_join(s, " ")), " ")
-          .as("text_bpe"))
-  }
-
   /** q115: learn 2 BPE merges from `documents` and segment the corpus
     * with them — the first ITERATIVE text kernel under the full hash
     * oracle (the q108 trick, text edition: integer pair counts +
     * deterministic tie-breaks make every round exact, and DuckDB
     * unrolls the same two rounds over bracketed-symbol strings whose
-    * greedy `replace` provably matches [[applyMerge]]'s fold). */
+    * greedy `replace` provably matches sequential rule application). */
   def q115BpeLearn(s: SparkSession, d: String): DataFrame =
-    bpeSegment(documents(s, d), bpeLearn(documents(s, d), 2))
+    bpeEncodeFrozen(documents(s, d), bpeLearn(documents(s, d), 2))
 
-  /** Segment with a FROZEN merge table through the rank-table kernel
-    * ([[graft.plans.BpeEncode]]): one corpus scan, zero shuffles, work
-    * per word independent of table size — the production encode path
-    * the fold-based [[bpeSegment]] documents itself unfit for. Output
-    * shape matches q115 (n_symbols + space-joined segmentation); the
-    * symbol stream is flattened across words, which joins to the
-    * identical string.
+  /** Segment every document with an ordered merge table through the
+    * rank-table kernel ([[graft.plans.BpeEncode]]): one corpus scan,
+    * zero shuffles, work per word independent of table size. Emits per
+    * doc the symbol count and the space-joined segmentation (the symbol
+    * stream is flattened across words, which joins to the per-word
+    * string). Throws on a table that is not sequential-collision-free.
     */
   def bpeEncodeFrozen(docs: DataFrame, rules: Seq[(String, String)]): DataFrame =
     docs
@@ -3743,42 +3720,6 @@ object TextOps {
       (s"${('A' + i % 26).toChar}${i / 26}", "Z")
     }
 
-  /** Fertility card over a FROZEN merge table through the rank-table
-    * kernel — the q132 semantics at production vocabulary size (the
-    * fold-based [[bpeFertility]] nests one transform per rule and cannot
-    * carry a 1k+-rule table): ONE corpus scan computes token/char counts
-    * beside the kernel's symbol stream, then the languages-sized
-    * map-side-combinable agg and null-guarded ratio arithmetic.
-    */
-  def bpeFertilityFrozen(docs: DataFrame, rules: Seq[(String, String)]): DataFrame = {
-    // every per-row expression codegen-native (r17 review: the first cut
-    // counted tokens/chars through filter()/aggregate() HOFs — each a
-    // CodegenFallback that evicts the WHOLE projection, kernel included,
-    // from the whole-stage span, the exact overhead q146's encode is
-    // plan-pinned against). With trimmed input, split(\s+) mints an
-    // empty token only for the empty string, so: tokens = size guarded
-    // by the empty case; chars = length with all whitespace deleted.
-    val trimmed = lower(trim(col("text")))
-    docs
-      .select(col("lang"),
-        when(length(trimmed) === 0, lit(0L))
-          .otherwise(size(split(trimmed, ws)).cast("long")).as("n_tokens"),
-        length(regexp_replace(trimmed, ws, "")).cast("long").as("n_chars"),
-        size(graft.plans.GraftFunctions.bpe_encode(tokens(col("text")), rules))
-          .cast("long").as("n_symbols"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
-        sum("n_chars").as("n_chars"), sum("n_symbols").as("n_symbols"))
-      .select(col("lang"), col("n_docs"), col("n_tokens"), col("n_chars"),
-        col("n_symbols"),
-        when(col("n_tokens") > 0,
-          round(col("n_symbols").cast("double") / col("n_tokens"), 4))
-          .as("fertility"),
-        when(col("n_chars") > 0,
-          round(col("n_symbols").cast("double") / col("n_chars"), 4))
-          .as("compression"))
-  }
-
   /** q146: the corpus segmented with the frozen [[BpeMerges]] vocabulary
     * (64 rules learned once from sf0.01 by the exact driver-side
     * trainer — the tokenizer-as-artifact discipline; vocab size is the
@@ -3786,8 +3727,9 @@ object TextOps {
     * The oracle replays the full encode: every rule applied in rank
     * order as a bracketed-string replace chain via a recursive CTE over
     * the distinct words, then rejoined positionally. Sequential replay
-    * equals the kernel's lowest-rank-first because the generator
-    * asserts [[graft.plans.BpeEncode.sequentialCollisionFree]].
+    * equals the kernel's lowest-rank-first because the table is
+    * sequential-collision-free (the generator asserts it, and
+    * `bpe_encode` rejects any table that is not).
     */
   def q146BpeEncode(s: SparkSession, d: String): DataFrame =
     bpeEncodeFrozen(documents(s, d), BpeMerges.Table)
@@ -3838,24 +3780,32 @@ object TextOps {
     * many times more sequence positions per word than the vocabulary's
     * favored language). Compression = 1.0 means no merge binds at all.
     *
-    * Scale: ONE corpus scan computes token, character, and segmented-
-    * symbol counts side by side (the segmentation fold and the counts
-    * share the same codegen'd projection — joining a separate
-    * segmentation pass back to the corpus would re-scan it), then a
-    * languages-sized map-side-combinable agg; the ratio arithmetic runs
-    * on the aggregate only, division guarded so an all-empty language
-    * reads null rather than an ANSI divide error.
+    * Scale: ONE corpus scan computes token and character counts beside
+    * the [[graft.plans.BpeEncode]] kernel's symbol stream (joining a
+    * separate segmentation pass back to the corpus would re-scan it),
+    * then a languages-sized map-side-combinable agg; the ratio
+    * arithmetic runs on the aggregate only, division guarded so a
+    * token-less language reads null rather than an ANSI divide error.
+    * Tokens are the non-empty `\s+`-split words; a null text counts as
+    * zero tokens, characters and symbols. Throws on a merge table that
+    * is not sequential-collision-free.
     */
   def bpeFertility(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val toks = bpeTokens(col("text"))
-    val seg = merges.foldLeft(transform(toks, w => charSyms(w))) {
-      case (c, (a, b)) => transform(c, w => applyMerge(w, a, b))
-    }
+    // every per-row expression codegen-native (r17 review: filter()/
+    // aggregate() HOFs are CodegenFallback — each evicts the WHOLE
+    // projection, kernel included, from the whole-stage span). Spark's
+    // trim strips only U+0020, so strip every edge \s run instead: then
+    // split mints an empty token only for the empty string (\z, not $,
+    // which also matches before a final U+2028 line terminator)
+    val text = regexp_replace(lower(coalesce(col("text"), lit(""))), "^\\s+|\\s+\\z", "")
+    val toks = split(text, ws)
     docs
       .select(col("lang"),
-        size(toks).cast("long").as("n_tokens"),
-        aggregate(toks, lit(0L), (n, w) => n + length(w)).as("n_chars"),
-        aggregate(seg, lit(0L), (n, s) => n + size(s)).as("n_symbols"))
+        when(length(text) === 0, lit(0L))
+          .otherwise(size(toks).cast("long")).as("n_tokens"),
+        length(regexp_replace(text, ws, "")).cast("long").as("n_chars"),
+        size(graft.plans.GraftFunctions.bpe_encode(toks, merges))
+          .cast("long").as("n_symbols"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
         sum("n_chars").as("n_chars"), sum("n_symbols").as("n_symbols"))
@@ -4305,7 +4255,7 @@ object TextOps {
     // DuckDB's left-to-right non-overlapping replace() implements the
     // same greedy fold as applyMerge. The bracket characters are the
     // encoding's reserved alphabet — valid for this corpus's alnum
-    // tokens; the Spark side has no such reservation (it folds arrays).
+    // tokens; the Spark side has no such reservation (it merges arrays).
     "q114_bpe_pairs" ->
       """WITH t AS (SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS ws
         |  FROM documents),

@@ -7,34 +7,27 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Production-size BPE segmentation: apply an ordered merge-rule table to
+/** graft's one BPE segmentation: apply an ordered merge-rule table to
   * every word of a token array in ONE per-row kernel pass, emitting the
-  * flattened symbol stream (word boundaries never merge, matching
-  * `TextOps.bpeSegment`'s per-word fold).
+  * flattened symbol stream (word boundaries never merge).
   *
-  * This is the rank-table replacement for the nested expression-fold
-  * encoder (`TextOps.bpeSegment`): the fold nests one `transform` per
-  * rule, so its expression tree — and codegen size — grows LINEARLY with
-  * the vocabulary (fine at q115's two rules, hopeless at a 1k+-merge
-  * production vocabulary; Spark gives up on codegen past
-  * `spark.sql.codegen.maxFields`-scale trees and the interpreted fold
-  * allocates one array per rule per word). Here the rules live in a
-  * shared hash map (pair → rank) shipped once as a codegen reference
-  * object, and each word runs the standard lowest-rank-first loop
-  * (Sennrich et al. 2016, apply_bpe): find the lowest-ranked adjacent
-  * pair present, fuse ALL its occurrences greedily left-to-right (the
-  * `applyMerge` non-overlap semantics: [a, a, a] under (a, a) → [aa, a]),
-  * repeat until no table pair remains. Work per word is
-  * O(len × merges-applied) regardless of table size.
+  * The rules live in a shared hash map (pair → rank) shipped once as a
+  * codegen reference object, so the expression tree and its generated
+  * code stay the same size at two rules or ten thousand. Each word runs
+  * the standard lowest-rank-first loop (Sennrich et al. 2016,
+  * apply_bpe): find the lowest-ranked adjacent pair present, fuse ALL
+  * its occurrences greedily left-to-right (non-overlapping: [a, a, a]
+  * under (a, a) → [aa, a], the learner's `applyMerge` semantics), repeat
+  * until no table pair remains. Work per word is O(len × merges-applied)
+  * regardless of table size.
   *
   * Lowest-rank-first equals applying the rules sequentially in learned
-  * order — the fold's semantics and the oracle's — provided no rule's
+  * order — the learner's semantics and the oracles' — provided no rule's
   * RESULT string collides with a lower-ranked rule's operand (else the
   * late merge would mint fresh work for an earlier rule that rank-first
-  * revisits and sequential does not). The table generator
-  * (`graft.tools.BpeVocabGen`) asserts that property and truncates at
-  * the first violation; [[BpeEncode.sequentialCollisionFree]] is the
-  * shared check.
+  * revisits and sequential does not). [[BpeEncode.firstCollision]] is
+  * the check; `GraftFunctions.bpe_encode`, the only constructor, rejects
+  * a violating table before any plan is built.
   */
 case class BpeEncode(tokens: Expression, as: Array[String], bs: Array[String])
     extends UnaryExpression {
@@ -73,21 +66,22 @@ object BpeEncode {
     * space and the key is collision-free without escaping. */
   private def pairKey(a: String, b: String): String = a + " " + b
 
-  /** True when applying the rules sequentially in learned order equals
-    * lowest-rank-first: no rule's result string is an operand of any
-    * earlier (lower-or-equal-ranked) rule — else that late merge would
-    * mint fresh occurrences of the earlier pair, which rank-first
-    * revisits and sequential does not. Shared by the kernel (documented
-    * invariant) and the vocabulary generator (asserted at generation
-    * time). */
-  def sequentialCollisionFree(rules: Seq[(String, String)]): Boolean = {
+  /** The first rank whose rule's result string is an operand of an
+    * earlier (lower-or-equal-ranked) rule, or -1 when there is none —
+    * such a late merge mints fresh occurrences of the earlier pair,
+    * which rank-first revisits and sequential application does not. */
+  def firstCollision(rules: Seq[(String, String)]): Int = {
     val seen = new java.util.HashSet[String]()
-    rules.forall { case (a, b) =>
+    rules.indexWhere { case (a, b) =>
       seen.add(a)
       seen.add(b)
-      !seen.contains(a + b)
+      seen.contains(a + b)
     }
   }
+
+  /** True when lowest-rank-first equals sequential application. */
+  def sequentialCollisionFree(rules: Seq[(String, String)]): Boolean =
+    firstCollision(rules) < 0
 
   final class Kernel(as: Array[String], bs: Array[String]) extends Serializable {
     private val ranks = {
@@ -118,7 +112,7 @@ object BpeEncode {
 
     /** Encode one word and append its symbols (as UTF8String) to `out`. */
     private def encodeWord(w: String, out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
-      // split to code points (the charSyms '.'-regex semantics)
+      // split to code points (the learner's charSyms semantics)
       val syms = new scala.collection.mutable.ArrayBuffer[String](w.length)
       var i = 0
       while (i < w.length) {

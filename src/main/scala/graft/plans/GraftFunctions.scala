@@ -54,9 +54,16 @@ object GraftFunctions {
 
   /** Rank-table BPE segmentation of a token column: the flattened symbol
     * stream after applying the ordered merge rules per word. See
-    * [[BpeEncode]]. */
-  def bpe_encode(tokens: Column, rules: Seq[(String, String)]): Column =
+    * [[BpeEncode]]. Throws on a table where lowest-rank-first would
+    * diverge from sequential application — checked once here, not in
+    * the expression, which Catalyst copies many times. */
+  def bpe_encode(tokens: Column, rules: Seq[(String, String)]): Column = {
+    val bad = BpeEncode.firstCollision(rules)
+    require(bad < 0, s"bpe_encode: merge table is not sequential-collision-free " +
+      s"at rank $bad: the product of ${rules(bad)} is an operand of a rule at " +
+      s"or below that rank; truncate the table before rank $bad")
     toCol(BpeEncode(toExpr(tokens), rules.map(_._1).toArray, rules.map(_._2).toArray))
+  }
 
   /** Per-band sign-LSH signature array (array<long>) of an embedding
     * column against a fixed plane matrix. See [[PlaneSignBands]]. */

@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 import graft.operators.{BpeMerges, TextOps}
 import graft.plans.{BpeEncode, GraftFunctions}
 
-/** The rank-table BPE encode kernel (q146) against three independent
-  * references: the fold encoder it replaces (small tables), a pure
-  * in-memory sequential encoder (production-size tables the fold can't
-  * build), and the distributed learner (the local trainer must reproduce
-  * it merge for merge).
+/** The rank-table BPE encode kernel — graft's one segmentation, behind
+  * q115, q132 and q146 — against independent references: a pure
+  * in-memory sequential encoder (real-corpus and production-size
+  * tables) and the distributed learner (the local trainer must reproduce
+  * it merge for merge); plus the collision guard that keeps rank-first
+  * equal to sequential application.
   */
 class BpeEncodeSpec extends SparkSpec {
 
@@ -33,14 +34,20 @@ class BpeEncodeSpec extends SparkSpec {
       .collect()(0).getSeq[String](0)
   }
 
-  test("kernel matches the fold encoder (bpeSegment) on the real corpus") {
+  /** The corpus's non-empty lowercased tokens, driver-side. */
+  private def words(text: String): Seq[String] =
+    text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+
+  test("kernel matches the sequential reference (refEncode) on the real corpus") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val rules = BpeMerges.Table.take(8)
     val viaKernel = TextOps.bpeEncodeFrozen(docs, rules)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val viaFold = TextOps.bpeSegment(docs, rules)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(viaKernel == viaFold)
+    val viaRef = docs.select("doc_id", "text").collect().map { r =>
+      val syms = words(r.getString(1)).flatMap(w => refEncode(w, rules))
+      (r.getLong(0), syms.length.toLong, syms.mkString(" "))
+    }.toSet
+    assert(viaKernel == viaRef)
   }
 
   test("local learner reproduces the distributed learner merge for merge") {
@@ -83,6 +90,10 @@ class BpeEncodeSpec extends SparkSpec {
       // a new pair born of (a,a)'s own overlapping occurrences that
       // outranks the disjoint runner-up (c,d) — the batch must stop
       ("self-pair-runs", Seq.fill(10)("aaaa") ++ Seq.fill(5)("cd"), 3),
+      // a line separator inside a token: `\s+` does not split on U+2028,
+      // so it is a symbol of its own — (a, U+2028) and (U+2028, b) are
+      // the pairs, never (a, b)
+      ("line-separator", Seq.fill(4)("a\u2028b") ++ Seq.fill(3)("cd"), 2),
       // deep multi-round learning over a richer vocabulary
       ("deep", (for (a <- 'a' to 'f'; b <- 'a' to 'f')
         yield s"$a$b$a$b").zipWithIndex.flatMap { case (w, i) =>
@@ -192,22 +203,58 @@ class BpeEncodeSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("frozen-table fertility card: kernel form matches the fold form, 64-rule card sits between") {
+  test("fertility card: kernel symbols match refEncode, 64-rule card sits between") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val twoRules = TextOps.bpeLearn(docs, 2)
     def card(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("lang") ->
         (r.getAs[Long]("n_symbols"), r.getAs[Double]("fertility"))).toMap
-    assert(card(TextOps.bpeFertilityFrozen(docs, twoRules)) ==
-      card(TextOps.bpeFertility(docs, twoRules)),
-      "kernel fertility must equal the fold fertility on the same rules")
+    val viaRef = docs.select("lang", "text").collect().groupBy(_.getString(0))
+      .map { case (lang, rows) =>
+        val toks = rows.toSeq.flatMap(r => words(r.getString(1)))
+        val nSym = toks.map(w => refEncode(w, twoRules).length.toLong).sum
+        lang -> (nSym, BigDecimal(nSym.toDouble / toks.length)
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+    val two = card(TextOps.bpeFertility(docs, twoRules))
+    assert(two == viaRef,
+      "kernel fertility must equal the sequential reference on the same rules")
     // more merges can only fuse further: 64-rule symbols <= 2-rule
     // symbols, and fertility >= 1 (a symbol per token at saturation)
-    val two = card(TextOps.bpeFertilityFrozen(docs, twoRules))
-    val full = card(TextOps.bpeFertilityFrozen(docs, graft.operators.BpeMerges.Table))
+    val full = card(TextOps.bpeFertility(docs, graft.operators.BpeMerges.Table))
     for ((lang, (nTwo, _)) <- two; (nFull, f) = full(lang)) {
       assert(nFull <= nTwo, s"$lang: 64-rule encode must not add symbols")
       assert(f >= 1.0, s"$lang: fertility below one symbol per token: $f")
+    }
+  }
+
+  test("collision guard: a table rank-first would misapply throws, naming the rank") {
+    import spark.implicits._
+    // on "abc", rank-first fuses (a, b) and then revisits (ab, c) → [abc];
+    // sequential application met (ab, c) before any ab existed → [ab, c]
+    val bad = Seq(("ab", "c"), ("a", "b"))
+    assert(refEncode("abc", bad) == Seq("ab", "c"))
+    val docs = Seq((1L, "abc", "x")).toDF("doc_id", "text", "lang")
+    for ((name, call) <- Seq[(String, () => Any)](
+        "bpeEncodeFrozen" -> (() => TextOps.bpeEncodeFrozen(docs, bad)),
+        "bpeFertility" -> (() => TextOps.bpeFertility(docs, bad)))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("at rank 1:"), s"$name: ${e.getMessage}")
+    }
+    // the shipped tables pass (the chain, 1500-merge and saturated
+    // tables are asserted where they are built)
+    assert(BpeEncode.sequentialCollisionFree(BpeMerges.Table))
+    assert(BpeEncode.sequentialCollisionFree(TextOps.paddedMerges))
+  }
+
+  test("q115 and q132 run the kernel inside a codegen span, with no lambda fold") {
+    for (q <- Seq("q115_bpe_learn", "q132_bpe_fertility")) {
+      val df = TextOps.queries(q)(spark, sfDir)
+      df.collect() // runs df's own plan, so AQE shows its final stages
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("bpeencode") && l.contains("*(")),
+        s"$q: kernel projection must sit inside a codegen span:\n$plan")
+      assert(!plan.contains("lambdafunction"), s"$q: a lambda fold is back:\n$plan")
     }
   }
 

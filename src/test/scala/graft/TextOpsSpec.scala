@@ -1120,14 +1120,19 @@ class TextOpsSpec extends SparkSpec {
     // (aa,a) x2 beats (a,b) x1 and (aa,b) x1
     val merges = TextOps.bpeLearn(docs, 2)
     assert(merges == Seq(("a", "a"), ("aa", "a")), s"got $merges")
-    val seg = TextOps.bpeSegment(docs, merges).collect()
+    val seg = TextOps.bpeEncodeFrozen(docs, merges).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     // aaab -> [aaa, b]; aab -> [aa, b]; aaa -> [aaa]
     assert(seg(1L) == ((4L, "aaa b aa b")), s"got ${seg(1L)}")
     assert(seg(2L) == ((1L, "aaa")), s"got ${seg(2L)}")
+    // q115's row for a null-text doc: no count, no segmentation
+    val nullRow = TextOps.bpeEncodeFrozen(
+      Seq[(Long, Option[String])]((3L, None)).toDF("doc_id", "text"), merges)
+      .collect().map(_.toSeq)
+    assert(nullRow.toSeq == Seq(Seq(3L, null, null)), s"got ${nullRow.toSeq}")
   }
 
-  test("bpeLearn/bpeSegment: 3 merges on the sf0.001 corpus match the independent model") {
+  test("bpeLearn/bpeEncodeFrozen: 3 merges on sf0.001 match the independent model") {
     val docs = Tables.documents(spark, sfDir)
     val merges = TextOps.bpeLearn(docs, 3)
     // the same corpus through the in-memory reference
@@ -1137,7 +1142,7 @@ class TextOpsSpec extends SparkSpec {
     val (expMerges, _) = NaiveBpe.learn(words, 3)
     assert(merges == expMerges, s"spark $merges vs model $expMerges")
     // segmentation agrees per doc
-    val got = TextOps.bpeSegment(docs, merges).collect()
+    val got = TextOps.bpeEncodeFrozen(docs, merges).collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap
     val exp = docs.select(col("doc_id"), col("text")).collect().map { r =>
       val ws = r.getString(1).trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
@@ -1167,6 +1172,20 @@ class TextOpsSpec extends SparkSpec {
       "merge-untouched language stays at character level")
     assert(got("Z").isNullAt(5) && got("Z").isNullAt(6),
       "token-less language must read null, not divide by zero")
+    // planted whitespace: Spark's trim strips only U+0020, so an edge tab
+    // or newline must not count as an empty token; null text has none
+    val planted = Seq[(Long, Option[String], String)](
+      (10L, Some("\tab"), "T"),      // 1 token, 2 chars, 1 symbol
+      (11L, Some("cd\n"), "T"),      // 1 token, 2 chars, 2 symbols
+      (12L, Some("ab\t\tcd"), "T"),  // 2 tokens, 4 chars, 3 symbols
+      (13L, Some(" \t\n "), "W"),    // whitespace-only: no tokens
+      (14L, None, "N"),              // null text: no tokens
+    ).toDF("doc_id", "text", "lang")
+    val card = TextOps.bpeFertility(planted, Seq(("a", "b"))).collect()
+      .map(r => r.getString(0) -> r.toSeq.tail).toMap
+    assert(card("T") == Seq[Any](3L, 4L, 8L, 6L, 1.5, 0.75), s"got ${card("T")}")
+    assert(card("W") == Seq[Any](1L, 0L, 0L, 0L, null, null), s"got ${card("W")}")
+    assert(card("N") == Seq[Any](1L, 0L, 0L, 0L, null, null), s"got ${card("N")}")
   }
 
   test("q132: one corpus scan — the fertility card never joins a second segmentation pass") {

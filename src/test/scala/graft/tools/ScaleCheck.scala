@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Generic 10× scale probe: time named SparkEntry queries at sf0.1 and
   * the scratch sf1.0 derivative (min of 3 passes each — the BASELINE.md
-  * probe-table protocol). Usage: Test/runMain graft.tools.ScaleCheck q132_bpe_fertility ...
+  * probe-table protocol). Each pass materializes the full output through
+  * the `noop` sink: `.count()` lets Catalyst prune every column a count
+  * does not need (q146's plan becomes a bare scan), so count-mode
+  * figures are never compared with these. Usage:
+  * Test/runMain graft.tools.ScaleCheck q132_bpe_fertility ...
   */
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
@@ -26,14 +30,13 @@ object ScaleCheck {
         sys.error(s"unknown query $name"))
       val walls = (1 to 3).map { _ =>
         val t0 = System.nanoTime
-        val n = fn(spark, dir).count()
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        ((System.nanoTime - t0) / 1e9, n)
+        (System.nanoTime - t0) / 1e9
       }
-      println(f"SCALE $name $dir wall=${walls.map(_._1).min}%.2f " +
-        f"rows=${walls.head._2}")
+      println(f"SCALE $name $dir wall=${walls.min}%.2f (full output)")
     }
     spark.stop()
   }
