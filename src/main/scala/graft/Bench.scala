@@ -74,22 +74,62 @@ object Bench {
     else if (v < 10) stripz(f"$v%.1f")
     else stripz(f"$v%.0f")
 
+  // Bench-only PRODUCTION variant of q35: the oracled q35 times the
+  // exact uncapped string-shingle form (the oracle needs exact strings);
+  // production runs DF-capped + hashed shingles (TUNING.md). Timed here
+  // beside the exact form so the baseline carries both figures. The name
+  // deliberately has no underscore so the summary's qNN shortener keeps
+  // it distinct from q35 itself.
+  // r14: the tolerance-oracled q44/q63/q57 are gate INSTRUMENTS (they
+  // run the exact reference beside the sketch/index to state the bound);
+  // production deploys the sketch-only forms, so those are timed here
+  // beside them — q44prod/q63prod/q57prod carry the pre-r14 baselines
+  // (identical workloads), while the instrument forms get fresh r14
+  // baselines of their own.
+  private[graft] val benchOnly: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
+    "q35prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.TextOps.q35Prod(s, dir)),
+    "q44prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.Marts.q44Prod(s, dir)),
+    "q63prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.Marts.q63Prod(s, dir)),
+    "q57prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.VectorOps.q57Prod(s, dir)),
+    // r17: q51 graduated to the portable md5-family hash oracle; the
+    // fused xxhash64 one-pass clustering stays timed here as prod.
+    "q51prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.VectorOps.q51Prod(s, dir)),
+    // r17: q146's table-size control — same encode, rank table padded
+    // to 1,500 entries with rules that can never fire (uppercase
+    // operands vs a lowercased stream), output spec-pinned identical;
+    // the row pairs with q146 to EVIDENCE cost independence of
+    // vocabulary size on the live board.
+    "q146big" -> ((s: SparkSession, dir: String) =>
+      graft.operators.TextOps.q146Big(s, dir)),
+    "q131prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.VectorOps.ivfpqTopk(
+        graft.sources.Tables.embeddings(s, dir), instrument = false)),
+    // r18: q149's serving path — the shortlist pass runs on packed
+    // 8-byte sign signatures (XOR + POPCNT) instead of the per-dim
+    // oracle form; output spec-pinned identical.
+    "q149prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.VectorOps.q149BinaryTopk(s, dir, packed = true)),
+    // r18: q148's deployable serving read — the truncated-space top-5
+    // without the full-dim recall instrument (the q131prod convention).
+    "q148prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.VectorOps.q148MrlTopk(s, dir, instrument = false)),
+    // r18: q152's serving read — retrieval through the pruned impact
+    // index without the exact unpruned-scoring instrument.
+    "q152prod" -> ((s: SparkSession, dir: String) =>
+      graft.operators.TextOps.impactSearch(
+        graft.sources.Tables.documents(s, dir), instrument = false)))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.normalizeEpochNanos renders nanos-long/NTZ encodings into
-      // TimestampType assuming a UTC session — every entrypoint that reads
-      // `events.ts` must pin it or instants shift on a non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // Warm the JVM/codegen/parquet-footer paths so pass 1's first query
     // doesn't absorb session startup cost.
     SparkEntry.queries.get("q01_pricing_summary")
@@ -124,55 +164,6 @@ object Bench {
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case _: Throwable => -1.0 }
     }
-    // Bench-only PRODUCTION variant of q35: the oracled q35 times the
-    // exact uncapped string-shingle form (the oracle needs exact strings);
-    // production runs DF-capped + hashed shingles (TUNING.md). Timed here
-    // beside the exact form so the baseline carries both figures. The name
-    // deliberately has no underscore so the summary's qNN shortener keeps
-    // it distinct from q35 itself.
-    // r14: the tolerance-oracled q44/q63/q57 are gate INSTRUMENTS (they
-    // run the exact reference beside the sketch/index to state the bound);
-    // production deploys the sketch-only forms, so those are timed here
-    // beside them — q44prod/q63prod/q57prod carry the pre-r14 baselines
-    // (identical workloads), while the instrument forms get fresh r14
-    // baselines of their own.
-    val benchOnly: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
-      "q35prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.TextOps.q35Prod(s, dir)),
-      "q44prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.Marts.q44Prod(s, dir)),
-      "q63prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.Marts.q63Prod(s, dir)),
-      "q57prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.VectorOps.q57Prod(s, dir)),
-      // r17: q51 graduated to the portable md5-family hash oracle; the
-      // fused xxhash64 one-pass clustering stays timed here as prod.
-      "q51prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.VectorOps.q51Prod(s, dir)),
-      // r17: q146's table-size control — same encode, rank table padded
-      // to 1,500 entries with rules that can never fire (uppercase
-      // operands vs a lowercased stream), output spec-pinned identical;
-      // the row pairs with q146 to EVIDENCE cost independence of
-      // vocabulary size on the live board.
-      "q146big" -> ((s: SparkSession, dir: String) =>
-        graft.operators.TextOps.q146Big(s, dir)),
-      "q131prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.VectorOps.ivfpqTopk(
-          graft.sources.Tables.embeddings(s, dir), instrument = false)),
-      // r18: q149's serving path — the shortlist pass runs on packed
-      // 8-byte sign signatures (XOR + POPCNT) instead of the per-dim
-      // oracle form; output spec-pinned identical.
-      "q149prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.VectorOps.q149BinaryTopk(s, dir, packed = true)),
-      // r18: q148's deployable serving read — the truncated-space top-5
-      // without the full-dim recall instrument (the q131prod convention).
-      "q148prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.VectorOps.q148MrlTopk(s, dir, instrument = false)),
-      // r18: q152's serving read — retrieval through the pruned impact
-      // index without the exact unpruned-scoring instrument.
-      "q152prod" -> ((s: SparkSession, dir: String) =>
-        graft.operators.TextOps.impactSearch(
-          graft.sources.Tables.documents(s, dir), instrument = false)))
     // A selector matches a query only exactly, or as a prefix that ends at
     // an underscore boundary ("q35" selects q35_ngram_jaccard but NOT the
     // bench-only "q35prod") — a bare startsWith would silently widen what a

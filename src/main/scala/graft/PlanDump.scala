@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for the headline queries to docs/PLANS.md —
   * the physical-plan evidence for the scale posture (pushdown, broadcasts,
@@ -10,14 +9,8 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // docs/PLANS.md is generated at 8 shuffle partitions
+    val spark = GraftSession.local("graft-plan-dump", cpus = 8)
     val headline = Seq(
       "q01_pricing_summary", "q02_filter_project", "q05_regional_revenue",
       "q10_topk_orders", "q23_cdc_changes", "q35_ngram_jaccard",

@@ -115,8 +115,8 @@ object RangeJoin {
     * (any order's) shipped within [o_orderdate, o_orderdate + 7 days) —
     * a genuine cross-entity range join, binned at interval width.
     *
-    * Aggregate pushdown below the join (r14, after the Q62Probe
-    * decomposition): the requested aggregates are distributive
+    * Aggregate pushdown below the join (r14, after the q62
+    * decomposition recorded in BASELINE.md's r14 q62 adjudication): the requested aggregates are distributive
     * (count/sum), and the point value `p` is a DAY — ~38 distinct values
     * in the window regardless of row count — so the points collapse to
     * one pre-aggregated row per day BEFORE the range join. Joined-row
@@ -125,7 +125,8 @@ object RangeJoin {
     * and the gap widens linearly with SF: at 100 TB the per-day
     * multiplicity is millions). Exact, not approximate: count = Σ
     * per-day counts, sum = Σ per-day sums. Probe: 0.370 s vs 0.483 s
-    * for the join-then-aggregate form on the same rig (Q62Probe.scala).
+    * for the join-then-aggregate form on the same rig (BASELINE.md, r14
+    * q62 adjudication).
     */
   def q62RangeJoin(s: SparkSession, d: String): DataFrame = {
     val intervals = marchOrderWeeks(s, d, "o_orderkey", "lo", "hi")

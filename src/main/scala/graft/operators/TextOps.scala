@@ -212,7 +212,8 @@ object TextOps {
     val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     // r22 examined-and-rejected: a df>1 semi-join prefilter ahead of the
     // self-join (the widthCappedPairs w>1 idea) measured 9-10% SLOWER
-    // interleaved (R22Ab q35: min 0.838 vs 0.912, med 1.084 vs 1.195)
+    // in the r22 interleaved A/B (OPTIMIZATION_r22.md; q35: min 0.838 vs
+    // 0.912, med 1.084 vs 1.195)
     // and buys nothing at scale either — unlike q36's bucket stats, the
     // df aggregate doesn't already exist on this path, and its exchange
     // carries ~the index's own volume (mostly-unique shingles don't
@@ -974,8 +975,8 @@ object TextOps {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // r22 examined-and-rejected: fusing a driver-side (nd, avgl) collect
     // into a lazy tf checkpoint (stats as literals) measured 5-8% SLOWER
-    // interleaved (R22AbLex: min 0.822 vs 0.862, med 0.937 vs 1.012 on
-    // the q145 shape) — the dl aggregation serializes into the
+    // in the r22 interleaved A/B (OPTIMIZATION_r22.md: min 0.822 vs 0.862,
+    // med 0.937 vs 1.012 on the q145 shape) — the dl aggregation serializes into the
     // first-touch job, while the in-plan stats subtree rides the dl
     // exchange the scoring join already computes (exchange reuse) and
     // overlaps on idle cores. Same conclusion as the r21 LM-family
@@ -1743,10 +1744,11 @@ object TextOps {
           "spark.sparkContext.setCheckpointDir(<HDFS/object-store path>) first")
     // r22 examined-and-rejected (r21 verdict item 6): lazy-checkpointing
     // the INPUT so the range sampler's pass doubles as its materialization
-    // measured wall-neutral locally (R22Probe q85 0.447 vs 0.466, q119
-    // 0.998 vs 0.965, same job counts) and is WRONG at scale: the sampler
-    // and the sort share every shuffle stage of the input's lineage (same
-    // RDD → same ShuffleMapStages, reused across the two jobs), so only
+    // measured wall-neutral locally (r22 isolated probe, OPTIMIZATION_r22.md:
+    // q85 0.447 vs 0.466, q119 0.998 vs 0.965, same job counts) and is
+    // WRONG at scale: the sampler and the sort share every shuffle stage
+    // of the input's lineage (same RDD → same ShuffleMapStages, reused
+    // across the two jobs), so only
     // the narrow post-exchange tail was ever computed twice — while the
     // checkpoint persists the entire corpus-sized input to block storage
     // to save it (§5 memory pressure for a tail of cheap maps). For

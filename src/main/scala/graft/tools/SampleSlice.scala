@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Materialize a deterministic hash-sampled slice of a testdata dir —
@@ -45,13 +44,7 @@ object SampleSlice {
         val Array(n, c) = t.split(":"); (n, c)
       }
       else Seq("documents" -> "doc_id", "embeddings" -> "vec_id")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("sample-slice")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("sample-slice")
     Files.createDirectories(Paths.get(dstDir))
     // a slice is a single consistent GENERATION: remove every
     // pre-existing entry first — re-running into a dstDir with a

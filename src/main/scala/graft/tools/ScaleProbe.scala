@@ -24,18 +24,23 @@ import org.apache.spark.sql.functions._
   *     also scales linearly. Query ids (vec_id < 10) exist only in copy
   *     0, keeping the probe's query set identical to the bench's.
   *
-  * For each probe query: three timed runs at sf1.0 (min reported), one
-  * reference run at sf0.1, and a physical-plan shape fingerprint at both
-  * scales — a shape mismatch (e.g. a broadcast silently becoming a
-  * shuffle join at 10×) is exactly the regression this probe exists to
-  * catch. Output: one JSON line per query + a summary line; paste into
-  * BASELINE.md's sf1.0 section.
+  * The matrix is [[probeNames]]: registered and bench-only queries plus
+  * the scale-only rows of [[probeQueries]]. `graft.tools.Probe time`
+  * times them at both scales (min of 3, full output) with a physical-plan
+  * shape fingerprint per row — a shape mismatch (e.g. a broadcast
+  * silently becoming a shuffle join at 10×) is exactly the regression
+  * this probe exists to catch. Paste the rows into BASELINE.md's sf1.0
+  * section.
   */
 object ScaleProbe {
   private val Copies = 10
   private val IdSpan = 10000000L
 
-  private def probeQueries: Seq[(String, (SparkSession, String) => DataFrame)] =
+  /** Every probe row, in matrix order. */
+  def probeNames: Seq[String] = registeredProbes ++ probeQueries.map(_._1)
+
+  /** Probe rows timed by their SparkEntry / Bench.benchOnly entries. */
+  private val registeredProbes: Seq[String] =
     Seq("q23_cdc_changes", "q74_cdc_apply", "q35_ngram_jaccard",
       "q36_minhash_lsh", "q58_neardup_blocked",
       "q65_decontaminate", "q85_corpus_shuffle",
@@ -165,28 +170,27 @@ object ScaleProbe {
       // build (term-keyed bounded heap over the shared BM25 frame), and
       // the instrumented impact search (the unpruned exact half is what
       // grows; the pruned read is vocab-bound)
-      "q147_rrf_fusion", "q151_impact_index", "q152_impact_search")
-      .map(n => n -> graft.SparkEntry.queries(n)) :+
-      // the q57 probe row keeps its historical label and workload: pure
-      // IVF search (r14 made the REGISTERED q57 a recall-gate instrument
-      // that also runs the brute-force reference; the scale row would
-      // silently change meaning if it followed)
-      ("q57_ivf_topk" ->
-        ((s: SparkSession, dir: String) =>
-          graft.operators.VectorOps.q57Prod(s, dir))) :+
+      "q147_rrf_fusion", "q151_impact_index", "q152_impact_search",
+      // pure IVF search, the pre-r14 q57 workload (BASELINE.md's
+      // "q57_ivf_topk" probe rows): r14 made the REGISTERED q57 a
+      // recall-gate instrument that also runs the brute-force reference
+      "q57prod",
+      // the PRODUCTION q35 configuration (r13): DF-capped + hashed
+      // shingles. At sf0.1 the cap's counting pass is pure overhead
+      // (bench shows ~1.5x the exact form); this row measures whether
+      // the hashed-key shuffle diet closes the gap as data grows
+      // (BASELINE.md's "q35_prod" probe rows)
+      "q35prod")
+
+  /** The scale-only rows, resolvable by name from `graft.tools.Probe`. */
+  private[graft] def probeQueries: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq(
       // the production-θ corpus-scaled near-dup: q58's gate tuning has a
       // quadratic RESULT at θ=0.4 (pair density is scale-constant), so
       // the linear-scaling claim belongs to the auto-blocked form
       ("q58_auto_theta08" ->
         ((s: SparkSession, dir: String) =>
-          graft.operators.VectorOps.q58NeardupBlockedAuto(s, dir))) :+
-      // the PRODUCTION q35 configuration (r13): DF-capped + hashed
-      // shingles. At sf0.1 the cap's counting pass is pure overhead
-      // (bench shows ~1.5x the exact form); this row measures whether
-      // the hashed-key shuffle diet closes the gap as data grows
-      ("q35_prod" ->
-        ((s: SparkSession, dir: String) =>
-          graft.operators.TextOps.q35Prod(s, dir))) :+
+          graft.operators.VectorOps.q58NeardupBlockedAuto(s, dir))),
       // the PRODUCTION DSIR configuration: grams bucketed to 10⁴ hashed
       // features. The exact-gram instrument's probe ratio is driven by
       // copy-tag vocab inflation (the q91 story); this row measures the
@@ -196,7 +200,7 @@ object ScaleProbe {
         ((s: SparkSession, dir: String) =>
           graft.operators.TextOps.dsirHashedWeights(
             graft.sources.Tables.documents(s, dir),
-            col("lang") === "en"))) :+
+            col("lang") === "en"))),
       // the sharded-index search path (r8 verdict item 6: no timed query
       // exercised it): K=4 sub-indexes over the same corpus q57's single
       // index covers, so the probe row reads directly against q57's —
@@ -205,7 +209,7 @@ object ScaleProbe {
       // sample of a fresh run pays it and prints a SHARDBUILD line; the
       // min-of-3 therefore reports steady-state search cost)
       ("q57_sharded_k4" ->
-        ((s: SparkSession, dir: String) => shardedSearch(s, dir, 4))) :+
+        ((s: SparkSession, dir: String) => shardedSearch(s, dir, 4))),
       // the stats-pruned copy-on-write merge (r9): orders land as
       // ~fixed-SIZE key-clustered commits (more commits at larger scale,
       // the shape a real ingest/compaction produces), and each sample
@@ -214,14 +218,14 @@ object ScaleProbe {
       // (~constant rows), not the table - flat across 10x data, vs the
       // full-snapshot rewrite growing 10x
       ("merge_pruned" ->
-        ((s: SparkSession, dir: String) => mergeProbe(s, dir))) :+
+        ((s: SparkSession, dir: String) => mergeProbe(s, dir))),
       // the SQL DML path (r12 verdict item 6): the same pruned merge
       // driven as `MERGE INTO` through the parser intercept
       // (parser → GraftDml → mergeCommit), so the statement path has its
       // own scale row — a parser/alignment regression that re-read the
       // whole table would show here and not in merge_pruned
       ("merge_sql" ->
-        ((s: SparkSession, dir: String) => sqlMergeProbe(s, dir))) :+
+        ((s: SparkSession, dir: String) => sqlMergeProbe(s, dir))),
       // q84-shaped copy-on-write DELETE: two key-split commits, a
       // conjunctive predicate the high commit PROVES no-match on while
       // the low commit (no stats on o_totalprice) must rewrite minus its
@@ -230,7 +234,7 @@ object ScaleProbe {
       // - different work); the pool build runs inside sample 1's window
       // (COWBUILD line reports its cost), so min-of-3 is pure statement
       ("delete_cow" ->
-        ((s: SparkSession, dir: String) => cowDeleteProbe(s, dir))) :+
+        ((s: SparkSession, dir: String) => cowDeleteProbe(s, dir))),
       // r15 q91 adjudication (r14 verdict item 4): the 5.1× row was
       // blamed on the probe corpus's per-copy token tags without
       // measurement. Two controls, same query: `fixedtag` re-derives the
@@ -242,15 +246,15 @@ object ScaleProbe {
       // sf0.1 reference dir both variants ARE documents.parquet.
       ("q91_fixedtag" ->
         ((s: SparkSession, dir: String) => graft.operators.TextOps.unigramNll(
-          variantDocs(s, dir, "vocabstable")))) :+
+          variantDocs(s, dir, "vocabstable")))),
       ("q91_plain10" ->
         ((s: SparkSession, dir: String) => graft.operators.TextOps.unigramNll(
-          variantDocs(s, dir, "plain10")))) :+
+          variantDocs(s, dir, "plain10")))),
       // r15: CCNet buckets on the untagged 10× fan-out — q119's organic
       // vocab-growth control (same adjudication as q91_plain10)
       ("q119_plain10" ->
         ((s: SparkSession, dir: String) => graft.operators.TextOps.ccnetBuckets(
-          variantDocs(s, dir, "plain10")))) :+
+          variantDocs(s, dir, "plain10")))),
       // r15: bigram LM on the untagged 10× fan-out — q128 is per-doc
       // independent (no cross-doc pair structure), so like q91/q119 its
       // organic scale read is the plain10 control: the tagged corpus
@@ -258,7 +262,7 @@ object ScaleProbe {
       // while organic 10× keeps the bigram table near-fixed
       ("q128_plain10" ->
         ((s: SparkSession, dir: String) => graft.operators.TextOps.bigramNll(
-          variantDocs(s, dir, "plain10")))) :+
+          variantDocs(s, dir, "plain10")))),
       // r15 cap-binding adversarial probe (r14 verdict item 5): every
       // DF/width cap was spec'd only where it never binds. The boiler
       // corpus appends one fixed 30-word template paragraph to 10% of
@@ -271,11 +275,11 @@ object ScaleProbe {
       // jaccard ≈ 0.2 ≪ 0.8, so both forms must report the SAME pairs.
       ("q35_exact_boiler" ->
         ((s: SparkSession, dir: String) => graft.operators.TextOps.ngramJaccard(
-          boilerDocs(s, dir), maxShingleDF = Int.MaxValue))) :+
+          boilerDocs(s, dir), maxShingleDF = Int.MaxValue))),
       ("q35_prod_boiler" ->
         ((s: SparkSession, dir: String) => graft.operators.TextOps.ngramJaccard(
           boilerDocs(s, dir), maxShingleDF = graft.operators.TextOps.ProdMaxShingleDF,
-          hashShingles = true))) :+
+          hashShingles = true))),
       // r15: the span SCRUB on the same adversarial corpus — unlike the
       // pairwise q35 family, q101's dup join is per-OCCURRENCE (a
       // corpus-wide template contributes covered positions linear in its
@@ -283,7 +287,7 @@ object ScaleProbe {
       // its curve
       ("q101_boiler" ->
         ((s: SparkSession, dir: String) =>
-          graft.operators.TextOps.spanScrub(boilerDocs(s, dir)))) :+
+          graft.operators.TextOps.spanScrub(boilerDocs(s, dir)))),
       // r15 adversarial CC topology (r14 verdict item 6): the O(log n)
       // claim's worst enemies are diameter and hubs; sf1.0's organic
       // clusters are tiny. Two axes, probed separately:
@@ -296,16 +300,16 @@ object ScaleProbe {
       // Ignores `dir` (the graph is synthetic); rounds + per-round edge
       // volume print on a CCROUNDS line per sample.
       ("cc_chain_hub_2e6" ->
-        ((s: SparkSession, dir: String) => ccTopology(s, 1000000L))) :+
+        ((s: SparkSession, dir: String) => ccTopology(s, 1000000L))),
       ("cc_chain_hub_1e7" ->
-        ((s: SparkSession, dir: String) => ccTopology(s, 5000000L))) :+
+        ((s: SparkSession, dir: String) => ccTopology(s, 5000000L))),
       // r15: ONE hub-free 5M-node chain — genuinely diameter 5e6 (no
       // hub shortcuts), 50× the hub probes' component size: the
       // diameter/rounds axis itself. Star-contraction rounds should
       // grow ~log(component), where one-hop propagation would need 5e6.
       ("cc_one_chain_5e6" ->
         ((s: SparkSession, dir: String) =>
-          ccTopology(s, 5000000L, chainLen = 5000000L, withHubs = false)))
+          ccTopology(s, 5000000L, chainLen = 5000000L, withHubs = false))))
 
   /** Read the q91-adjudication variant table when probing the derived
     * dir; at the sf0.1 reference dir the variant IS documents.parquet. */
@@ -370,7 +374,7 @@ object ScaleProbe {
     println(s"""CCROUNDS {"n":$n,"rounds":${ConnectedComponents.lastRounds},""" +
       s""""round_edges":[${ConnectedComponents.lastRoundEdges.mkString(",")}]}""")
     // no releaseTree here: the returned agg still READS labels'
-    // checkpoints; runOne's between-sample clear() unpersists them
+    // checkpoints; Probe releases the whole tree after each pass
     labels.agg(count(lit(1)).as("n_nodes"),
         countDistinct("component").as("n_components"))
       .filter(col("n_components") === lit(expected) && col("n_nodes") === lit(n))
@@ -476,7 +480,7 @@ object ScaleProbe {
   // would skip the build for a second dir probed in the same JVM)
   private val cowPools = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicInteger]()
-  private val CowPoolSize = 6 // runOne consumes 4 (3 timed + 1 shape)
+  private val CowPoolSize = 6 // Probe time consumes 3 per dir
 
   /** q84-shaped copy-on-write DELETE over a FRESH table per sample: two
     * key-split commits (stats on o_orderkey only), then `DELETE WHERE
@@ -571,59 +575,18 @@ object ScaleProbe {
     VectorOps.ivfShardedSearch(queries, corpus, idx)
   }
 
-  /** No args: build the sf1.0 tables and print the probe matrix to run.
-    * With args `<queryName> <dir>`: time that ONE query (min-of-3) in
-    * THIS JVM and print one JSON line. One (query, scale) per JVM is the
-    * point — a shared session carries JIT/heap state between heavy
+  /** Build the sf1.0 tables if missing and print the probe matrix. Time
+    * rows with `Test/runMain graft.tools.Probe time
+    * /root/testdata/sf0.1,scratch/sf1.0 <name ...>`, one name per JVM for
+    * heavy rows — a shared session carries JIT/heap state between heavy
     * queries and produced 6 s/9 s/102 s for the same (query, data) across
     * three otherwise-identical runs; isolated JVMs are reproducible.
     */
   def main(args: Array[String]): Unit = {
-    val src = "/root/testdata/sf0.1"
-    val out = "scratch/sf1.0"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildIfMissing(spark, src, out)
-    if (args.length >= 2) { runOne(spark, args(0), args(1)); spark.stop(); return }
-    println(probeQueries.map(_._1).mkString(" "))
+    val spark = graft.GraftSession.local("scale-probe")
+    buildIfMissing(spark, "/root/testdata/sf0.1", "scratch/sf1.0")
+    println(probeNames.mkString(" "))
     spark.stop()
-  }
-
-  private def runOne(spark: SparkSession, name: String, dir: String): Unit = {
-    val fn = probeQueries.toMap.apply(name)
-    def clear(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-    var rows = 0L
-    def timeOnce(): Double = {
-      val t0 = System.nanoTime()
-      rows = fn(spark, dir).count()
-      val t = (System.nanoTime() - t0) / 1e9
-      clear()
-      t
-    }
-    val samples = Seq(timeOnce(), timeOnce(), timeOnce())
-    // fingerprint the PHYSICAL plan from its explain text (the adaptive
-    // root hides its inner plan from collect()): operator names in tree
-    // order, ids and arguments stripped — a lost broadcast or a changed
-    // join strategy at 10× shows up as a different sequence
-    val df = fn(spark, dir)
-    val shape = df.queryExecution
-      .explainString(org.apache.spark.sql.execution.SimpleMode)
-      .linesIterator
-      .map(_.replaceAll("^[\\s:+*\\-]+", "").takeWhile(c => c != ' ' && c != '('))
-      .filter(n => n.nonEmpty && n.head.isLetter)
-      .mkString(">")
-    clear()
-    println(f"""PROBE {"q":"$name","dir":"$dir","sec":${samples.min}%.2f,"samples":[${samples.map(s => f"$s%.2f").mkString(",")}],"rows":$rows,"shape":"$shape"}""")
   }
 
   private def buildIfMissing(spark: SparkSession, src: String, out: String): Unit = {

@@ -113,3 +113,17 @@ object StreamBridge {
     Option(spark.sparkContext.getLocalProperty(
       org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
 }
+
+/** Listener-side access for measurement harnesses: the context's
+  * listener bus is `private[spark]` and a finished SQL execution's
+  * QueryExecution is `private[sql]`, hence this package-side exposure.
+  */
+object ListenerBridge {
+  /** Block until every event posted so far has reached its listeners. */
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The physical plan a finished SQL execution ran (final stages under AQE). */
+  def executedPlan(end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[org.apache.spark.sql.execution.SparkPlan] =
+    Option(end.qe).map(_.executedPlan)
+}

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerate `graft.operators.BpeMerges` — the frozen production BPE
@@ -25,11 +24,7 @@ object BpeVocabGen {
     val target = if (args.length > 1) args(1).toInt else 1024
     val out = if (args.length > 2) args(2)
       else "src/main/scala/graft/operators/BpeMerges.scala"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("bpe-vocab-gen")
     val toks = graft.sources.Tables.documents(spark, sfDir)
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.VectorOps
 import graft.sources.Tables
@@ -8,14 +7,7 @@ import graft.sources.Tables
 /** Ad-hoc probe: IVF recall@5 vs exact for various configs. */
 object IvfProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("ivf-probe")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("ivf-probe")
 
     // args: [dir ...] — defaults to the two small SFs; nProbe sweep is
     // fixed (r17: recall vs probe count is the scale-rule evidence)

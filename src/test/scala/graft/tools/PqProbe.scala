@@ -1,21 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.VectorOps
 import graft.sources.Tables
 
-/** Ad-hoc probe: PQ/ADC recall@5 vs exact for various (m, k) grids. */
+/** Calibration probe: PQ/ADC recall@5 vs exact for various (m, k) grids.
+  * Usage: Test/runMain graft.tools.PqProbe [dir] — the grid's embeddings
+  * dir, default sf0.001. Time q129/q130/q131 with `graft.tools.Probe time`.
+  */
 object PqProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("pq-probe")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val df = Tables.embeddings(spark, sys.props.getOrElse("pq.sf", "/root/testdata/sf0.001"))
+    val spark = graft.GraftSession.local("pq-probe")
+    val df = Tables.embeddings(spark, args.headOption.getOrElse("/root/testdata/sf0.001"))
     for ((m, k, it) <- Seq((8, 64, 2), (16, 16, 6), (16, 64, 2))) {
       val t0 = System.nanoTime
       val rows = VectorOps.pqTopk(df, m = m, k = k, iters = it).collect()
@@ -48,24 +43,6 @@ object PqProbe {
         ((System.nanoTime - t1) / 1e9, n)
       }
       println(f"IVFPQIDX $dir build=$tb%.2f search=${walls.map(_._1).min}%.2f " +
-        f"rows=${walls.head._2}")
-    }
-    // 10× scale probe: sf0.1 vs the scratch sf1.0 derivative (the
-    // BASELINE.md probe-table protocol — min of 3 timed passes each)
-    for (dir <- Seq("/root/testdata/sf0.1", "/root/repo/scratch/sf1.0");
-        (name, fn) <- Seq(
-          ("q129", VectorOps.q129PqCodes _),
-          ("q130", VectorOps.q130PqTopk _),
-          ("q131", VectorOps.q131IvfpqTopk _))) {
-      val walls = (1 to 3).map { _ =>
-        val t0 = System.nanoTime
-        val n = fn(spark, dir).count()
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        ((System.nanoTime - t0) / 1e9, n)
-      }
-      println(f"SCALE $name $dir wall=${walls.map(_._1).min}%.2f " +
         f"rows=${walls.head._2}")
     }
     spark.stop()

@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
-"""Join two ScaleCheck logs (sf0.1 + sf1.0) into per-query 10x ratios.
+"""Join two `graft.tools.Probe time` logs (sf0.1 + sf1.0) into per-query
+10x ratios.
 
 Usage: python3 tools/scale_ratio.py <sf01log> <sf10log> [flag_ratio]
                 [--dirs SMALL_DIR BIG_DIR]
 Prints one line per query: name sf0.1s sf1.0s ratio rows01->rows10,
 sorted by ratio descending, and a FLAG marker past the threshold
-(default 3.0).
+(default 3.0). A SCALE line without `rows=` (Probe times full output
+through the noop sink and counts no rows) prints `-` for its rows.
 
 Labels are keyed STRICTLY on the dir paths present across both logs —
 never on which file a line came from (a single log may cover both
@@ -20,14 +22,14 @@ import sys
 
 
 def parse(path):
-    """{name: {dir: (wall, rows)}} keyed by the raw dir path."""
+    """{name: {dir: (wall, rows or "-")}} keyed by the raw dir path."""
     out = {}
     for line in open(path, errors="replace"):
         m = re.match(
-            r"SCALE (\S+) (\S+) wall=([0-9.]+) rows=(\d+)", line.strip())
+            r"SCALE (\S+) (\S+) wall=([0-9.]+)(?: rows=(\d+))?", line.strip())
         if m:
             name, d = m.group(1), m.group(2)
-            out.setdefault(name, {})[d] = (float(m.group(3)), int(m.group(4)))
+            out.setdefault(name, {})[d] = (float(m.group(3)), m.group(4) or "-")
     return out
 
 
@@ -81,7 +83,8 @@ def main(a, b, flag=3.0, explicit=None):
     rows.sort(reverse=True)
     for ratio, name, w0, w1, r0, r1 in rows:
         mark = " FLAG" if ratio > flag else ""
-        print(f"{name:28s} {w0:7.2f} {w1:7.2f} {ratio:5.1f}x rows {r0}->{r1}{mark}")
+        rows = "-" if r0 == r1 == "-" else f"{r0}->{r1}"
+        print(f"{name:28s} {w0:7.2f} {w1:7.2f} {ratio:5.1f}x rows {rows}{mark}")
 
 
 if __name__ == "__main__":
