@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 /** Distributed connected components via alternating large-star /
   * small-star rounds (Kiveris et al., "Connected Components in MapReduce
   * and Beyond", SoCC 2014) — the dedup-clustering closure that scales:
-  * near-dup pair lists (q35/q36/q58) become component labels in
+  * near-dup pair lists (q35/q36/q58) and LSH bucket edges
+  * ([[VectorOps.dedupClustersConverged]]) become component labels in
   * O(log n) rounds regardless of component DIAMETER, where one-hop
-  * min-label propagation ([[VectorOps.dedupClustersConverged]]'s shape)
-  * needs O(diameter) rounds and a long chain of borderline pairs can
-  * make diameter ~n.
+  * min-label propagation needs O(diameter) rounds and a long chain of
+  * borderline pairs can make diameter ~n.
   *
   * Each round is two keyed aggregations and two joins over the edge
   * list — neighborhoods are never collected into arrays (a hub node's

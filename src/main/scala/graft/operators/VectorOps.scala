@@ -266,48 +266,23 @@ object VectorOps {
       .withColumn("is_keeper", col("cluster_rep") === col("doc_id"))
   }
 
-  /** Converged dedup clustering: connected components over the doc↔band-
-    * bucket bipartite graph by alternating min-label exchanges (the
-    * classic map-reduce CC). Each round is two keyed aggregations over the
-    * O(n × bands) edge list — no pairwise materialization, O(diameter)
-    * rounds (near-dup clusters have tiny diameters).
+  /** Converged dedup clustering: the transitive closure of
+    * [[q51DedupClusters]]'s one pass. Every doc links to the min doc of
+    * each of its band buckets — (bucket-min, doc) edges, O(n × bands),
+    * no pairwise materialization — and [[ConnectedComponents.run]]
+    * labels the components (min doc_id reachable). `maxIter` bounds the
+    * star rounds; non-convergence throws rather than returning partial
+    * labels. The result plan holds the closure's checkpoint blocks —
+    * release with [[graft.CacheHygiene.releaseTree]] once consumed.
     */
   def dedupClustersConverged(docs: DataFrame, maxIter: Int = 10): DataFrame = {
-    val edges = bandedSignatures(docs)
-      .select(col("doc_id"), xxhash64(col("band"), col("sig")).as("bucket"))
-      .transform(d => graft.CacheHygiene.materialize(d))
-    var labels = edges.select("doc_id").distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_rep"))
-    // only frames THIS loop checkpointed may be released: the initial
-    // labels frame is a DISTINCT over `edges`, which release() refuses to
-    // unwrap (only Project/Filter chains), but tracking explicitly keeps
-    // the invariant obvious
-    var prevCk: DataFrame = null
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val bucketMin = edges.join(labels, "doc_id")
-        .groupBy("bucket").agg(min("cluster_rep").as("bucket_rep"))
-      val next = edges.join(bucketMin, "bucket")
-        .groupBy("doc_id").agg(min("bucket_rep").as("prop_rep"))
-        .join(labels, "doc_id")
-        .select(col("doc_id"), least(col("prop_rep"), col("cluster_rep")).as("cluster_rep"))
-        .transform(d => graft.CacheHygiene.materialize(d))
-      changed = next.as("n")
-        .join(labels.select(col("doc_id"), col("cluster_rep").as("old_rep")).as("o"), "doc_id")
-        .filter(col("cluster_rep") =!= col("old_rep")).count()
-      // `changed` above was the old checkpoint's last consumer
-      if (prevCk != null) graft.CacheHygiene.release(prevCk)
-      prevCk = next
-      labels = next
-      iter += 1
-    }
-    val out = labels.withColumn("is_keeper", col("cluster_rep") === col("doc_id"))
-    // the final labels checkpoint stays (it backs `out`); the edge list is
-    // only safe to drop once no returned plan references it — i.e. after
-    // at least one iteration replaced `labels` with a checkpoint
-    if (prevCk != null) graft.CacheHygiene.release(edges)
-    out
+    val banded = bandedSignatures(docs)
+    val edges = banded
+      .join(banded.groupBy("band", "sig").agg(min("doc_id").as("src")), Seq("band", "sig"))
+      .select(col("src"), col("doc_id").as("dst"))
+    ConnectedComponents.run(edges, maxIter)
+      .select(col("id").as("doc_id"), col("component").as("cluster_rep"))
+      .withColumn("is_keeper", col("cluster_rep") === col("doc_id"))
   }
 
   // ---- SimHash ----------------------------------------------------------

@@ -39,8 +39,9 @@ import org.apache.spark.sql.SparkSession
   *     returns true, and a reader never observes a partial file. A torn
   *     outcome may be reported as false-when-actually-landed (the
   *     rename store's read-back can be interrupted); callers recover by
-  *     re-checking the exact version they attempted (ManifestTable's
-  *     torn-CAS loop), so the conservative direction is "report loss".
+  *     re-checking the exact version they attempted (the torn-CAS
+  *     adoption in `ManifestTable.publish`, the one commit loop), so the
+  *     conservative direction is "report loss".
   *   - [[CommitStore.putOverwrite]]: atomic overwrite — after return
   *     the path holds this content or a concurrent racer's COMPLETE
   *     content; never torn, never absent. Used only for the `_latest`

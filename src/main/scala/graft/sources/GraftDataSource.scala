@@ -722,9 +722,9 @@ private[graft] object GraftDataSource {
 
     /** `TRUNCATE TABLE` — an overwrite with the empty snapshot, schema
       * kept (the default SupportsDeleteV2 route through
-      * `deleteWhere(TRUE)` lands in [[ManifestTable.rewriteEntriesPinned]]'s
-      * empty-snapshot anchor, which preserves the schema too; this
-      * override just states the semantics directly).
+      * `deleteWhere(TRUE)` lands in [[ManifestTable.cowRewriteCommit]]'s
+      * metadata-only drop, whose empty-snapshot anchor preserves the
+      * schema too; this override just states the semantics directly).
       */
     override def truncateTable(): Boolean = {
       deleteWhere(Array[Filter](AlwaysTrue()))

@@ -22,12 +22,17 @@ import org.apache.spark.sql.types._
   * the optimistic-concurrency lock: two writers racing to the same version
   * can only have one rename land; the loser re-reads the new head and
   * retries on top of it (append commits carry the winner's data forward,
-  * so no commit is ever lost). `_latest` is a monotonically-advanced hint
-  * for readers, not the source of truth — a missing, torn, or lagging
-  * hint falls back to the manifest head, so a writer that crashes
-  * between manifest and pointer costs readers one directory listing,
-  * never visibility. A crash at any earlier point leaves only
-  * invisible garbage (data without a manifest), never a broken table.
+  * so no commit is ever lost). Every write form runs that loop through
+  * ONE primitive, [[publish]]. `_latest` is a monotonically-advanced
+  * hint for readers, not the source of truth: [[currentVersion]] falls
+  * back to the manifest head only when the hint is missing or
+  * unreadable. A hint that LAGS the head (a writer crashed between
+  * manifest and pointer) is served as-is — readers see the previous
+  * complete snapshot — until the next commit heals it: [[publish]]
+  * advances the hint on every return path, a replay's no-op included.
+  * Writers always base on the manifest head, never on the hint. A crash
+  * at any earlier point leaves only invisible garbage (data without a
+  * manifest), never a broken table.
   *
   * Manifests also record per-commit min/max stats for caller-chosen
   * columns, and [[readRange]] prunes a snapshot read to the data dirs
@@ -55,8 +60,9 @@ object ManifestTable {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Fresh table-relative data-dir name. The UUID is what makes
-    * concurrent writers collision-free AND what [[tornCasLanded]] leans
-    * on as an authorship proof — every commit path must mint dirs here.
+    * concurrent writers collision-free AND what [[publish]]'s torn-CAS
+    * adoption leans on as an authorship proof — every commit path must
+    * mint dirs here.
     */
   private def newDataDirName(): String =
     s"data/${UUID.randomUUID().toString.replace("-", "").take(16)}"
@@ -83,33 +89,6 @@ object ManifestTable {
   private def writeFile(spark: SparkSession, p: Path, content: String): Boolean =
     store(spark).putOverwrite(p, content)
 
-  /** CAS publish — exactly one concurrent publisher of a given path
-    * wins; see [[CommitStore.putIfAbsent]] for the per-store mechanics
-    * (rename + read-back vs native conditional put). May report a loss
-    * for a publish that actually landed (torn read-back); the commit
-    * loops recover by re-checking the exact version they attempted.
-    */
-  private def casCreateFile(spark: SparkSession, p: Path, content: String): Boolean =
-    store(spark).putIfAbsent(p, content)
-
-  /** Torn-CAS adoption for DERIVED commits (merge, COW rewrite,
-    * compaction): did the version a CAS reported as lost actually land,
-    * and is it OURS? The new data-dir name is a fresh UUID, so its
-    * presence in exactly the attempted version's entry list is proof of
-    * authorship. [[commit]]'s loop does the same check inline; the
-    * derived-commit loops MUST make it before deleting their new dir —
-    * deleting on a false-when-actually-landed report would leave the
-    * published head referencing a deleted dir (every read throws, and
-    * manifests are immutable, so the table stays broken until manual
-    * repair). This is the recovery obligation [[CommitStore.putIfAbsent]]
-    * places on callers. A missing/unreadable attempted manifest reads as
-    * not-landed — then nothing references the dir and deletion is safe.
-    */
-  private def tornCasLanded(spark: SparkSession, table: String,
-      attempted: Long, dirName: String): Boolean =
-    scala.util.Try(manifestEntries(spark, table, attempted)).toOption
-      .exists(_.exists(_.dir == dirName))
-
   private def readFile(spark: SparkSession, p: Path): String =
     store(spark).read(p)
 
@@ -133,16 +112,13 @@ object ManifestTable {
     * local-fs rename pair mid-overwrite). The WRITER protocol
     * ([[advancePointer]]) must loop on this, not on [[currentVersion]]:
     * the reader fallback would report the head and convince the writer
-    * the hint file it never wrote is already current.
+    * the hint file it never wrote is already current. One store read: a
+    * missing pointer is the read's FileNotFoundException (the
+    * [[CommitStore.read]] contract), so no separate `exists` round trip.
     */
-  private def hintVersion(spark: SparkSession, table: String): Long = {
-    val ptr = new Path(table, "_latest")
-    try {
-      if (store(spark).exists(ptr)) readFile(spark, ptr).toLong else 0L
-    } catch {
-      case _: java.io.IOException | _: NumberFormatException => 0L
-    }
-  }
+  private def hintVersion(spark: SparkSession, table: String): Long =
+    try readFile(spark, new Path(table, "_latest")).toLong
+    catch { case _: java.io.IOException | _: NumberFormatException => 0L }
 
   private def manifestPath(table: String, v: Long) =
     new Path(table, f"_manifests/m-$v%06d.txt")
@@ -244,18 +220,15 @@ object ManifestTable {
       v: Long): Option[Long] =
     parseManifest(readFile(spark, manifestPath(table, v)))._1
 
-  /** Render a manifest for publication as version `base + 1`: entries
-    * sorted by dir under a commit-time header. The stamp is MONOTONE per
-    * table — max(now, predecessor's stamp + 1) — so `TIMESTAMP AS OF`
-    * resolves unambiguously even across committer clock skew (the Delta
-    * in-commit-timestamp rule). Legacy headerless predecessors
-    * contribute no floor.
+  /** Render a manifest for publication on top of a predecessor stamped
+    * `baseStamp`: entries sorted by dir under a commit-time header. The
+    * stamp is MONOTONE per table — max(now, predecessor's stamp + 1) —
+    * so `TIMESTAMP AS OF` resolves unambiguously even across committer
+    * clock skew (the Delta in-commit-timestamp rule). An empty table or
+    * a legacy headerless predecessor contributes no floor.
     */
-  private def renderManifest(spark: SparkSession, table: String, base: Long,
-      entries: Seq[Entry]): String = {
-    val floor = if (base > 0)
-      commitTimeMs(spark, table, base).getOrElse(0L) else 0L
-    val ts = math.max(System.currentTimeMillis(), floor + 1)
+  private def renderManifest(baseStamp: Option[Long], entries: Seq[Entry]): String = {
+    val ts = math.max(System.currentTimeMillis(), baseStamp.getOrElse(0L) + 1)
     s"#ts:$ts\n" + entries.sortBy(_.dir).map(renderEntry).mkString("\n")
   }
 
@@ -300,11 +273,11 @@ object ManifestTable {
     * keeps recording it (columns absent from the written schema are
     * skipped by [[statTags]], never wrong).
     */
-  private[graft] def headStatsCols(spark: SparkSession, table: String): Seq[String] = {
-    val head = highestManifest(spark, table)
-    if (head <= 0) Nil
-    else manifestEntries(spark, table, head).flatMap(_.stats.keys).distinct.sorted
-  }
+  private[graft] def headStatsCols(spark: SparkSession, table: String): Seq[String] =
+    statsColsOf(manifestEntries(spark, table, highestManifest(spark, table)))
+
+  private def statsColsOf(entries: Seq[Entry]): Seq[String] =
+    entries.flatMap(_.stats.keys).distinct.sorted
 
   /** Column → stats tag for the supported types; unsupported columns are
     * skipped (absent stats = the dir is never pruned — always safe).
@@ -395,18 +368,98 @@ object ManifestTable {
     }
   }
 
-  /** Min/max stats for the written commit, read back from its own files —
+  /** Write `df` as data dir `dirName` and return its manifest entry.
+    * Min/max stats on `statsCols` are read back from the dir's own files —
     * a column-pruned scan of just the new dir, never a recompute of the
     * input plan.
     */
-  private def commitStats(spark: SparkSession, dirPath: Path,
-      statsCols: Seq[String]): Map[String, ColStat] = {
-    if (statsCols.isEmpty) return Map.empty
-    val df = spark.read.parquet(dirPath.toString)
-    val tags = statTags(df.schema, statsCols)
-    if (tags.isEmpty) return Map.empty
+  private def writeEntry(df: DataFrame, table: String, statsCols: Seq[String],
+      dirName: String = newDataDirName(), mode: String = "errorifexists"): Entry = {
+    val dirPath = new Path(table, dirName).toString
+    df.write.mode(mode).parquet(dirPath)
+    if (statsCols.isEmpty) return Entry(dirName, Map.empty)
+    val written = df.sparkSession.read.parquet(dirPath)
+    val tags = statTags(written.schema, statsCols)
+    if (tags.isEmpty) return Entry(dirName, Map.empty)
     val aggs = statAggs(tags)
-    rowStats(tags, df.agg(aggs.head, aggs.tail: _*).head())
+    Entry(dirName, rowStats(tags, written.agg(aggs.head, aggs.tail: _*).head()))
+  }
+
+  /** Zero rows of `schema` in one partition: written, one footer. */
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      .repartition(1)
+
+  /** The empty-snapshot anchor: ONE fresh empty data dir carrying
+    * `schema`. The snapshot schema lives in parquet footers, so a
+    * zero-dir manifest would erase it and strand every follow-up INSERT.
+    */
+  private def emptyAnchor(spark: SparkSession, table: String,
+      schema: StructType): Entry =
+    writeEntry(emptyFrame(spark, schema), table, Nil)
+
+  /** One commit attempt's answer to the head it was handed (see
+    * [[publish]]). [[Settled]]: nothing to publish — a replay, a no-op,
+    * or a create routed through [[commit]]; `v` is the result.
+    * [[Publish]]: CAS `entries` as head+1. `minted` are the fresh data
+    * dirs the attempt wrote (its authorship proof); `derived` marks them
+    * as computed FROM the head, so a lost race deletes them and the next
+    * attempt recomputes. Non-derived dirs are written once and ride
+    * every retry.
+    */
+  private sealed trait Attempt
+  private final case class Settled(v: Long) extends Attempt
+  private final case class Publish(entries: Seq[Entry],
+      minted: Seq[String] = Nil, derived: Boolean = false) extends Attempt
+
+  /** THE optimistic commit loop under every write form. Each round reads
+    * the manifest head `base` once (version, entries and `#ts` stamp),
+    * asks `attempt` what to do on top of it, and CASes a [[Publish]] as
+    * `m-(base+1)` through [[CommitStore.putIfAbsent]].
+    *
+    * A CAS reported lost may have LANDED (the torn read-back the store
+    * contract allows). Version `base+1` is adopted as ours when it lists
+    * a dir we minted — fresh UUIDs (or a token no one else commits) are
+    * proof of authorship — or, for an attempt that minted none (restore,
+    * metadata-only drop, clone), when its dir set equals ours: equal
+    * content is the same commit. The check MUST precede deleting a
+    * derived dir: deleting on a false-when-landed report would leave the
+    * head referencing a deleted dir, and manifests are immutable. A
+    * missing or unreadable attempted manifest reads as not landed.
+    * After a genuine loss, derived dirs are deleted and the loop
+    * re-reads the head.
+    *
+    * `_latest` advances on EVERY return path — a replay or no-op
+    * included: a replay exists precisely because a writer may have died
+    * between the manifest CAS and the pointer write.
+    */
+  private def publish(spark: SparkSession, table: String)(
+      attempt: (Long, Seq[Entry]) => Attempt): Long = {
+    var committed = 0L
+    while (committed == 0L) {
+      val base = highestManifest(spark, table)
+      val (stamp, entries) =
+        if (base > 0) parseManifest(readFile(spark, manifestPath(table, base)))
+        else (None, Nil)
+      attempt(base, entries) match {
+        case Settled(v) => committed = v
+        case Publish(next, minted, derived) =>
+          def landed = scala.util.Try(manifestEntries(spark, table, base + 1))
+            .toOption.exists { m =>
+              if (minted.nonEmpty) m.exists(e => minted.contains(e.dir))
+              else m.map(_.dir).toSet == next.map(_.dir).toSet
+            }
+          if (store(spark).putIfAbsent(manifestPath(table, base + 1),
+              renderManifest(stamp, next)) || landed)
+            committed = base + 1
+          else if (derived) minted.foreach { d =>
+            val p = new Path(table, d); fs(spark, p).delete(p, true)
+          }
+      }
+    }
+    advancePointer(spark, table, committed)
+    committed
   }
 
   /** Commit `df` as the next version. `append = true` carries the commit
@@ -440,38 +493,12 @@ object ManifestTable {
   def commit(df: DataFrame, table: String, append: Boolean,
       statsCols: Seq[String] = Nil, allowEvolution: Boolean = false): Long = {
     val spark = df.sparkSession
-    val dirName = newDataDirName()
-    val dirPath = new Path(table, dirName)
-    df.write.parquet(dirPath.toString)
-    val entry = Entry(dirName, commitStats(spark, dirPath, statsCols))
-    var committed = 0L
-    var attempted = 0L // version the previous iteration's CAS targeted
-    while (committed == 0L) {
-      val base = highestManifest(spark, table)
-      // torn-CAS recovery: a CAS whose read-back verification was torn
-      // (IOException reported as a loss) may actually have landed. Its
-      // manifest, if it exists, is EXACTLY version `attempted` — manifests
-      // are immutable once CAS-created — so check that version directly
-      // rather than the current head: a concurrent overwrite/compaction
-      // may have rewritten dirs since, and a head-only check would miss
-      // the landed commit and append the entry a second time (duplicating
-      // its rows, or resurrecting them past the overwrite)
-      if (attempted > 0 && attempted <= base &&
-          manifestEntries(spark, table, attempted).exists(_.dir == entry.dir)) {
-        committed = attempted
-      } else {
-        val baseEntries = if (append && base > 0) manifestEntries(spark, table, base) else Nil
-        if (append && base > 0)
-          checkAppendSchema(spark, table, base, df, allowEvolution)
-        val content = renderManifest(spark, table, base, baseEntries :+ entry)
-        attempted = base + 1
-        if (casCreateFile(spark, manifestPath(table, base + 1), content))
-          committed = base + 1
-        // else: lost the race - loop re-reads the new head and retries
-      }
+    val entry = writeEntry(df, table, statsCols)
+    publish(spark, table) { (base, entries) =>
+      if (append && base > 0)
+        checkAppendSchema(spark, table, base, entries, df, allowEvolution)
+      Publish((if (append) entries else Nil) :+ entry, Seq(entry.dir))
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
   /** `ALTER TABLE ADD COLUMNS` — the ONE safe DDL mutation, expressed as
@@ -499,15 +526,12 @@ object ManifestTable {
         s"manifest-table: column ${f.name} already exists")
     }
     val extended = StructType(schema.fields ++ newFields)
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), extended)
-      .repartition(1)
-    commit(empty, table, append = true,
+    commit(emptyFrame(spark, extended), table, append = true,
       statsCols = headStatsCols(spark, table), allowEvolution = true)
   }
 
   private def checkAppendSchema(spark: SparkSession, table: String, base: Long,
-      df: DataFrame, allowEvolution: Boolean): Unit = {
+      entries: Seq[Entry], df: DataFrame, allowEvolution: Boolean): Unit = {
     // the CACHED one-footer-per-dir union schema, not read(...).schema:
     // planning the full snapshot with mergeSchema costs a footer read per
     // FILE over ALL dirs, and this check runs on EVERY append attempt
@@ -517,7 +541,7 @@ object ManifestTable {
     // name+type SET: column order never matters to reads anyway
     // ([[sliceRead]] selects by name and null-fills).
     def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSet
-    val current = snapshotSchemaOf(spark, table, base)
+    val current = snapshotSchemaCached(spark, table, base, entries.map(_.dir))
     if (allowEvolution) {
       val cur = current.fields.map(f => f.name -> f.dataType).toMap
       df.schema.fields.foreach(f => cur.get(f.name).foreach(t =>
@@ -564,43 +588,22 @@ object ManifestTable {
     require(token.nonEmpty && token.forall(c =>
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"manifest-table: token '$token' must be [A-Za-z0-9_-]+")
-    val spark = df.sparkSession
     val dirName = s"data/t-$token"
-    val dirPath = new Path(table, dirName)
-    def tokenAt(v: Long): Boolean =
-      v > 0 && manifestEntries(spark, table, v).exists(_.dir == dirName)
-    // the replay no-op paths still heal the pointer: the replay exists
-    // precisely because a writer may have died between the manifest CAS
-    // and the pointer write, and returning without advancing would leave
-    // the committed batch invisible to pointer-based reads indefinitely
-    val head0 = highestManifest(spark, table)
-    if (tokenAt(head0)) { advancePointer(spark, table, head0); return head0 }
-    // any bytes already in the dir are a crashed attempt's invisible
-    // garbage (no manifest references them) - overwrite is safe
-    df.write.mode("overwrite").parquet(dirPath.toString)
-    val entry = Entry(dirName, commitStats(spark, dirPath, statsCols))
-    var committed = 0L
-    var attempted = 0L // version the previous iteration's CAS targeted
-    while (committed == 0L) {
-      val base = highestManifest(spark, table)
-      // same torn-CAS recovery as commit(): our CAS, if it landed despite
-      // a torn read-back, landed at exactly `attempted` — check there, not
-      // just the head, in case later commits rewrote dirs since
-      if (attempted > 0 && attempted <= base && tokenAt(attempted)) {
-        committed = attempted
-      } else if (tokenAt(base)) { // concurrent committer of this token won
-        advancePointer(spark, table, base); return base
-      } else {
-        if (base > 0) checkAppendSchema(spark, table, base, df, allowEvolution)
-        val entries = manifestEntries(spark, table, base) :+ entry
-        val content = renderManifest(spark, table, base, entries)
-        attempted = base + 1
-        if (casCreateFile(spark, manifestPath(table, base + 1), content))
-          committed = base + 1
+    var entry: Option[Entry] = None // written on the first attempt that needs it
+    publish(df.sparkSession, table) { (base, entries) =>
+      // the token in the head: a replay, or a concurrent committer of
+      // this token won — either way the batch is in
+      if (entries.exists(_.dir == dirName)) Settled(base)
+      else {
+        // any bytes already in the dir are a crashed attempt's invisible
+        // garbage (no manifest references them) - overwrite is safe
+        if (entry.isEmpty)
+          entry = Some(writeEntry(df, table, statsCols, dirName, "overwrite"))
+        if (base > 0)
+          checkAppendSchema(df.sparkSession, table, base, entries, df, allowEvolution)
+        Publish(entries ++ entry, Seq(dirName))
       }
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
   /** Monotonic `_latest` advance: never regress the hint. Two racing
@@ -609,25 +612,27 @@ object ManifestTable {
     * loop each advancer re-reads the manifest HEAD and heals the hint up
     * to it. Any residual interleaving leaves the hint at a lower LIVE
     * version only until the next commit/advance heals it — reads stay
-    * correct (every manifest is complete), at worst briefly stale.
+    * correct (every manifest is complete), at worst briefly stale. A
+    * write the store reports as landed ends its loop without a re-read:
+    * a regression is healed by the writer that CAUSED it, whose head
+    * listing comes after its own stale write (and so sees the newer
+    * manifest).
     */
   private def advancePointer(spark: SparkSession, table: String, target: Long): Unit = {
     val ptr = new Path(table, "_latest")
     var guard = 0
-    while (hintVersion(spark, table) < target && guard < 5) {
-      writeFile(spark, ptr, target.toString)
+    while (guard < 5 && hintVersion(spark, table) < target &&
+        !writeFile(spark, ptr, target.toString))
       guard += 1
-    }
     // heal up to the head with the same bounded persistence as the main
     // loop: a single attempt can lose an OVERWRITE race to a slower
     // lower-version writer and leave the hint stale until the NEXT
     // advance (still correct, just stale longer than necessary)
     val head = highestManifest(spark, table)
     var heal = 0
-    while (head > target && hintVersion(spark, table) < head && heal < 5) {
-      writeFile(spark, ptr, head.toString)
+    while (head > target && heal < 5 && hintVersion(spark, table) < head &&
+        !writeFile(spark, ptr, head.toString))
       heal += 1
-    }
   }
 
   /** Read a snapshot: the current one, or a pinned `version` for
@@ -995,52 +1000,6 @@ object ManifestTable {
     }
   }
 
-  /** Metadata-only snapshot rewrite: commit a new version whose entry
-    * list is `rewrite(head entries)` — the primitive under metadata-only
-    * DELETE. No data moves or is destroyed: dropped dirs stay on disk for
-    * pinned readers until [[vacuum]], exactly like an overwrite's
-    * replaced commits. Concurrency is [[compactCommit]]'s contract — the
-    * new content DERIVES from the snapshot it read, so the CAS is pinned
-    * to that base and a lost race recomputes from the new head rather
-    * than publishing a stale derivation (`rewrite` re-runs per attempt
-    * and may throw if the new head no longer supports the rewrite).
-    *
-    * A rewrite that empties the snapshot commits ONE fresh empty data dir
-    * instead: the snapshot schema lives in parquet footers, so a
-    * zero-dir manifest would erase the schema and strand every
-    * follow-up INSERT. The anchor dir is written once and reused across
-    * CAS retries.
-    */
-  private[graft] def rewriteEntriesPinned(spark: SparkSession, table: String)(
-      rewrite: Seq[Entry] => Seq[Entry]): Long = {
-    var committed = 0L
-    var anchor: Option[Entry] = None
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
-      require(v > 0, s"manifest-table: $table has no committed version")
-      val entries = manifestEntries(spark, table, v)
-      val kept = rewrite(entries) match {
-        case empty if empty.isEmpty =>
-          if (anchor.isEmpty) {
-            val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
-            val dirName =
-              newDataDirName()
-            spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-              .repartition(1).write.parquet(new Path(table, dirName).toString)
-            anchor = Some(Entry(dirName, Map.empty))
-          }
-          anchor.toSeq
-        case kept => kept
-      }
-      val content = renderManifest(spark, table, v, kept)
-      if (casCreateFile(spark, manifestPath(table, v + 1), content))
-        committed = v + 1
-    }
-    advancePointer(spark, table, committed)
-    committed
-  }
-
   /** Per-commit decision for [[cowRewriteCommit]]: carry the entry
     * forward untouched, drop it from the snapshot (metadata-only — its
     * stats prove no row survives), or fold it into the copy-on-write
@@ -1052,81 +1011,52 @@ object ManifestTable {
   private[graft] case object CowRewrite extends CowAction
 
   /** Stats-pruned partial COPY-ON-WRITE commit — the shared primitive
-    * under row-level `DELETE` fallback and SQL `UPDATE`: each head
-    * commit is classified keep / drop / rewrite against the snapshot
-    * schema, the rewrite slice is read once (full-snapshot-schema
+    * under SQL `DELETE` (metadata-only or row-level) and SQL `UPDATE`:
+    * each head commit is classified keep / drop / rewrite against the
+    * snapshot schema, the rewrite slice is read once (full-snapshot-schema
     * slice read), transformed by `rewrite`, and written as ONE new
     * commit dir; kept entries travel by reference and dropped entries
-    * vanish metadata-only. At 100 TB this is the difference between a
+    * vanish metadata-only (their dirs stay on disk for pinned readers
+    * until [[vacuum]]). At 100 TB this is the difference between a
     * point-UPDATE rewriting a handful of key-clustered commits and
     * rewriting the table: the classification runs over manifest stats,
     * so provably-untouched dirs cost zero bytes of IO.
     *
     * Concurrency is [[compactCommit]]'s pinned-CAS contract: the new
     * content derives from the snapshot it read, so classification and
-    * rewrite re-run per attempt against the new head, and a lost race
-    * deletes the stale attempt's dir. A rewrite that empties the whole
-    * snapshot anchors one empty schema-carrying dir, exactly like
-    * [[rewriteEntriesPinned]]. A classification with nothing to drop or
-    * rewrite is a no-op returning the current version (no empty commit
-    * spam). New-dir stats default to the head's recorded stats columns
-    * so pruning survives by inheritance (the [[mergeCommit]] rule).
+    * rewrite re-run per attempt against the new head (and `classify` may
+    * throw if the new head no longer supports the rewrite), and a lost
+    * race deletes the stale attempt's dir. A pure drop that empties the
+    * whole snapshot publishes the [[emptyAnchor]] instead, written once
+    * and reused across retries. A classification with nothing to drop
+    * or rewrite is a no-op returning the current version (no empty
+    * commit spam). New-dir stats default to the head's recorded stats
+    * columns so pruning survives by inheritance (the [[mergeCommit]]
+    * rule).
     */
   private[graft] def cowRewriteCommit(spark: SparkSession, table: String,
       classify: (StructType, Entry) => CowAction,
       rewrite: DataFrame => DataFrame,
       statsCols: Seq[String] = Nil): Long = {
-    val root = new Path(table)
-    val f = fs(spark, root)
-    var committed = 0L
     var anchor: Option[Entry] = None
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
+    publish(spark, table) { (v, entries) =>
       require(v > 0, s"manifest-table: $table has no committed version")
-      val entries = manifestEntries(spark, table, v)
       val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
       val decided = entries.map(e => e -> classify(schema, e))
       val kept = decided.collect { case (e, CowKeep) => e }
       val toRewrite = decided.collect { case (e, CowRewrite) => e }
-      if (toRewrite.isEmpty && kept.size == entries.size) return v // no-op
-      if (toRewrite.isEmpty) {
-        // pure metadata drop: rewriteEntriesPinned's shape, inlined so
-        // the anchor dir is shared across retry attempts
-        val content0 = kept match {
-          case empty if empty.isEmpty =>
-            if (anchor.isEmpty) {
-              val dirName =
-                newDataDirName()
-              spark.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-                .repartition(1).write.parquet(new Path(table, dirName).toString)
-              anchor = Some(Entry(dirName, Map.empty))
-            }
-            anchor.toSeq
-          case k => k
-        }
-        if (casCreateFile(spark, manifestPath(table, v + 1),
-            renderManifest(spark, table, v, content0)))
-          committed = v + 1
-      } else {
-        val dirName =
-          newDataDirName()
-        val dirPath = new Path(table, dirName)
-        rewrite(sliceRead(spark, table, toRewrite.map(_.dir).sorted, schema))
-          .write.parquet(dirPath.toString)
-        val effStats = if (statsCols.nonEmpty) statsCols
-          else entries.flatMap(_.stats.keys).distinct.sorted
-        val entry = Entry(dirName, commitStats(spark, dirPath, effStats))
-        val content = renderManifest(spark, table, v, kept :+ entry)
-        if (casCreateFile(spark, manifestPath(table, v + 1), content))
-          committed = v + 1
-        else if (tornCasLanded(spark, table, v + 1, dirName))
-          committed = v + 1 // torn read-back: our publish DID land — adopt
-        else f.delete(dirPath, true) // stale-derived rewrite: recompute
+      if (toRewrite.nonEmpty) {
+        val entry = writeEntry(
+          rewrite(sliceRead(spark, table, toRewrite.map(_.dir).sorted, schema)),
+          table, if (statsCols.nonEmpty) statsCols else statsColsOf(entries))
+        Publish(kept :+ entry, Seq(entry.dir), derived = true)
+      } else if (kept.size == entries.size) Settled(v) // no-op
+      else if (kept.nonEmpty) Publish(kept)
+      else {
+        if (anchor.isEmpty) anchor = Some(emptyAnchor(spark, table, schema))
+        Publish(anchor.toSeq, anchor.map(_.dir).toSeq)
       }
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
   /** Stats-pruned copy-on-write UPSERT — the merge that scales: rewrite
@@ -1193,21 +1123,13 @@ object ManifestTable {
         }
       }
 
-      val root = new Path(table)
-      val f = fs(spark, root)
-      var committed = 0L
-      while (committed == 0L) {
-        val v = highestManifest(spark, table)
-        if (v == 0) { // merge into nothing = create
-          committed = commit(u, table, append = false,
-            statsCols = if (statsCols.nonEmpty) statsCols else keyCols)
-        } else {
-          checkAppendSchema(spark, table, v, u, allowEvolution = false)
-          val entries = manifestEntries(spark, table, v)
+      publish(spark, table) { (v, entries) =>
+        if (v == 0) // merge into nothing = create
+          Settled(commit(u, table, append = false,
+            statsCols = if (statsCols.nonEmpty) statsCols else keyCols))
+        else {
+          checkAppendSchema(spark, table, v, entries, u, allowEvolution = false)
           val (affected, untouched) = entries.partition(affectedBy)
-          val dirName =
-            newDataDirName()
-          val dirPath = new Path(table, dirName)
           val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
           // explicit join condition, not usingColumns: a usingColumns
           // join PARSES the names, so a key literally called "a.b" would
@@ -1221,20 +1143,11 @@ object ManifestTable {
             colExact(c) === uKeys(s"__graft_mk_$i") }.reduce(_ && _)
           val survivors = sliceRead(spark, table, affected.map(_.dir).sorted, schema)
             .join(uKeys, antiCond, "left_anti")
-          survivors.unionByName(u).write.parquet(dirPath.toString)
-          val effStats = if (statsCols.nonEmpty) statsCols
-            else entries.flatMap(_.stats.keys).distinct.sorted
-          val entry = Entry(dirName, commitStats(spark, dirPath, effStats))
-          val content = renderManifest(spark, table, v, untouched :+ entry)
-          if (casCreateFile(spark, manifestPath(table, v + 1), content))
-            committed = v + 1
-          else if (tornCasLanded(spark, table, v + 1, dirName))
-            committed = v + 1 // torn read-back: our publish DID land — adopt
-          else f.delete(dirPath, true) // stale-derived rewrite: recompute
+          val entry = writeEntry(survivors.unionByName(u), table,
+            if (statsCols.nonEmpty) statsCols else statsColsOf(entries))
+          Publish(untouched :+ entry, Seq(entry.dir), derived = true)
         }
       }
-      advancePointer(spark, table, committed)
-      committed
     } finally graft.CacheHygiene.release(u)
   }
 
@@ -1273,38 +1186,23 @@ object ManifestTable {
     */
   def compactCommit(spark: SparkSession, table: String,
       targetBytes: Long = 128L * 1024 * 1024,
-      statsCols: Seq[String] = Nil): Long = {
-    val root = new Path(table)
-    val f = fs(spark, root)
-    var committed = 0L
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
+      statsCols: Seq[String] = Nil): Long =
+    publish(spark, table) { (v, entries) =>
       require(v > 0, s"manifest-table: $table has no committed version")
-      // per-dir fs: clone entries may be absolute dirs on a foreign
-      // filesystem (compaction on a clone is the documented escape hatch
-      // from the source-vacuum hazard, so it MUST work on such entries)
-      val bytes = dataDirs(spark, table, v)
-        .map { d => val p = new Path(root, d)
-          fs(spark, p).getContentSummary(p).getLength }.sum
-      val nFiles = ParquetSink.targetFileCount(bytes, targetBytes)
-      val dirName = newDataDirName()
-      val dirPath = new Path(table, dirName)
-      read(spark, table, v).repartition(nFiles).write.parquet(dirPath.toString)
-      val entry = Entry(dirName, commitStats(spark, dirPath, statsCols))
-      // renderManifest, not a bare renderEntry: the #ts stamp must ride
-      // EVERY commit path — an unstamped compaction manifest would make
-      // versionAtTime refuse TIMESTAMP AS OF for every target at or
-      // below it (the legacy-manifest rule firing on a fresh commit)
-      if (casCreateFile(spark, manifestPath(table, v + 1),
-          renderManifest(spark, table, v, Seq(entry))))
-        committed = v + 1
-      else if (tornCasLanded(spark, table, v + 1, dirName))
-        committed = v + 1 // torn read-back: our publish DID land — adopt
-      else f.delete(dirPath, true) // stale-derived rewrite: recompute
+      val nFiles = ParquetSink.targetFileCount(snapshotBytes(spark, table, entries), targetBytes)
+      val entry = writeEntry(read(spark, table, v).repartition(nFiles), table, statsCols)
+      Publish(Seq(entry), Seq(entry.dir), derived = true)
     }
-    advancePointer(spark, table, committed)
-    committed
-  }
+
+  /** Bytes under a snapshot's data dirs. Per-dir fs: clone entries may be
+    * absolute dirs on a foreign filesystem (compaction on a clone is the
+    * documented escape hatch from the source-vacuum hazard, so it MUST
+    * work on such entries).
+    */
+  private def snapshotBytes(spark: SparkSession, table: String,
+      entries: Seq[Entry]): Long =
+    entries.map { e => val p = new Path(table, e.dir)
+      fs(spark, p).getContentSummary(p).getLength }.sum
 
   /** [[compactCommit]] that PRESERVES pruning: the snapshot is rewritten
     * into `buckets` range-clustered data dirs on `clusterCol` (one
@@ -1363,9 +1261,7 @@ object ManifestTable {
     val root = new Path(table)
     val f = fs(spark, root)
     val recordCols = (clusterCols ++ statsCols).distinct
-    var committed = 0L
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
+    publish(spark, table) { (v, head) =>
       require(v > 0, s"manifest-table: $table has no committed version")
       val snapshot = read(spark, table, v)
       clusterCols.foreach(c => require(snapshot.columns.contains(c),
@@ -1377,10 +1273,8 @@ object ManifestTable {
       // would erase it from the compacted snapshot
       require(!snapshot.columns.contains("_graft_ck"),
         "manifest-table: column name _graft_ck is reserved by compaction")
-      val bytes = dataDirs(spark, table, v)
-        .map { d => val p = new Path(root, d) // per-dir fs (clone entries)
-          fs(spark, p).getContentSummary(p).getLength }.sum
-      val nFiles = math.max(buckets, ParquetSink.targetFileCount(bytes, targetBytes))
+      val nFiles = math.max(buckets,
+        ParquetSink.targetFileCount(snapshotBytes(spark, table, head), targetBytes))
       // range partitions are ordered, so a contiguous pid->bucket map keeps
       // each bucket's slice of the cluster key disjoint
       val staging = new Path(root, s"data/.compact-${UUID.randomUUID().toString.take(8)}")
@@ -1422,38 +1316,13 @@ object ManifestTable {
             s"manifest-table: compaction could not move staged bucket " +
               s"${st.getPath} to $dirName - aborting before publish")
           Entry(dirName, bucketStats.getOrElse(bucket, Map.empty))
-        } else { // empty snapshot: keep the version readable (schema-only dir)
-          val dirName = newDataDirName()
-          snapshot.limit(0).write.parquet(new Path(root, dirName).toString)
-          Seq(Entry(dirName, Map.empty))
-        }
+        } else // empty snapshot: keep the version readable (schema-only dir)
+          Seq(emptyAnchor(spark, table, snapshot.schema))
       f.delete(staging, true) // _SUCCESS and empty shell
-      val content = renderManifest(spark, table, v, entries)
-      if (casCreateFile(spark, manifestPath(table, v + 1), content))
-        committed = v + 1
-      else if (tornCasLanded(spark, table, v + 1, entries.head.dir))
-        committed = v + 1 // torn read-back: our publish DID land — adopt
-      else entries.foreach(e => f.delete(new Path(root, e.dir), true))
+      Publish(entries, entries.map(_.dir), derived = true)
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
-  /** Delete data dirs no version ≥ (current - keepVersions + 1) references,
-    * superseded manifests, and crashed-publish temp files. Run once
-    * readers of old snapshots are done — the same retention contract as
-    * any table format. Manifests a stricter earlier vacuum already
-    * removed are skipped, and deletions are driven by a directory
-    * listing, so a vacuum's cost tracks actual garbage, not the
-    * table's age.
-    *
-    * Safe alongside an IN-FLIGHT commit: manifests numbered past the
-    * current pointer are treated as live (a writer mid-publish), and
-    * unmanifested data dirs / temp files are only reclaimed once older
-    * than `graceMs` — a data dir younger than that may simply not have
-    * its manifest yet (the Delta/Iceberg retention pattern). Keep
-    * graceMs comfortably above the longest commit's write time.
-    */
   /** SHALLOW CLONE (r15) — the zero-copy fork every lakehouse ships
     * (Delta `CLONE` semantics): `target` is created with ONE commit
     * whose entries reference the source snapshot's data dirs by
@@ -1475,24 +1344,16 @@ object ManifestTable {
     require(v > 0, s"manifest-table: $source has no committed version")
     require(versionExists(spark, source, v),
       s"manifest-table: clone source version $v of $source is not retained")
-    require(highestManifest(spark, target) == 0,
-      s"manifest-table: clone target $target already exists")
     val srcRoot = { val p = new Path(source); fs(spark, p).makeQualified(p) }
     val abs = manifestEntries(spark, source, v)
       .map(e => e.copy(dir = new Path(srcRoot, e.dir).toString))
-    if (!casCreateFile(spark, manifestPath(target, 1),
-        renderManifest(spark, target, 0, abs))) {
-      // torn-CAS recovery (the CommitStore contract): the publish may
-      // have LANDED with the false report. m-1 referencing exactly our
-      // snapshot's dirs proves it is this clone (ours, or an identical
-      // concurrent clone of the same source version — equivalent by
-      // content); anything else is a genuinely pre-existing target.
-      val landed = scala.util.Try(manifestEntries(spark, target, 1)).toOption
-      require(landed.exists(_.map(_.dir).toSet == abs.map(_.dir).toSet),
-        s"manifest-table: clone target $target already exists")
+    // single-shot: a lost creation CAS not adopted as ours (an identical
+    // concurrent clone of the same source version is equivalent by
+    // content) means the target genuinely exists, and the retry refuses
+    publish(spark, target) { (base, _) =>
+      require(base == 0, s"manifest-table: clone target $target already exists")
+      Publish(abs)
     }
-    advancePointer(spark, target, 1)
-    1L
   }
 
   /** RESTORE (r15) — rollback as a COMMIT (Delta `RESTORE` semantics):
@@ -1509,9 +1370,9 @@ object ManifestTable {
     require(toVersion > 0 && versionExists(spark, table, toVersion),
       s"manifest-table: version $toVersion of $table is not retained")
     val entries = manifestEntries(spark, table, toVersion)
-    var committed = 0L
-    while (committed == 0L) {
-      val base = highestManifest(spark, table)
+    // the restored SNAPSHOT is what's pinned, whatever version number it
+    // lands as
+    publish(spark, table) { (_, _) =>
       // re-validate PER ATTEMPT: a concurrent commit plus an aggressive
       // vacuum can retire toVersion (and delete its now-unreferenced
       // dirs) between our entry read and a late CAS win — publishing the
@@ -1522,17 +1383,25 @@ object ManifestTable {
       require(versionExists(spark, table, toVersion),
         s"manifest-table: version $toVersion of $table was vacuumed " +
           "mid-restore - aborting before publishing dangling dirs")
-      if (casCreateFile(spark, manifestPath(table, base + 1),
-          renderManifest(spark, table, base, entries)))
-        committed = base + 1
-      // else: lost a commit race — re-read the head and retry (the
-      // restored SNAPSHOT is what's pinned, whatever version number it
-      // lands as)
+      Publish(entries)
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
+  /** Delete data dirs no version ≥ (current - keepVersions + 1) references,
+    * superseded manifests, and crashed-publish temp files. Run once
+    * readers of old snapshots are done — the same retention contract as
+    * any table format. Manifests a stricter earlier vacuum already
+    * removed are skipped, and deletions are driven by a directory
+    * listing, so a vacuum's cost tracks actual garbage, not the
+    * table's age.
+    *
+    * Safe alongside an IN-FLIGHT commit: manifests numbered past the
+    * current pointer are treated as live (a writer mid-publish), and
+    * unmanifested data dirs / temp files are only reclaimed once older
+    * than `graceMs` — a data dir younger than that may simply not have
+    * its manifest yet (the Delta/Iceberg retention pattern). Keep
+    * graceMs comfortably above the longest commit's write time.
+    */
   def vacuum(spark: SparkSession, table: String, keepVersions: Int = 1,
       graceMs: Long = 60L * 60 * 1000): Unit = {
     require(keepVersions >= 1)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 
-import graft.sources.{CommitStore, ManifestTable, RenameCommitStore}
+import graft.sources.{CommitStore, GraftCatalog, ManifestTable, RenameCommitStore}
 
 /** A [[CommitStore]] that simulates the torn-CAS outcome the contract
   * warns about: when armed, ONE successful putIfAbsent is reported as
@@ -31,8 +31,39 @@ object TornOnceStore {
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
+/** A [[CommitStore]] that counts its calls per method — on an object
+  * store every call is a round trip, so the count is the protocol's
+  * latency floor per commit.
+  */
+class CountingStore extends CommitStore {
+  private val inner =
+    new RenameCommitStore(new org.apache.hadoop.conf.Configuration())
+  private def tick[A](op: String)(a: => A): A = {
+    CountingStore.calls.merge(op, 1, (x, y) => x + y); a
+  }
+  override def putIfAbsent(p: Path, content: String): Boolean =
+    tick("putIfAbsent")(inner.putIfAbsent(p, content))
+  override def putOverwrite(p: Path, content: String): Boolean =
+    tick("putOverwrite")(inner.putOverwrite(p, content))
+  override def read(p: Path): String = tick("read")(inner.read(p))
+  override def exists(p: Path): Boolean = tick("exists")(inner.exists(p))
+  override def listFiles(dir: Path): Seq[(String, Long)] =
+    tick("listFiles")(inner.listFiles(dir))
+  override def delete(p: Path): Unit = tick("delete")(inner.delete(p))
+}
+object CountingStore {
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  /** Per-method calls made by `body`. */
+  def during(body: => Unit): Map[String, Int] = {
+    calls.clear(); body
+    import scala.jdk.CollectionConverters._
+    calls.asScala.map { case (k, v) => k -> v.intValue }.toMap
+  }
+}
+
 /** r15 hardening specs for the manifest-table protocol edges a
-  * whole-file review surfaced: torn-CAS adoption in derived commits,
+  * whole-file review surfaced: torn-CAS adoption in every commit form,
+  * the store-call budget of the ingest path's commits,
   * commit-time stamps on compaction manifests, the `_graft_ck`
   * reservation, snapshotDiff's null-key refusal, and order-insensitive
   * append schema checks.
@@ -40,9 +71,10 @@ object TornOnceStore {
 class ManifestHardeningSpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
 
-  private def withTornStore[A](body: => A): A = {
+  private def withStore[S <: CommitStore](body: => Unit)(
+      implicit s: scala.reflect.ClassTag[S]): Unit = {
     val prior = spark.conf.getOption(CommitStore.ConfKey)
-    spark.conf.set(CommitStore.ConfKey, classOf[TornOnceStore].getName)
+    spark.conf.set(CommitStore.ConfKey, s.runtimeClass.getName)
     try body
     finally prior match {
       case Some(v) => spark.conf.set(CommitStore.ConfKey, v)
@@ -52,7 +84,7 @@ class ManifestHardeningSpec extends SparkSpec {
 
   test("torn-CAS adoption: derived commits adopt a landed publish instead of deleting its dir") {
     import spark.implicits._
-    withTornStore {
+    withStore[TornOnceStore] {
       val table = Files.createTempDirectory("graft_torn").toString + "/t"
       val v1 = ManifestTable.commit(
         (1 to 100).map(i => (i.toLong, s"r$i")).toDF("id", "v"),
@@ -88,6 +120,83 @@ class ManifestHardeningSpec extends SparkSpec {
       assert(ManifestTable.cloneShallow(spark, table, target) == 1L)
       assert(ManifestTable.read(spark, target).count() == 100,
         "adopted clone must read the source snapshot")
+
+      // restore mints no dir: the landed version is ours when its entry
+      // list equals ours — a retry would publish the rollback twice
+      TornOnceStore.armed.set(true)
+      val rv = ManifestTable.restore(spark, table, 1L)
+      assert(!TornOnceStore.armed.get(), "the torn report must have fired")
+      assert(rv == 4 && ManifestTable.currentVersion(spark, table) == 4)
+      assert(!ManifestTable.versionExists(spark, table, 5),
+        "adoption must not publish the restore a second time")
+      assert(ManifestTable.read(spark, table)
+        .filter(col("id") === 1L).select("v").head().getString(0) == "r1")
+
+      // metadata-only drop (no dir minted): adopted by entry list, and the
+      // pointer must advance — a lagging hint would serve the pre-drop
+      // snapshot to every reader
+      val dropT = Files.createTempDirectory("graft_torn_drop").toString + "/t"
+      ManifestTable.commit(Seq((1L, "a")).toDF("id", "v"), dropT,
+        append = false, statsCols = Seq("id"))
+      ManifestTable.commit(Seq((2L, "b")).toDF("id", "v"), dropT,
+        append = true, statsCols = Seq("id"))
+      TornOnceStore.armed.set(true)
+      val dv = ManifestTable.cowRewriteCommit(spark, dropT,
+        classify = (_, e) =>
+          if (BigDecimal(e.stats("id").max) <= 1) ManifestTable.CowDrop
+          else ManifestTable.CowKeep,
+        rewrite = identity)
+      assert(!TornOnceStore.armed.get(), "the torn report must have fired")
+      assert(dv == 3 && ManifestTable.currentVersion(spark, dropT) == dv)
+      assert(!ManifestTable.versionExists(spark, dropT, 4))
+      assert(ManifestTable.read(spark, dropT).count() == 1,
+        "the dropped commit must be gone from the current snapshot")
+
+      // the same drop through SQL DELETE FROM (metadata-only retention)
+      val root = Files.createTempDirectory("graft_torn_sql").toString
+      spark.conf.set("spark.sql.catalog.torncat", classOf[GraftCatalog].getName)
+      spark.conf.set("spark.sql.catalog.torncat.root", root)
+      ManifestTable.commit((1 to 100).map(i => (i.toLong, s"a$i")).toDF("id", "v"),
+        s"$root/t", append = false, statsCols = Seq("id"))
+      ManifestTable.commit((101 to 150).map(i => (i.toLong, s"b$i")).toDF("id", "v"),
+        s"$root/t", append = true, statsCols = Seq("id"))
+      TornOnceStore.armed.set(true)
+      spark.sql("DELETE FROM torncat.t WHERE id <= 100")
+      assert(!TornOnceStore.armed.get(), "the torn report must have fired")
+      assert(ManifestTable.currentVersion(spark, s"$root/t") == 3)
+      assert(!ManifestTable.versionExists(spark, s"$root/t", 4))
+      assert(spark.sql("SELECT count(*) FROM torncat.t").head().getLong(0) == 50)
+    }
+  }
+
+  test("store-call guard: idempotent append, its replay and a plain append stay within their round trips") {
+    import spark.implicits._
+    withStore[CountingStore] {
+      val table = Files.createTempDirectory("graft_calls").toString + "/t"
+      ManifestTable.commit((1 to 50).map(i => (i.toLong, s"a$i")).toDF("id", "v"),
+        table, append = false, statsCols = Seq("id"))
+      ManifestTable.commit((51 to 100).map(i => (i.toLong, s"b$i")).toDF("id", "v"),
+        table, append = true, statsCols = Seq("id"))
+      val batch = (101 to 110).map(i => (i.toLong, s"c$i")).toDF("id", "v")
+      // the ingest drain's per-micro-batch commit
+      val idem = CountingStore.during(assert(
+        ManifestTable.commitIdempotent(batch, table, "b3", Seq("id")) == 3))
+      // bounds: the single-loop protocol's counts are at most these
+      // (exists 2, listFiles 3, putIfAbsent 1, putOverwrite 1, read 7 = 14
+      // before the loops were folded)
+      val idemBound = Map("exists" -> 2, "listFiles" -> 3, "putIfAbsent" -> 1,
+        "putOverwrite" -> 1, "read" -> 7)
+      idem.foreach { case (op, n) =>
+        assert(n <= idemBound.getOrElse(op, 0), s"$op: $n calls in $idem") }
+      assert(idem.values.sum <= 14, s"$idem")
+      val replay = CountingStore.during(assert(
+        ManifestTable.commitIdempotent(batch, table, "b3", Seq("id")) == 3))
+      assert(replay.values.sum <= 5, s"replay: $replay")
+      val plain = CountingStore.during(assert(ManifestTable.commit(
+        batch, table, append = true, statsCols = Seq("id")) == 4))
+      assert(plain.values.sum <= 11, s"commit append: $plain")
+      info(s"commitIdempotent $idem; replay $replay; commit $plain")
+      assert(ManifestTable.read(spark, table).count() == 120)
     }
   }
 

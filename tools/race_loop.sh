@@ -9,13 +9,19 @@
 # tools/race_loop_results.txt so a 1-in-50 flake can't hide.
 #
 # Usage: tools/race_loop.sh [iterations] [stress_cores]
-#   defaults: 50 iterations, 16 stressor cores (half the rig).
+#   defaults: 50 iterations, half of `nproc` stressor cores (more
+#   oversubscribes the host instead of contending with the suites).
+# sbt picks up SBT_OPTS from the environment: export the tier-1 settings
+# (offline repositories, -Xmx4g) before running on an offline host.
 set -u
 cd "$(dirname "$0")/.."
 
 ITER="${1:-50}"
-STRESS="${2:-16}"
-SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec"
+HALF=$(( $(nproc) / 2 ))
+STRESS="${2:-$(( HALF > 0 ? HALF : 1 ))}"
+SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec \
+graft.ManifestHardeningSpec graft.MergeCommitSpec graft.CloneRestoreSpec \
+graft.GraftDeleteSpec"
 OUT="tools/race_loop_results.txt"
 
 # append (never truncate): the results file is the round's cumulative
