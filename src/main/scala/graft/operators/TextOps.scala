@@ -815,12 +815,15 @@ object TextOps {
     * size is the doc-length frame's row count, so there is no second
     * pass over the exploded tokens (the raw explode is the expensive
     * frame here). One definition keeps the two scorers' tokenization
-    * from ever diverging.
+    * from ever diverging; [[docTerms]] is its token stream, which the
+    * impact serve collects and counts on the driver.
     */
   private def termCounts(docs: DataFrame): DataFrame =
+    docTerms(docs).groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
+
+  private def docTerms(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(length(col("term")) > 0)
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
 
   /** Shared top-k tail for the lexical scorers: scores are already
     * round(6) so the (score desc, term asc) order is identical in every
@@ -947,14 +950,10 @@ object TextOps {
   private def bm25ScoreU(tf: DataFrame, dfc: DataFrame, stats: DataFrame,
       k1: Double, b: Double): DataFrame = {
     val dl = tf.groupBy("doc_id").agg(sum("n").as("len"))
-    val idf = log((col("nd").cast("double") - col("df") + 0.5) /
-      (col("df") + 0.5) + 1.0)
-    val norm = lit(k1) * (lit(1 - b) + lit(b) * col("len").cast("double") / col("avgl"))
     tf.join(dl, "doc_id").join(dfc, "term")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("term"),
-        round(idf * (col("n") * lit(k1 + 1)) / (col("n") + norm) * lit(1e6), 0)
-          .cast("long").as("score_u"))
+        scoreUExpr(k1, b, col("nd"), col("avgl")).as("score_u"))
   }
 
   /** A corpus's lexical context + its own scored frame: (dfc, stats,
@@ -1199,7 +1198,11 @@ object TextOps {
     *     the r19 guard scanned only posting heads in touched `tb`
     *     buckets, so a doc re-ingested with changed text (old postings
     *     in untouched buckets) or whose old postings had been evicted
-    *     from heads slipped through to duplicate representation.
+    *     from heads slipped through to duplicate representation;
+    *   - `_version` — the store's version stamp ([[ImpactHandle]]):
+    *     dropped first and rewritten last, so a serve never opens a
+    *     half-frozen store and the next serve of a re-frozen path
+    *     reopens instead of reusing the old version's handle.
     *
     * `corpus` must be the corpus docs only — never let a query batch
     * occupy posting slots (the q151 contract).
@@ -1208,6 +1211,7 @@ object TextOps {
       k1: Double = 1.2, b: Double = 0.75): Unit = {
     require(topPerTerm >= 1,
       s"writeImpactIndex: topPerTerm must be >= 1, got $topPerTerm")
+    ImpactHandle.unstamp(corpus.sparkSession, path)
     val (dfc, stats, corpusU, tf) =
       lexCorpusFrames(corpus, k1, b, materialize = true)
     val dfx = graft.CacheHygiene.materialize(dfc,
@@ -1228,6 +1232,7 @@ object TextOps {
       tf.select(col("doc_id").as("c_id")).distinct()
         .withColumn("ib", idBucket(col("c_id")))
         .write.mode("overwrite").partitionBy("ib").parquet(s"$path/ids")
+      ImpactHandle.restamp(corpus.sparkSession, path)
     } finally
       // the parquet tables ARE the output — nothing returned references
       // these frames, so a re-freeze loop (the impactIndexDrift cadence)
@@ -1268,13 +1273,19 @@ object TextOps {
     * Output is hash-identical to `impactSearch(…, instrument = false)`
     * over the same split (spec-pinned in ImpactIndexSpec).
     *
-    * Scale shape — the gate-family join direction throughout: the query
-    * batch (tiny) BROADCASTS into the scanned store, which never
-    * shuffles; both store scans are partition-PRUNED to the query terms'
-    * `tb` buckets (the bag's distinct buckets are collected first —
-    * ≤ [[ImpactTermBuckets]] ints of driver state); the per-(q,c) sum
-    * partial-aggregates map-side over a frame that is ≤ bag × topPerTerm
-    * rows whatever the corpus size.
+    * Serve-many shape: the store is opened once per version
+    * ([[ImpactHandle]] — pinned `postings/`/`df/`/`ids/` relations and the
+    * frozen context as driver scalars; a driver-side stamp read per
+    * request detects any write and reopens). A warm request then runs
+    * one collect — the query docs' (doc, term, tb) tokens, query-sized,
+    * counted on the driver — and one plan: the `df` scan, partition-
+    * PRUNED to those tokens' `tb` buckets, scores the terms with nd/avgl
+    * as literals, the bag window picks each doc's top terms, and the
+    * bag BROADCASTS into the postings scan pruned to the same buckets (a
+    * superset of the bag's, so no second collect); the per-(q,c) sum
+    * partial-aggregates map-side over ≤ bag × topPerTerm rows whatever
+    * the corpus size, and [[VectorOps.rankTopK]] ranks it. The store
+    * never shuffles, and the returned plan holds no checkpoint.
     */
   def impactSearchServe(queryDocs: DataFrame, path: String,
       qTerms: Int = 10, k: Int = 10,
@@ -1285,17 +1296,14 @@ object TextOps {
       s"impactSearchServe: bad params qTerms=$qTerms k=$k")
     freshnessCorpus.foreach(c =>
       requireImpactFresh(c, path, maxPsi, lenRatioBounds))
-    val h = serveBag(queryDocs, path, qTerms)
-    // qbag (aboard the returned plan) is the consumer's releaseTree to
-    // free; qtf's checkpoint is SEVERED from that plan by qbag's own
-    // materialization and fully consumed now — release it here or the
-    // serve-many loop leaks one query-batch frame per call
-    graft.CacheHygiene.release(h.qtf)
+    val spark = queryDocs.sparkSession
+    val h = ImpactHandle.of(spark, path)
+    val (qtf, tbs) = queryTermCounts(queryDocs)
+    val qbag = queryBag(frozenScoreU(h, broadcast(qtf), dfIn(h, spark, tbs)), qTerms)
     VectorOps.rankTopK(
-      h.postings.join(broadcast(h.qbag.select(col("q_id"), col("term"))), "term")
+      postingsIn(h, spark, tbs).join(broadcast(qbag.select(col("q_id"), col("term"))), "term")
         .groupBy("q_id", "c_id").agg(sum("score_u").as("lex_u")),
       "q_id", "c_id", "lex_u", k)
-      .select(col("q_id"), col("c_id"), col("lex_u"), col("rk"))
   }
 
   /** Refuse a DRIFTED frozen context — the gate-family staleness
@@ -1334,64 +1342,60 @@ object TextOps {
   }
 
   /** q145's quantized BM25 contribution as a column over a frame with
-    * `n`, `len`, `df`, `nd`, `avgl` in scope — the ONE formula the
-    * serve, the append scorer, and the gate's novel-mass read all
+    * `n`, `len` and `df` in scope — the ONE formula the in-plan scorers,
+    * the serve, the append scorer and the gate's novel-mass read all
     * restate (a drifted copy of it would silently de-sync a consumer
-    * from the store it reads).
+    * from the store it reads). `nd`/`avgl` are an in-plan stats row's
+    * columns, or an opened store's literals.
     */
-  private def frozenScoreUExpr(k1: Double, b: Double): Column = {
-    val idf = log((col("nd").cast("double") - col("df") + 0.5) /
+  private def scoreUExpr(k1: Double, b: Double, nd: Column, avgl: Column): Column = {
+    val idf = log((nd.cast("double") - col("df") + 0.5) /
       (col("df") + 0.5) + 1.0)
-    val norm = lit(k1) * (lit(1 - b) + lit(b) * col("len").cast("double") / col("avgl"))
+    val norm = lit(k1) * (lit(1 - b) + lit(b) * col("len").cast("double") / avgl)
     round(idf * (col("n") * lit(k1 + 1)) / (col("n") + norm) * lit(1e6), 0)
       .cast("long")
   }
 
-  /** Everything a serving read derives before scoring candidates —
-    * handed back whole so consumers never re-read what the head already
-    * computed (the r20 review caught [[impactGateEvidence]] re-reading
-    * stats/df and re-collecting the term buckets per micro-batch):
-    * `qbag` MATERIALIZED [q_id, term, q_score_u]; `postings` pruned to
-    * the bag's buckets; `qtf` MATERIALIZED (doc_id, term, n, len);
-    * `dfc` the (term, df) store scan pruned to the QUERY terms'
-    * buckets; `stats` the 1-row frozen-context frame with its k1/b
-    * already read. qbag rides aboard every consumer's returned plan
-    * (their releaseTree frees it); qtf MUST be released by the caller.
-    */
-  private final case class ServeHead(qbag: DataFrame, postings: DataFrame,
-      qtf: DataFrame, dfc: DataFrame, stats: DataFrame,
-      k1: Double, b: Double)
+  private def scoreUExpr(h: ImpactHandle): Column =
+    scoreUExpr(h.k1, h.b, lit(h.nd), lit(h.avgl))
 
-  private def serveBag(queryDocs: DataFrame, path: String,
-      qTerms: Int): ServeHead = {
-    val spark = queryDocs.sparkSession
-    val (postingsAll, dfAll, stats) = readImpactIndex(spark, path)
-    val st = stats.head() // 1 row: the frozen context
-    val k1 = st.getAs[Double]("k1")
-    val b = st.getAs[Double]("b")
-    val qtf = graft.CacheHygiene.materialize(
-      termCounts(queryDocs) // query-sized; carry len for the score expr
-        .withColumn("len", sum("n").over(Window.partitionBy("doc_id"))),
-      "impact serve query terms")
-    val qtbs = qtf.select(termBucket(col("term")).as("tb"))
-      .distinct().collect().map(_.getInt(0)) // ≤ ImpactTermBuckets ints
-    val dfc = dfAll.where(col("tb").isin(qtbs.map(Integer.valueOf): _*))
+  /** (doc_id, term, score_u) of a (doc_id, term, n, len) frame under an
+    * opened store's frozen context: terms without a row in `dfc` drop.
+    */
+  private def frozenScoreU(h: ImpactHandle, tf: DataFrame, dfc: DataFrame): DataFrame =
+    tf.join(dfc, Seq("term"))
+      .select(col("doc_id"), col("term"), scoreUExpr(h).as("score_u"))
+
+  /** The store's (term, df) rows in the `tbs` buckets — a pruned scan. */
+  private def dfIn(h: ImpactHandle, spark: SparkSession, tbs: Seq[Int]): DataFrame =
+    h.df(spark).where(col("tb").isin(tbs.map(Integer.valueOf): _*))
       .select(col("term"), col("df"))
-    // score the query docs against the FROZEN context: the df store scan
-    // stays shuffle-free — the query side broadcasts into it
-    val queryU = dfc
-      .join(broadcast(qtf), Seq("term"))
-      .crossJoin(broadcast(stats.select(col("nd"), col("avgl"))))
-      .select(col("doc_id"), col("term"),
-        frozenScoreUExpr(k1, b).as("score_u"))
-    val qbag = graft.CacheHygiene.materialize(
-      queryBag(queryU, qTerms), "impact serve query bag") // bag-sized
-    val btbs = qbag.select(termBucket(col("term")).as("tb"))
-      .distinct().collect().map(_.getInt(0))
-    val postings = postingsAll
-      .where(col("tb").isin(btbs.map(Integer.valueOf): _*))
+
+  /** The store's posting heads in the `tbs` buckets — a pruned scan. */
+  private def postingsIn(h: ImpactHandle, spark: SparkSession, tbs: Seq[Int]): DataFrame =
+    h.postings(spark).where(col("tb").isin(tbs.map(Integer.valueOf): _*))
       .select(col("term"), col("c_id"), col("score_u"))
-    ServeHead(qbag, postings, qtf, dfc, stats, k1, b)
+
+  /** The head of every read of an opened store (the serve and the
+    * gate): the docs' (doc_id, term, tb) tokens in one collect, counted
+    * on the driver into a local (doc_id, term, n, len) frame —
+    * [[termCounts]]'s rows without its shuffle — and the distinct `tb`
+    * buckets they touch (≤ [[ImpactTermBuckets]] ints). Query- or
+    * micro-batch-sized by contract: both consumers BROADCAST these
+    * counts into the store's df scan, so the driver holds them either
+    * way, and the token collect is of the same order.
+    */
+  private def queryTermCounts(queryDocs: DataFrame): (DataFrame, Seq[Int]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val toks = docTerms(queryDocs).withColumn("tb", termBucket(col("term")))
+    val rows = toks.collect()
+    val n = rows.groupMapReduce(r => (r.get(0), r.getString(1)))(_ => 1L)(_ + _)
+    val len = n.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val qtf = queryDocs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(n.toSeq.map { case ((d, t), c) => Row(d, t, c, len(d)) }: _*),
+      StructType(toks.schema.fields.take(2)).add("n", LongType).add("len", LongType))
+    (qtf, rows.map(_.getInt(2)).distinct.toSeq)
   }
 
   /** Per-batch-doc lexical duplicate evidence against a persisted
@@ -1406,35 +1410,42 @@ object TextOps {
     * content is NOVEL vocabulary keeps a large uncoverable self mass
     * and admits even when its only in-vocab terms are corpus-wide
     * filler — without the novel-mass component the gate would refuse
-    * precisely the freshest documents. Store never shuffles; everything
-    * right of the pruned head scan is batch-sized. The returned frame
-    * is MATERIALIZED (batch-bounded) with the serve head's checkpoints
-    * already released — the caller owns exactly one handle to free via
-    * [[graft.CacheHygiene.release]].
+    * precisely the freshest documents. The head is the serve's: the
+    * store's [[ImpactHandle]] and one collect of the batch's term counts,
+    * whose `tb` buckets prune both store scans; the bag is materialized
+    * (both the self mass and the candidate read consume it). Store never
+    * shuffles; everything right of the pruned head scan is batch-sized.
+    * The returned frame is MATERIALIZED (batch-bounded) with the bag's
+    * checkpoint already released — the caller owns exactly one handle
+    * to free via [[graft.CacheHygiene.release]].
     */
   private[operators] def impactGateEvidence(batch: DataFrame, path: String,
       qTerms: Int): DataFrame = {
-    val h = serveBag(batch, path, qTerms)
+    val spark = batch.sparkSession
+    val h = ImpactHandle.of(spark, path)
+    val (qtf, tbs) = queryTermCounts(batch)
+    val dfc = dfIn(h, spark, tbs)
+    val qbag = graft.CacheHygiene.materialize(
+      queryBag(frozenScoreU(h, broadcast(qtf), dfc), qTerms),
+      "impact gate bag") // bag-sized
     // in-vocab terms of the batch (batch-bounded: the covered side of
-    // the head's already-pruned df scan, independent of bag truncation)
-    val covered = h.dfc.select(col("term"))
-      .join(broadcast(h.qtf.select(col("doc_id"), col("term"))),
+    // the already-pruned df scan, independent of bag truncation)
+    val covered = dfc.select(col("term"))
+      .join(broadcast(qtf.select(col("doc_id"), col("term"))),
         Seq("term"))
       .select(col("doc_id"), col("term"))
     // novel terms score at df=0 — they mint no candidate evidence (no
     // postings exist) but their mass counts toward what a candidate
     // would have to cover
-    val novelU = h.qtf
+    val novelU = qtf
       .join(broadcast(covered), Seq("doc_id", "term"), "left_anti")
       .withColumn("df", lit(0L))
-      .crossJoin(broadcast(h.stats.select(col("nd"), col("avgl"))))
-      .select(col("doc_id").as("q_id"),
-        frozenScoreUExpr(h.k1, h.b).as("q_score_u"))
-    val selfU = h.qbag.select(col("q_id"), col("q_score_u"))
+      .select(col("doc_id").as("q_id"), scoreUExpr(h).as("q_score_u"))
+    val selfU = qbag.select(col("q_id"), col("q_score_u"))
       .unionByName(novelU)
       .groupBy("q_id").agg(sum("q_score_u").as("self_u"))
     val top = VectorOps.rankTopK(
-      h.postings.join(broadcast(h.qbag.select(col("q_id"), col("term"))), "term")
+      postingsIn(h, spark, tbs).join(broadcast(qbag.select(col("q_id"), col("term"))), "term")
         .groupBy("q_id", "c_id").agg(sum("score_u").as("lex_u")),
       "q_id", "c_id", "lex_u", k = 1)
       .select(col("q_id"), col("lex_u").as("top_u"), col("c_id").as("top_c_id"))
@@ -1443,7 +1454,7 @@ object TextOps {
         .select(col("q_id").as("doc_id"), col("self_u"),
           col("top_u"), col("top_c_id")),
       "impact gate evidence")
-    graft.CacheHygiene.release(h.qbag, h.qtf) // fully consumed by the materialize
+    graft.CacheHygiene.release(qbag) // fully consumed by the materialize
     out
   }
 
@@ -1459,18 +1470,19 @@ object TextOps {
   }
 
   /** The subset of `batchIds` (a `doc_id` column, batch-bounded)
-    * already present in the store's registry. Gate join direction: the
-    * registry scan prunes to the batch's own id buckets and STREAMS
-    * while the batch broadcasts — an anti-join against the raw registry
-    * would instead build/shuffle the corpus-sized side. Output is
-    * batch-bounded.
+    * already present in the store's registry — the `ids/` relation its
+    * [[ImpactHandle]] pinned, so no call re-lists it. Gate join
+    * direction: the registry scan prunes to the batch's own id buckets
+    * and STREAMS while the batch broadcasts — an anti-join against the
+    * raw registry would instead build/shuffle the corpus-sized side.
+    * Output is batch-bounded.
     */
   private[operators] def impactCollidingIds(batchIds: DataFrame,
       path: String): DataFrame = {
     val spark = batchIds.sparkSession
     val ibs = batchIds.select(idBucket(col("doc_id")).as("ib"))
       .distinct().collect().map(_.getInt(0)) // ≤ ImpactIdBuckets ints
-    impactRegisteredIds(spark, path)
+    ImpactHandle.of(spark, path).ids(spark)
       .where(col("ib").isin(ibs.map(Integer.valueOf): _*))
       .select(col("c_id").as("doc_id"))
       .join(broadcast(batchIds), Seq("doc_id"))
@@ -1526,10 +1538,7 @@ object TextOps {
   def impactIndexAppend(newDocs: DataFrame, path: String,
       ifAbsent: Boolean = false): Unit = {
     val spark = newDocs.sparkSession
-    val (postingsAll, dfAll, stats) = readImpactIndex(spark, path)
-    val st = stats.head()
-    val (k1, b) = (st.getAs[Double]("k1"), st.getAs[Double]("b"))
-    val topPerTerm = st.getAs[Int]("top_per_term")
+    val h = ImpactHandle.of(spark, path)
     val ntf0 = graft.CacheHygiene.materialize(termCounts(newDocs),
       "impact append terms")
     try {
@@ -1558,19 +1567,18 @@ object TextOps {
         if (ifAbsent) ntf0.join(broadcast(keepIds), Seq("doc_id"))
         else ntf0
       val newU = graft.CacheHygiene.materialize(
-        bm25ScoreU(ntf, dfAll.select(col("term"), col("df")),
-          stats.select(col("nd"), col("avgl")), k1, b),
+        frozenScoreU(h,
+          ntf.withColumn("len", sum("n").over(Window.partitionBy("doc_id"))),
+          h.df(spark).select(col("term"), col("df"))),
         "impact append postings")
       try {
         val touched = newU.select(termBucket(col("term")).as("tb"))
-          .distinct().collect().map(_.getInt(0)) // ≤ ImpactTermBuckets
+          .distinct().collect().map(_.getInt(0)).toSeq // ≤ ImpactTermBuckets
         if (touched.nonEmpty) {
           // whole touched buckets re-rank (they hold every term the
           // merge can move), so the dynamic overwrite below rewrites
           // exactly those partitions completely
-          val old = postingsAll
-            .where(col("tb").isin(touched.map(Integer.valueOf): _*))
-            .select(col("term"), col("c_id"), col("score_u"))
+          val old = postingsIn(h, spark, touched)
           // torn-store tripwire (r20 review): these docs passed the id
           // REGISTRY as unseen, so their postings must not already sit
           // in the heads — if they do, a previous append crashed between
@@ -1592,7 +1600,7 @@ object TextOps {
             .unionByName(newU
               .select(col("term"), col("doc_id").as("c_id"), col("score_u")))
           val merged = VectorOps.rankTopK(union,
-              "term", "c_id", "score_u", topPerTerm)
+              "term", "c_id", "score_u", h.topPerTerm)
             .select(col("term"), col("c_id"), col("score_u"), col("rk"))
             .withColumn("tb", termBucket(col("term")))
             // the self-read-then-overwrite hazard: the merged plan READS
@@ -1619,6 +1627,9 @@ object TextOps {
         keepIds.select(col("doc_id").as("c_id"))
           .withColumn("ib", idBucket(col("c_id")))
           .write.mode("append").partitionBy("ib").parquet(s"$path/ids")
+        // last: stamp the committed version and hand it to the registered
+        // handle, so the next read reuses it instead of reopening
+        ImpactHandle.appended(spark, path, h, postingsRewritten = touched.nonEmpty)
       } finally {
         graft.CacheHygiene.release(newU)
         graft.CacheHygiene.release(keepIds)

@@ -181,11 +181,8 @@ object GraftProcedures {
           docSource(s, a(1), usage), path(a, usage),
           qTerms = num(usage)(a.lift(2).map(_.toInt).getOrElse(10)),
           k = num(usage)(a.lift(3).map(_.toInt).getOrElse(10)))
-        val rows = res.collect().toSeq
-        // the serve's query-bag checkpoint rides aboard its plan; the
-        // collect was the final consumer
-        graft.CacheHygiene.releaseTree(res)
-        rows
+        // the serve's plan holds no checkpoint: nothing to release
+        res.collect().toSeq
       })))
 }
 

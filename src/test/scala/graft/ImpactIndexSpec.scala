@@ -1,26 +1,97 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import graft.operators.TextOps
+import org.apache.spark.sql.graft.ListenerBridge
+import graft.operators.{ImpactHandle, TextOps}
+import graft.streaming.BronzePipeline
 
 /** The impact index persistence lifecycle (r19):
   * writeImpactIndex/readImpactIndex/impactSearchServe/impactIndexDrift —
   * the lexical tier's build-once/serve-many form, parity with the IVF
-  * saveIvfIndex/loadIvfIndex family.
+  * saveIvfIndex/loadIvfIndex family — and the serve handle: one open per
+  * store version, a driver-side stamp check per request.
+  *
+  * Read-only tests share two stores frozen once per suite (the default
+  * context and a k1=2.0/b=0.5/topPerTerm=8 one); tests that write get a
+  * byte copy of one of them.
   */
 class ImpactIndexSpec extends SparkSpec {
+  import ImpactIndexSpec.Job
 
-  private def split(dir: String) = {
-    val docs = graft.sources.Tables.documents(spark, dir)
+  private def split(dir: String): (DataFrame, DataFrame, DataFrame) = split(spark, dir)
+
+  private def split(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val docs = graft.sources.Tables.documents(s, dir)
     (docs.filter(col("doc_id") >= 10L), docs.filter(col("doc_id") < 10L), docs)
   }
 
+  private def freeze(topPerTerm: Int = 16, k1: Double = 1.2, b: Double = 0.75): String = {
+    val p = Files.createTempDirectory("graft_impidx").toString + "/idx"
+    TextOps.writeImpactIndex(split(sfDir)._1, p, topPerTerm, k1, b)
+    p
+  }
+
+  private lazy val store = freeze()
+  private lazy val kbStore = freeze(topPerTerm = 8, k1 = 2.0, b = 0.5)
+
+  /** Copy every file of the store at `from` to `to` (created). */
+  private def copyTree(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.foreach { f =>
+      val t = Paths.get(to).resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+    } finally walk.close()
+  }
+
+  private def deleteTree(p: String): Unit = {
+    val walk = Files.walk(Paths.get(p))
+    try walk.iterator().asScala.toSeq.reverse.foreach((f: Path) => Files.delete(f))
+    finally walk.close()
+  }
+
+  /** A private byte copy of a suite store, for a test that writes. */
+  private def copyOf(from: String): String = {
+    val p = Files.createTempDirectory("graft_impcopy").toString + "/idx"
+    copyTree(from, p)
+    p
+  }
+
+  private def servedRows(queries: DataFrame, path: String): Set[(Long, Long, Long, Long)] =
+    TextOps.impactSearchServe(queries, path).collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("c_id"),
+        r.getAs[Long]("lex_u"), r.getAs[Long]("rk"))).toSet
+
+  private def jobsOf(s: SparkSession)(body: => Unit): Seq[Job] = {
+    val seen = new ConcurrentLinkedQueue[Job]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        seen.add(Job(
+          props.exists(_.getProperty("spark.sql.execution.id") != null),
+          props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")))
+      }
+    }
+    val sc = s.sparkContext
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBridge.drain(sc) } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  private def discovery(jobs: Seq[Job]): Seq[Job] =
+    jobs.filter(j => !j.inQuery || j.description.startsWith("Listing leaf files"))
+
   test("round-trip: serving from the persisted store is row-identical to the in-plan serving read (q152prod)") {
-    val (corpus, queries, docs) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impidx").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, path)
+    val (_, queries, docs) = split(sfDir)
+    val path = store
 
     val served = TextOps.impactSearchServe(queries, path).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("c_id"),
@@ -35,10 +106,9 @@ class ImpactIndexSpec extends SparkSpec {
   }
 
   test("frozen context: the serve scores with the STORE's k1/b, not defaults") {
-    val (corpus, queries, docs) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impidx_kb").toString + "/idx"
-    // freeze a non-default context; the serve takes no k1/b at all
-    TextOps.writeImpactIndex(corpus, path, topPerTerm = 8, k1 = 2.0, b = 0.5)
+    val (_, queries, docs) = split(sfDir)
+    // a non-default frozen context; the serve takes no k1/b at all
+    val path = kbStore
     val served = TextOps.impactSearchServe(queries, path).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("c_id"),
         r.getAs[Long]("lex_u"))).toSet
@@ -51,9 +121,8 @@ class ImpactIndexSpec extends SparkSpec {
   }
 
   test("serve join shape: the store never shuffles, even with auto-broadcast off; postings scan is partition-pruned on tb") {
-    val (corpus, queries, _) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impidx_plan").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, path)
+    val (_, queries, _) = split(sfDir)
+    val path = store
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -71,8 +140,7 @@ class ImpactIndexSpec extends SparkSpec {
   test("drift probe: fresh corpus reads stable, a shifted corpus trips PSI or len_ratio, missing histogram is loud") {
     import spark.implicits._
     val (corpus, _, _) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impidx_drift").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, path)
+    val path = store
 
     // same corpus → no drift, ratio exactly 1
     val same = TextOps.impactIndexDrift(corpus, path).head()
@@ -104,11 +172,7 @@ class ImpactIndexSpec extends SparkSpec {
   test("append: split-invariant exact head merge, untouched buckets byte-identical, appended docs served") {
     import spark.implicits._
     val (corpus, queries, _) = split(sfDir)
-    def freeze(): String = {
-      val p = java.nio.file.Files.createTempDirectory("graft_impapp").toString + "/idx"
-      TextOps.writeImpactIndex(corpus, p)
-      p
-    }
+    def freeze(): String = copyOf(store)
     def postings(p: String): Set[Seq[Any]] =
       spark.read.parquet(s"$p/postings").collect().map(_.toSeq).toSet
     // batches of NEW docs built from frozen-vocab words of the corpus
@@ -178,8 +242,7 @@ class ImpactIndexSpec extends SparkSpec {
   test("re-ingestion guard is EXACT (r20): a changed-text re-ingestion whose old postings sit in untouched buckets still refuses") {
     import spark.implicits._
     val (corpus, _, _) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impreg").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, path)
+    val path = copyOf(store)
     val vocab = corpus.select(org.apache.spark.sql.functions
         .explode(org.apache.spark.sql.functions.split($"text", " ")))
       .filter(org.apache.spark.sql.functions.length($"col") > 0)
@@ -208,8 +271,7 @@ class ImpactIndexSpec extends SparkSpec {
   test("ifAbsent append: replays are idempotent, mixed batches land only the unseen docs") {
     import spark.implicits._
     val (corpus, _, _) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impabs").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, path)
+    val path = copyOf(store)
     val vocab = corpus.select(org.apache.spark.sql.functions
         .explode(org.apache.spark.sql.functions.split($"text", " ")))
       .filter(org.apache.spark.sql.functions.length($"col") > 0)
@@ -228,8 +290,7 @@ class ImpactIndexSpec extends SparkSpec {
       .toDF("doc_id", "text")
     TextOps.impactIndexAppend(b1.unionByName(fresh), path, ifAbsent = true)
     val mixed = postings()
-    val control = Files.createTempDirectory("graft_impabs2").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, control)
+    val control = copyOf(store)
     TextOps.impactIndexAppend(b1, control)
     TextOps.impactIndexAppend(fresh, control)
     val controlSet =
@@ -241,8 +302,7 @@ class ImpactIndexSpec extends SparkSpec {
   test("freshness-gated serve (r20): a drifted corpus refuses, an appended-but-fresh one serves") {
     import spark.implicits._
     val (corpus, queries, _) = split(sfDir)
-    val path = Files.createTempDirectory("graft_impfresh").toString + "/idx"
-    TextOps.writeImpactIndex(corpus, path)
+    val path = copyOf(store)
     // the build corpus itself: fresh by construction → serves
     assert(TextOps.impactSearchServe(queries, path,
       freshnessCorpus = Some(corpus)).count() > 0)
@@ -279,5 +339,166 @@ class ImpactIndexSpec extends SparkSpec {
       TextOps.impactSearchServe(queries, bare))
     assert(e.getMessage.contains("writeImpactIndex"),
       s"partial store must point at the freeze path: ${e.getMessage}")
+
+    // a complete store WITHOUT its version stamp (a crashed freeze drops
+    // it first and writes it last) refuses too — also when a handle for
+    // it is already open
+    val unstamped = copyOf(store)
+    assert(TextOps.impactSearchServe(queries, unstamped).count() > 0)
+    Files.delete(Paths.get(unstamped, "_version"))
+    val e2 = intercept[IllegalArgumentException](
+      TextOps.impactSearchServe(queries, unstamped).collect())
+    assert(e2.getMessage.contains("version stamp") &&
+      e2.getMessage.contains("writeImpactIndex"), e2.getMessage)
+
+    // a copy that kept its stamp but lost a table refuses at open,
+    // naming the missing table
+    Seq("stats" -> "frozen scoring stats", "df" -> "df table").foreach { case (t, what) =>
+      val torn = copyOf(store)
+      deleteTree(s"$torn/$t")
+      val e3 = intercept[IllegalArgumentException](
+        TextOps.impactSearchServe(queries, torn).collect())
+      assert(e3.getMessage.contains(s"no $what") &&
+        e3.getMessage.contains("writeImpactIndex"), e3.getMessage)
+    }
   }
+
+  test("serve job guard: a warm request runs at most 8 jobs and re-discovers nothing") {
+    val (_, queries, _) = split(sfDir)
+    TextOps.impactSearchServe(queries, store).collect() // opens the handle
+    val warm = Seq.fill(2)(jobsOf(spark)(TextOps.impactSearchServe(queries, store).collect()))
+    warm.foreach { jobs =>
+      assert(jobs.size <= 8, s"a warm request ran ${jobs.size} jobs: $jobs")
+      assert(discovery(jobs).isEmpty,
+        s"a warm request listed files or inferred a schema: ${discovery(jobs)}")
+    }
+    // the guard reads what it means to: a store with no handle yet pays
+    // the listing and schema jobs outside any query
+    val fresh = copyOf(store)
+    val cold = jobsOf(spark)(TextOps.impactSearchServe(queries, fresh).collect())
+    assert(discovery(cold).nonEmpty, s"an open must discover the store: $cold")
+  }
+
+  test("serve leaves no checkpoint behind: 5 requests, persistent RDDs unchanged") {
+    val (_, queries, _) = split(sfDir)
+    TextOps.impactSearchServe(queries, store).collect()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    (1 to 5).foreach { _ =>
+      val res = TextOps.impactSearchServe(queries, store)
+      assert(res.collect().nonEmpty)
+      CacheHygiene.releaseTree(res)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("staleness: a request after an append retrieves the appended doc, in this session or another") {
+    import spark.implicits._
+    val (_, queries, _) = split(sfDir)
+    val path = copyOf(store)
+    // one short doc per word of query doc 3, the word repeated: each
+    // outscores the stored heads on its word, so the docs on the query's
+    // bag terms enter those heads and the query's serve retrieves them
+    val q3 = queries.filter(col("doc_id") === 3L)
+    val words = q3.select("text").as[String].head().split(" ").filter(_.nonEmpty).distinct
+    def batch(s: SparkSession, base: Long): (DataFrame, Set[Long]) = {
+      val rows = words.toSeq.zipWithIndex.map { case (w, i) => (base + i, Seq.fill(8)(w).mkString(" ")) }
+      (s.createDataFrame(rows).toDF("doc_id", "text"), rows.map(_._1).toSet)
+    }
+    def served(p: String): Set[Long] =
+      TextOps.impactSearchServe(q3, p, k = 1000).collect().map(_.getAs[Long]("c_id")).toSet
+    val (b1, ids1) = batch(spark, 900100L)
+    assert((served(path) & ids1).isEmpty) // the handle is open
+    TextOps.impactIndexAppend(b1, path)
+    assert((served(path) & ids1).nonEmpty,
+      "the appending session's next serve must see the appended docs")
+    // a writer in ANOTHER session: only the stamp tells this session's
+    // handle that postings/ changed under it
+    val (b2, ids2) = batch(spark.newSession(), 900200L)
+    TextOps.impactIndexAppend(b2, path)
+    assert((served(path) & ids2).nonEmpty,
+      "a serve after another session's append must see the appended docs")
+  }
+
+  test("staleness: a store replaced out of band serves the replacement, never the old rows") {
+    val (_, queries, _) = split(sfDir)
+    val path = copyOf(store)
+    val old = servedRows(queries, path) // the handle is open on the old store
+    val replacement = servedRows(queries, kbStore)
+    assert(old != replacement, "degenerate fixture: both freezes serve alike")
+    deleteTree(path)
+    copyTree(kbStore, path)
+    assert(servedRows(queries, path) == replacement,
+      "after the files changed under it, the serve must reopen")
+  }
+
+  test("handle registry: one open per (store, version), shared by every session; a re-freeze reopens") {
+    val (corpus, queries, _) = split(sfDir)
+    val path = copyOf(store)
+    servedRows(queries, path)
+    val stores = ImpactHandle.size
+    val warm = jobsOf(spark)(servedRows(queries, path))
+    assert(discovery(warm).isEmpty, s"same version, same session: $warm")
+    val other = spark.newSession()
+    val otherQueries = split(other, sfDir)._2
+    val shared = jobsOf(other)(TextOps.impactSearchServe(otherQueries, path).collect())
+    assert(discovery(shared).isEmpty, s"same version, another session: $shared")
+    assert(ImpactHandle.size == stores, "a second session must not register a second handle")
+    // a re-freeze in place (same files, new stamp) is a new version
+    TextOps.writeImpactIndex(corpus, path)
+    val reopened = jobsOf(spark)(servedRows(queries, path))
+    assert(discovery(reopened).nonEmpty, s"a new version must reopen: $reopened")
+    assert(servedRows(queries, path) == servedRows(queries, store))
+  }
+
+  test("lexGate drains share one handle: the second drain opens nothing and the registry does not grow") {
+    import spark.implicits._
+    val (corpus, _, _) = split(sfDir)
+    val root = Files.createTempDirectory("graft_impdrain").toString
+    val idx = s"$root/idx"
+    copyTree(store, idx)
+    val vocab = corpus.select(org.apache.spark.sql.functions
+        .explode(org.apache.spark.sql.functions.split($"text", " ")))
+      .filter(org.apache.spark.sql.functions.length($"col") > 0)
+      .distinct().limit(40).as[String].collect()
+    // each drain is its own streaming query, so its micro-batch runs in
+    // a session cloned for that query
+    def drain(batch: Seq[(String, String)]): Seq[Job] = {
+      rawPostings(batch).coalesce(1).write.mode("append").json(s"$root/staging")
+      jobsOf(spark)(BronzePipeline.ingest(spark, s"$root/staging", s"$root/bronze",
+        s"$root/meta", s"$root/ckpt", Seq(BronzePipeline.lexGate(idx))).awaitTermination())
+    }
+    def listings(jobs: Seq[Job], table: String): Seq[Job] = jobs.filter(j =>
+      j.description.startsWith("Listing leaf files") && j.description.contains(s"$idx/$table/"))
+    val opens0 = ImpactHandle.opens
+    val first = drain(Seq("d1" -> vocab.take(8).mkString(" "),
+      "d2" -> vocab.slice(8, 16).mkString(" ")))
+    val (opens1, stores) = (ImpactHandle.opens, ImpactHandle.size)
+    val second = drain(Seq("d3" -> vocab.slice(16, 24).mkString(" "),
+      "d4" -> vocab.slice(24, 32).mkString(" ")))
+    assert(opens1 == opens0 + 1, "the first drain opens the store once, gate and append together")
+    // an open is the only place the store's tables are listed from
+    // scratch and their schemas inferred
+    assert(ImpactHandle.opens == opens1, "the second drain reopened the store")
+    assert(ImpactHandle.size == stores, "a drain's cloned session must not register a handle")
+    // ids/ (64 buckets: a listing job) is listed by the first drain's
+    // open and its append's hand-off, and only by the hand-off after that
+    // — the gate's registry check reads the pinned relation
+    assert(listings(first, "ids").size == 2, s"first drain: ${listings(first, "ids")}")
+    assert(listings(second, "ids").size == 1, s"second drain: ${listings(second, "ids")}")
+    assert(TextOps.impactRegisteredIds(spark, idx)
+        .filter(col("c_id").isin(Seq("d1", "d2", "d3", "d4").map(xxhashOf): _*)).count() == 4,
+      "both drains' docs must land in the store")
+  }
+
+  private def xxhashOf(id: String): Long =
+    spark.range(1).select(org.apache.spark.sql.functions.xxhash64(
+      org.apache.spark.sql.functions.lit(id))).head().getLong(0)
+}
+
+object ImpactIndexSpec {
+  /** A job as the listener saw it: whether it ran inside a SQL execution
+    * (a query's own jobs do; the file listing and the parquet schema
+    * inference of resolving a relation do not) and its description.
+    */
+  final case class Job(inQuery: Boolean, description: String)
 }

@@ -8,6 +8,9 @@
 # while the suites run N times; every iteration's outcome lands in
 # tools/race_loop_results.txt so a 1-in-50 flake can't hide.
 #
+# The impact-index suites ride along because the serve-handle registry
+# (operators.ImpactHandle) is driver state shared by every session.
+#
 # Usage: tools/race_loop.sh [iterations] [stress_cores]
 #   defaults: 50 iterations, half of `nproc` stressor cores (more
 #   oversubscribes the host instead of contending with the suites).
@@ -21,7 +24,7 @@ HALF=$(( $(nproc) / 2 ))
 STRESS="${2:-$(( HALF > 0 ? HALF : 1 ))}"
 SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec \
 graft.ManifestHardeningSpec graft.MergeCommitSpec graft.CloneRestoreSpec \
-graft.GraftDeleteSpec"
+graft.GraftDeleteSpec graft.ImpactIndexSpec graft.ImpactDedupGateSpec"
 OUT="tools/race_loop_results.txt"
 
 # append (never truncate): the results file is the round's cumulative
