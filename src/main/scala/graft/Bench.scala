@@ -76,7 +76,7 @@ object Bench {
 
   // Bench-only PRODUCTION variant of q35: the oracled q35 times the
   // exact uncapped string-shingle form (the oracle needs exact strings);
-  // production runs DF-capped + hashed shingles (TUNING.md). Timed here
+  // production runs DF-capped + hashed shingles (docs/TUNING.md). Timed here
   // beside the exact form so the baseline carries both figures. The name
   // deliberately has no underscore so the summary's qNN shortener keeps
   // it distinct from q35 itself.

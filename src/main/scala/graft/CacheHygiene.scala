@@ -23,9 +23,9 @@ import org.apache.spark.sql.graft.ColumnBridge
   * checkpointed frames) and unpersist frames still in use.
   */
 object CacheHygiene {
-  /** Session flag selecting [[materialize]]'s mode — the cluster-posture
-    * seam (r19, extending shuffleRank's `reliable` parameter to the
-    * other lineage-truncating families): `false` (default) =
+  /** Session flag selecting [[materialize]]'s and [[materializeLazy]]'s
+    * mode — the cluster-posture seam (r19), the one switch for every
+    * lineage-truncating family: `false` (default) =
     * `localCheckpoint` into executor block storage (zero infrastructure,
     * fastest — right for local/bench, but losing an executor loses its
     * blocks and fails the JOB, since truncated lineage cannot recompute);
@@ -34,7 +34,7 @@ object CacheHygiene {
     * A session conf rather than a parameter on every operator because the
     * choice is a DEPLOYMENT property, not a per-call one: a preemptible
     * fleet wants every truncation reliable, a laptop wants none of them.
-    * See TUNING.md "Materialization posture at cluster scale".
+    * See docs/TUNING.md "Materialization posture at cluster scale".
     */
   val ReliableFlag = "spark.graft.reliableCheckpoints"
 
@@ -62,6 +62,22 @@ object CacheHygiene {
       df.checkpoint(eager = true)
     } else df.localCheckpoint(eager = true)
   }
+
+  /** [[materialize]] fused into the frame's first action. Local mode
+    * takes a LAZY `localCheckpoint`: the caller's next action computes,
+    * persists and lineage-truncates the frame in ONE job, where the
+    * eager form paid a materialize job plus that action (r21/r22: the
+    * connected-components rounds, the global rank, the BPE rounds).
+    * Only for a frame whose plan is deterministic under task retry
+    * (keyed aggs and joins, a range sort whose boundaries the
+    * partitioner holds): a retried partition must be bit-identical to
+    * the persisted one. Under [[ReliableFlag]] this is [[materialize]]:
+    * a lazy reliable checkpoint recomputes the frame to write it, the
+    * wrong trade on the cluster path the flag serves.
+    */
+  def materializeLazy(df: DataFrame, what: String): DataFrame =
+    if (df.sparkSession.conf.get(ReliableFlag, "false").toBoolean) materialize(df, what)
+    else df.localCheckpoint(eager = false)
 
   /** Unpersist the block-backed RDD behind checkpointed frames. No-op for
     * frames that are not themselves (possibly projected/filtered)

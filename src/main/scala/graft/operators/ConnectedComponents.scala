@@ -97,28 +97,16 @@ object ConnectedComponents {
     * it only when the fixpoint frame no longer reads it.
     */
   private def starFixpoint(edges: DataFrame, maxIter: Int): (DataFrame, DataFrame, Boolean) = {
-    val spark = edges.sparkSession
-    val reliable =
-      spark.conf.get(graft.CacheHygiene.ReliableFlag, "false").toBoolean
     // ONE execution of the caller's edge plan (for q94 that plan is the
     // whole near-dup pair mining) — nodes and the working edge set both
     // derive from this checkpoint. It backs the returned plan via
-    // `nodes`, so it is never released here. Local mode uses the LAZY
-    // localCheckpoint (r21, the same fusion the round frames got): the
-    // round-0 stats job below is the single first-touch action, so it
-    // computes, persists and lineage-truncates the mining in ONE job
-    // where the eager form paid a materialize job plus a convergence
-    // job. Deterministic under retry (keyed distinct over the caller's
-    // deterministic plan); reliable mode keeps the eager checkpoint (a
-    // lazy reliable checkpoint recomputes the frame to write it).
-    val basePlan = edges
+    // `nodes`, so it is never released here. The round-0 stats job below
+    // is its first-touch action (r21). Deterministic under retry (keyed
+    // distinct over the caller's deterministic plan).
+    val base = graft.CacheHygiene.materializeLazy(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val base =
-      if (reliable)
-        graft.CacheHygiene.materialize(basePlan, "connectedComponents base")
-      else basePlan.localCheckpoint(eager = false)
+      .distinct(), "connectedComponents base")
     // Round-0 working set: a plain filter VIEW over the base checkpoint —
     // its own checkpoint bought nothing (the filter re-reads base's
     // blocks) and cost one more driver-blocking job per closure (r21).
@@ -202,20 +190,12 @@ object ConnectedComponents {
     var converged = stats0._2
     var iter = 0
     while (!converged && iter < maxIter) {
-      // Local mode: LAZY localCheckpoint, so the stats aggregation below
-      // is the job that computes, persists AND lineage-truncates the
-      // round — one job per round instead of two (r21). Determinism
-      // under task retry holds: the star ops are deterministic keyed
-      // aggs/joins over a checkpointed input (no sampling, no rand), so
-      // a recomputed partition is bit-identical to the persisted one.
-      // Reliable mode keeps the EAGER checkpoint: a lazy reliable
-      // checkpoint recomputes the frame a second time to write it,
-      // which is the wrong trade on the cluster path the flag serves.
-      val next =
-        if (reliable)
-          graft.CacheHygiene.materialize(
-            smallStar(largeStar(cur)), "connectedComponents round edges")
-        else smallStar(largeStar(cur)).localCheckpoint(eager = false)
+      // the stats aggregation below is the round's first-touch action:
+      // one job per round (r21). Determinism under task retry holds: the
+      // star ops are deterministic keyed aggs/joins over a checkpointed
+      // input (no sampling, no rand).
+      val next = graft.CacheHygiene.materializeLazy(
+        smallStar(largeStar(cur)), "connectedComponents round edges")
       val (n, star) = roundStats(next)
       converged = star
       if (curOwned) graft.CacheHygiene.release(cur)

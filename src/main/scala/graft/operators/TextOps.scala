@@ -149,7 +149,7 @@ object TextOps {
   def q35NgramJaccard(s: SparkSession, d: String): DataFrame =
     ngramJaccard(documents(s, d), maxShingleDF = Int.MaxValue)
 
-  /** The PRODUCTION q35 shingle-DF cap (TUNING.md: "keep maxShingleDF
+  /** The PRODUCTION q35 shingle-DF cap (docs/TUNING.md: "keep maxShingleDF
     * capped and hashShingles=true in production"). ONE definition so the
     * bench variant and the scale probe always time the same workload. */
   val ProdMaxShingleDF = 64
@@ -1705,27 +1705,18 @@ object TextOps {
     * see FROZEN partition contents — recomputing the sorted frame
     * between passes could legally re-draw the range sampler's
     * boundaries and shift every rank — so the frame is materialized
-    * once. Two materialization modes (r14, the r13 verdict's item 5;
-    * see TUNING.md "shuffleRank materialization"):
-    *
-    *   - `reliable = false` (default): `localCheckpoint` — blocks live
-    *     in executor block storage, zero extra infrastructure, right
-    *     for local/bench use. Trade-off at cluster scale: the whole
-    *     sorted corpus occupies storage memory/disk, and lineage is
-    *     TRUNCATED — losing an executor loses its blocks and fails the
-    *     job (restart, not partition recompute).
-    *   - `reliable = true`: `checkpoint()` to the session's checkpoint
-    *     dir (HDFS/object store on a cluster) — executor loss re-reads
-    *     the lost partition from the checkpoint file instead of failing
-    *     the job. Costs a write of the sorted corpus to the reliable
-    *     store. Fails fast with a clear message if no checkpoint dir is
-    *     configured. Both modes produce identical ranks (spec-asserted).
+    * once, through [[graft.CacheHygiene.materializeLazy]]: a lazy
+    * `localCheckpoint` by default (blocks in executor storage; losing
+    * an executor fails the job), a reliable `checkpoint()` under
+    * `spark.graft.reliableCheckpoints=true` (executor loss re-reads the
+    * lost partition; needs a checkpoint dir and refuses without one).
+    * Both modes produce identical ranks (spec-asserted); see
+    * docs/TUNING.md "Materialization posture at cluster scale".
     */
-  def shuffleRank(docs: DataFrame, key: Column, salt: String,
-      reliable: Boolean = false): DataFrame =
+  def shuffleRank(docs: DataFrame, key: Column, salt: String): DataFrame =
     globalRankCore(
       docs.withColumn("__sk", md5(concat(lit(salt), key.cast("string")))),
-      Seq(col("__sk"), key), reliable, "shuffle_rank")._1.drop("__sk")
+      Seq(col("__sk"), key), "shuffle_rank")._1.drop("__sk")
 
   /** Distributed global rank over an ARBITRARY total order — the
     * [[shuffleRank]] machinery generalized from hash order to any unique
@@ -1734,25 +1725,13 @@ object TextOps {
     * row count (already on the driver from the offset pass — callers
     * binning rank into quantiles need it without a second scan).
     */
-  def globalRankBy(df: DataFrame, sortCols: Seq[Column],
-      reliable: Boolean = false): (DataFrame, Long) =
-    globalRankCore(df, sortCols, reliable, "global_rank")
+  def globalRankBy(df: DataFrame, sortCols: Seq[Column]): (DataFrame, Long) =
+    globalRankCore(df, sortCols, "global_rank")
 
   private def globalRankCore(df: DataFrame, sortCols: Seq[Column],
-      reliable: Boolean, outCol: String): (DataFrame, Long) = {
+      outCol: String): (DataFrame, Long) = {
     val s = df.sparkSession
     import s.implicits._
-    // the explicit parameter FORCES reliable mode; the session flag
-    // (spark.graft.reliableCheckpoints, r19) covers it too, so a
-    // deployment that sets the flag gets EVERY truncation reliable
-    // without auditing per-operator parameters — shuffleRank predates
-    // the flag and must not be the one site it silently misses
-    val rel = reliable ||
-      s.conf.get(graft.CacheHygiene.ReliableFlag, "false").toBoolean
-    if (rel)
-      require(s.sparkContext.getCheckpointDir.nonEmpty,
-        "globalRank(reliable = true) needs a checkpoint dir: call " +
-          "spark.sparkContext.setCheckpointDir(<HDFS/object-store path>) first")
     // r22 examined-and-rejected (r21 verdict item 6): lazy-checkpointing
     // the INPUT so the range sampler's pass doubles as its materialization
     // measured wall-neutral locally (r22 isolated probe, OPTIMIZATION_r22.md:
@@ -1769,18 +1748,13 @@ object TextOps {
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-    // Local mode: LAZY localCheckpoint — the counts aggregation below is
-    // the job that computes, persists and lineage-truncates the sorted
-    // frame, fusing what were two full passes (checkpoint job + counts
-    // job) into one (r21). The frozen-order contract holds: the range
-    // boundaries are sampled once when the exchange first executes and
-    // live in the partitioner, so a retried task re-sorts into identical
-    // partitions and every later read hits the persisted blocks.
-    // Reliable mode keeps the EAGER checkpoint (a lazy reliable
-    // checkpoint recomputes the frame to write it — wrong trade there).
-    val sorted =
-      if (rel) arranged.checkpoint(eager = true)
-      else arranged.localCheckpoint(eager = false)
+    // Local mode: the counts aggregation below is the job that computes,
+    // persists and lineage-truncates the sorted frame (r21). The
+    // frozen-order contract holds: the range boundaries are sampled once
+    // when the exchange first executes and live in the partitioner, so a
+    // retried task re-sorts into identical partitions and every later
+    // read hits the persisted blocks.
+    val sorted = graft.CacheHygiene.materializeLazy(arranged, "globalRank sorted frame")
     val counts = sorted.groupBy("__pid").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     // The local row_number() below is a 32-bit int; a range partition
@@ -1900,9 +1874,9 @@ object TextOps {
     * arithmetic (spec + oracle share the formula exactly).
     */
   def curriculumBins(scored: DataFrame, score: Column, id: Column,
-      k: Int, reliable: Boolean = false): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, s"curriculumBins: k must be positive, got $k")
-    val (ranked, total) = globalRankBy(scored, Seq(score, id), reliable)
+    val (ranked, total) = globalRankBy(scored, Seq(score, id))
     ranked
       .withColumn("curriculum_rank", col("global_rank"))
       .withColumn("bin",
@@ -3511,20 +3485,10 @@ object TextOps {
     */
   def bpeLearn(docs: DataFrame, merges: Int): Seq[(String, String)] = {
     require(merges >= 1, s"bpeLearn: merges must be >= 1, got $merges")
-    val spark = docs.sparkSession
-    val reliable =
-      spark.conf.get(graft.CacheHygiene.ReliableFlag, "false").toBoolean
-    // Local mode: LAZY localCheckpoint — each round's argmax collect is
-    // the single first-touch action, so it computes, persists and
-    // lineage-truncates the vocab frame in ONE job where the eager form
-    // paid a materialize job PLUS the argmax job per round (r22, the CC/
-    // globalRank fusion). Deterministic under retry: keyed agg + per-row
-    // fold over a checkpointed input. Reliable mode keeps the eager
-    // checkpoint (the cluster trade, as everywhere).
-    def ckpt(d: DataFrame, what: String): DataFrame =
-      if (reliable) graft.CacheHygiene.materialize(d, what)
-      else d.localCheckpoint(eager = false)
-    var cur = ckpt(docs
+    // each round's argmax collect is the single first-touch action of
+    // its vocab frame (r22). Deterministic under retry: keyed agg +
+    // per-row fold over a checkpointed input.
+    var cur = graft.CacheHygiene.materializeLazy(docs
       .select(explode(bpeTokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(charSyms(col("w")).as("sym"), col("n")), "bpe vocab")
@@ -3613,7 +3577,7 @@ object TextOps {
           // the LAST round never builds its merged frame — the learned
           // list is complete and nobody reads it (r22; the old loop paid
           // a full materialize job to throw the result away)
-          val next = ckpt(accepted.foldLeft(cur) { case (d, (a, b, _)) =>
+          val next = graft.CacheHygiene.materializeLazy(accepted.foldLeft(cur) { case (d, (a, b, _)) =>
             d.withColumn("sym", applyMerge(col("sym"), a, b))
           }, "bpe merged vocab")
           prev = cur

@@ -2138,7 +2138,7 @@ object VectorOps {
     * each vector appears in r buckets, so a budget of B rows buys
     * roughly B/r DISTINCT candidates. Scan-cost accounting is exact
     * (dedup happens after the probe join); when sizing for distinct
-    * candidates, multiply the target by assignReplicas — e.g. TUNING.md's
+    * candidates, multiply the target by assignReplicas — e.g. docs/TUNING.md's
     * "8 × sqrt(n)" guidance is a row budget, ≈ 4 × sqrt(n) distinct
     * vectors at the default r = 2.
     * Cost shape: bucket sizes are one ≤C-row aggregate broadcast to a
@@ -2213,7 +2213,7 @@ object VectorOps {
   private def shardOf(shards: Int): Column =
     pmod(xxhash64(lit("ivf-shard"), col("vec_id")), lit(shards)).cast("int")
 
-  /** The implemented form of TUNING.md's "shard the index" story — the
+  /** The implemented form of docs/TUNING.md's "shard the index" story — the
     * growth path past the documented single-index envelope (~4096
     * centroids / 16k-wide buckets / 2 MB centroid kernel): the corpus
     * splits by hash(vec_id) into `shards` INDEPENDENT sub-indexes, each

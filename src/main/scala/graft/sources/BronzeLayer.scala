@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Bronze raw layer: gzipped JSONL batches under time+source partition
@@ -18,15 +19,17 @@ object BronzeLayer {
   val rawColumns: Seq[String] =
     Seq("posting_id", "raw_content", "source", "extracted_at")
 
+  /** A raw row's bronze hour dir, as partition keys source/y/m/d/h. */
+  private val hourKeys: Seq[Column] = Seq(
+    col("source").as("p_source"),
+    date_format(col("extracted_at"), "yyyy").as("y"),
+    date_format(col("extracted_at"), "MM").as("m"),
+    date_format(col("extracted_at"), "dd").as("d"),
+    date_format(col("extracted_at"), "HH").as("h"))
+
   /** Write a raw batch as gzipped JSONL partitioned by source/y/m/d/h. */
   def writeRaw(df: DataFrame, path: String, batchId: String): Unit = {
-    df.select(
-        to_json(struct(rawColumns.map(col): _*)).as("value"),
-        col("source").as("p_source"),
-        date_format(col("extracted_at"), "yyyy").as("y"),
-        date_format(col("extracted_at"), "MM").as("m"),
-        date_format(col("extracted_at"), "dd").as("d"),
-        date_format(col("extracted_at"), "HH").as("h"))
+    df.select(to_json(struct(rawColumns.map(col): _*)).as("value") +: hourKeys: _*)
       .withColumn("batch_id", lit(batchId))
       .write
       .partitionBy("p_source", "y", "m", "d", "h", "batch_id")
@@ -69,7 +72,20 @@ object BronzeLayer {
     else readRawPaths(spark, path, dirs)
   }
 
-  private def readRawPaths(spark: SparkSession, basePath: String,
+  /** The bronze hour dirs under `path` that hold `rows`' (source, hour)
+    * pairs — the dirs [[writeRaw]] put them in, so reading them back
+    * gives every row of those hours, from any batch. Rows without a
+    * source or a time are left out: they have no (source, hour).
+    */
+  def hourDirs(rows: DataFrame, path: String): Seq[String] =
+    rows.filter(col("source").isNotNull && col("extracted_at").isNotNull)
+      .select(hourKeys: _*).distinct().collect().toSeq.map { r =>
+        r.schema.fieldNames.indices.map(i => ExternalCatalogUtils
+          .getPartitionPathString(r.schema.fieldNames(i), r.getString(i)))
+          .mkString(s"$path/", "/", "")
+      }
+
+  private[graft] def readRawPaths(spark: SparkSession, basePath: String,
       paths: Seq[String]): DataFrame = {
     val raw = spark.read
       .option("basePath", basePath)

@@ -26,10 +26,10 @@ trait Gate {
   def afterCommit(committed: => DataFrame): Unit = ()
 }
 
-/** End-to-end incremental bronze → silver pipeline: the reference's daily
+/** End-to-end incremental bronze → silver → gold pipeline: the reference's daily
   * Airflow pull + transform (finnoio/jobhouse dags/extract_raw_jobs.py)
   * as one Structured Streaming flow. Each scheduled invocation of
-  * [[runOnce]] drains every new bronze batch exactly once —
+  * [[runOnceToTable]] drains every new bronze batch exactly once —
   * `Trigger.AvailableNow` + the file-source checkpoint replace the DAG's
   * catchup/bookkeeping (the batch-mode equivalent is
   * `graft.sources.BatchRunner`), and a killed run resumes from the
@@ -37,6 +37,8 @@ trait Gate {
   *
   * Silver = typed/derived fields over the raw payload; heavyweight
   * cleaning stays in `operators.Lifecycle`, which reads this output.
+  * Every drain is one shape: [[drainBatches]] plus a ManifestTable
+  * commit per micro-batch.
   */
 object BronzePipeline {
 
@@ -341,34 +343,6 @@ object BronzePipeline {
       MixtureGate.gate(ratesPath), fingerprintDedupGate,
       contentGate(spark, fpStorePath)))
 
-  /** Streaming gold mart over the silver tail: per-source hourly posting
-    * counts and payload volume. Watermarked, so aggregation state stays
-    * bounded no matter how long the pipeline runs; append mode emits each
-    * hour exactly once — when the watermark passes it (a later hour's
-    * data arriving in this or a subsequent drain) — so repeated scheduled
-    * [[martRunOnce]] invocations build the mart incrementally with no
-    * overwrites and no recomputation. This is the reference's gold-mart
-    * box (docs/Pipeline Architecture.mermaid) as a continuous flow.
-    */
-  def goldMartStream(spark: SparkSession, bronzePath: String): DataFrame =
-    silverStream(spark, bronzePath)
-      .withWatermark("extracted_at", "1 hour")
-      .groupBy(col("source"), window(col("extracted_at"), "1 hour"))
-      .agg(count(lit(1)).as("n_postings"), sum("content_chars").as("total_chars"))
-      .select(col("source"), col("window.start").as("hour"),
-        col("n_postings"), col("total_chars"))
-
-  /** Drain available bronze into the incremental hourly mart and stop. */
-  def martRunOnce(spark: SparkSession, bronzePath: String, martPath: String,
-      checkpointPath: String): StreamingQuery =
-    goldMartStream(spark, bronzePath).writeStream
-      .format("parquet")
-      .option("path", martPath)
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** Stable-per-checkpoint identity: created once next to the checkpoint
     * and re-read on every restart, so replayed micro-batches keep their
     * batch ids (the exactly-once retry path needs that) while a rebuilt
@@ -409,26 +383,13 @@ object BronzePipeline {
     }
   }
 
-  /** Drain all currently-available bronze batches into silver parquet and
-    * stop. Exactly-once across invocations/crashes via the checkpoint.
-    */
-  def runOnce(spark: SparkSession, bronzePath: String, silverPath: String,
-      checkpointPath: String): StreamingQuery =
-    silverStream(spark, bronzePath).writeStream
-      .format("parquet")
-      .option("path", silverPath)
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[runOnce]] with silver as a [[ManifestTable]] instead of a plain
-    * parquet dir: each micro-batch is one atomic, token-idempotent commit,
-    * so readers get snapshot isolation (never a half-written drain),
-    * time travel across drains, and `readRange`/`readWhere` pruning on
-    * `extracted_date` — a date-scoped silver query at 100 TB reads only
-    * the drains whose recorded date range can match, without physical
-    * repartitioning by date.
+  /** Drain all currently-available bronze batches into silver, a
+    * [[ManifestTable]]: each micro-batch is one atomic, token-idempotent
+    * commit, so readers get snapshot isolation (never a half-written
+    * drain), time travel across drains, and `readRange`/`readWhere`
+    * pruning on `extracted_date` — a date-scoped silver query at 100 TB
+    * reads only the drains whose recorded date range can match, without
+    * physical repartitioning by date.
     *
     * Exactly-once is layered: the checkpoint makes each micro-batch
     * process once per run; [[ManifestTable.commitIdempotent]] makes the
@@ -438,31 +399,39 @@ object BronzePipeline {
     */
   def runOnceToTable(spark: SparkSession, bronzePath: String,
       silverTable: String, checkpointPath: String): StreamingQuery =
-    drainToTable(spark, silverStream(spark, bronzePath), silverTable,
-      checkpointPath, Seq("extracted_date", "source"))
+    drainBatches(spark, silverStream(spark, bronzePath), checkpointPath) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        ManifestTable.commitIdempotent(batch, silverTable, batchId,
+          statsCols = Seq("extracted_date", "source"))
+    }
 
-  /** [[martRunOnce]] with the gold mart as a [[ManifestTable]]: each
-    * drain's finalized hours land as one atomic commit with min/max
-    * stats on (`hour`, `source`), so a dashboard's "last 24 h" read
-    * prunes to the drains that closed those hours instead of scanning
-    * the mart's full history — the manifest standing in for physical
-    * hour-partitioning. Append-mode emission means commits carry
-    * disjoint hour sets (each hour finalizes exactly once), which is
-    * what makes the per-commit hour ranges selective.
+  /** The gold mart — the reference's gold box (docs/Pipeline
+    * Architecture.mermaid): per-(source, hour) posting counts and
+    * payload volume as a [[ManifestTable]]. The bronze stream is only
+    * the change feed: each micro-batch names the bronze hour dirs it
+    * touches ([[BronzeLayer.hourDirs]]), those hours are recomputed
+    * from ALL of bronze, and their rows replace the mart's through
+    * [[ManifestTable.mergeCommit]] keyed on (`source`, `hour`). No
+    * watermark and no streaming state: a late row corrects its hour, a
+    * drain split across micro-batches in any file order counts every
+    * row, a replayed micro-batch recomputes identical rows, and an open
+    * hour's row holds its bronze count so far. Commits record (`hour`,
+    * `source`) stats and the merge rewrites only the commits whose
+    * ranges overlap the touched keys, so a "last 24 h" read prunes to
+    * the commits holding those hours.
     */
   def martRunOnceToTable(spark: SparkSession, bronzePath: String,
       martTable: String, checkpointPath: String): StreamingQuery =
-    drainToTable(spark, goldMartStream(spark, bronzePath), martTable,
-      checkpointPath, Seq("hour", "source"))
-
-  /** Each non-empty micro-batch of `stream` as one idempotent commit to
-    * `table`. */
-  private def drainToTable(spark: SparkSession, stream: DataFrame,
-      table: String, checkpointPath: String,
-      statsCols: Seq[String]): StreamingQuery =
-    drainBatches(spark, stream, checkpointPath) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        ManifestTable.commitIdempotent(batch, table, batchId, statsCols = statsCols)
+    drainBatches(spark, BronzeLayer.readRawStream(spark, bronzePath), checkpointPath) {
+      (batch, _) =>
+        val hours = BronzeLayer.hourDirs(batch, bronzePath)
+        if (hours.nonEmpty)
+          ManifestTable.mergeCommit(spark, martTable,
+            BronzeLayer.readRawPaths(spark, bronzePath, hours)
+              .groupBy(col("source"), date_trunc("hour", col("extracted_at")).as("hour"))
+              .agg(count(lit(1)).as("n_postings"),
+                sum(length(col("raw_content"))).as("total_chars")),
+            keyCols = Seq("source", "hour"), statsCols = Seq("hour", "source"))
     }
 
   /** The scaffold every foreachBatch drain shares: run `body` on each

@@ -156,43 +156,6 @@ class BronzePipelineSpec extends SparkSpec {
       "the store survives restarts; the filter is never the record")
   }
 
-  test("streaming gold mart finalizes each hour exactly once across drains") {
-    val root = Files.createTempDirectory("graft_mart").toString
-    val bronze = s"$root/bronze"
-    val mart = s"$root/mart"
-    val checkpoint = s"$root/ckpt"
-    def landAt(batchId: String, ids: Seq[String], hour: Int): Unit = {
-      import spark.implicits._
-      val df = ids.map(id => (id, s"content-$id", "hh", f"2024-09-23 $hour%02d:10:00"))
-        .toDF("posting_id", "raw_content", "source", "extracted_at")
-        .withColumn("extracted_at", to_timestamp(col("extracted_at")))
-      BronzeLayer.writeRaw(df, bronze, batchId)
-    }
-    def drain(): Unit =
-      BronzePipeline.martRunOnce(spark, bronze, mart, checkpoint).awaitTermination()
-
-    landAt("b1", Seq("p1", "p2"), hour = 10)
-    drain()
-    landAt("b2", Seq("p3"), hour = 12)
-    drain()
-    landAt("b3", Seq("p4"), hour = 14)
-    drain()
-
-    val rows = spark.read.parquet(mart).collect()
-      .map(r => r.getAs[java.sql.Timestamp]("hour").toString ->
-        ((r.getAs[Long]("n_postings"), r.getAs[Long]("total_chars"))))
-    // hour 10 closed by hour-12 data; emitted once with both rows
-    val h10 = rows.filter(_._1.startsWith("2024-09-23 10"))
-    assert(h10.length == 1, s"hour 10 must finalize exactly once, got ${rows.mkString(";")}")
-    assert(h10.head._2 == ((2L, 20L)), s"got ${h10.head._2}")
-    // hour 14 is still open (nothing later arrived): never emitted early
-    assert(!rows.exists(_._1.startsWith("2024-09-23 14")), "open window must not emit")
-
-    // an empty drain adds nothing (idempotent scheduled run)
-    drain()
-    assert(spark.read.parquet(mart).count() == rows.length.toLong)
-  }
-
   test("a rebuilt checkpoint gets a fresh batch namespace (no silent drops)") {
     val root = Files.createTempDirectory("graft_gated_ckpt").toString
     val staging = s"$root/staging"
@@ -218,36 +181,6 @@ class BronzePipelineSpec extends SparkSpec {
     assert(rows.select("raw_content").distinct().count() == 2)
   }
 
-  test("bronze to silver drains incrementally, exactly once across restarts") {
-    val root = Files.createTempDirectory("graft_pipeline").toString
-    val bronze = s"$root/bronze"
-    val silver = s"$root/silver"
-    val checkpoint = s"$root/checkpoint"
-
-    writeRawBatch(bronze, "b1", Seq("p1", "p2"))
-    writeRawBatch(bronze, "b2", Seq("p3"))
-    BronzePipeline.runOnce(spark, bronze, silver, checkpoint).awaitTermination()
-    val run1 = spark.read.parquet(silver)
-    assert(run1.count() == 3)
-    assert(run1.columns.toSet.contains("etag") && run1.columns.toSet.contains("extracted_date"))
-
-    // new batch arrives; the next scheduled invocation drains ONLY it
-    writeRawBatch(bronze, "b3", Seq("p4", "p5"))
-    BronzePipeline.runOnce(spark, bronze, silver, checkpoint).awaitTermination()
-    val run2 = spark.read.parquet(silver)
-    assert(run2.count() == 5, "b1/b2 must not be reprocessed")
-    assert(run2.select("posting_id").distinct().count() == 5)
-
-    // idempotent no-op when nothing new arrived
-    BronzePipeline.runOnce(spark, bronze, silver, checkpoint).awaitTermination()
-    assert(spark.read.parquet(silver).count() == 5)
-
-    // silver fields derive from the payload
-    val row = spark.read.parquet(silver).filter(col("posting_id") === "p1").head()
-    assert(row.getAs[String]("etag").length == 32)
-    assert(row.getAs[Long]("content_chars") == "content-p1".length.toLong)
-  }
-
   test("silver as a manifest table: atomic per-drain commits, pruned date reads") {
     import graft.sources.ManifestTable
     val root = Files.createTempDirectory("graft_pipeline_mt").toString
@@ -268,6 +201,8 @@ class BronzePipelineSpec extends SparkSpec {
     val v2 = ManifestTable.currentVersion(spark, silver)
     assert(v2 > v1, "a new drain must be a new commit")
     assert(ManifestTable.read(spark, silver).count() == 3)
+    assert(ManifestTable.read(spark, silver).select("posting_id").distinct().count() == 3,
+      "b1 must not be reprocessed")
     // time travel: the pre-drain snapshot is still readable, pinned
     assert(ManifestTable.read(spark, silver, v1).count() == 2)
 
@@ -276,7 +211,9 @@ class BronzePipelineSpec extends SparkSpec {
     assert(ManifestTable.currentVersion(spark, silver) == v2,
       "an empty drain must not create a version")
 
-    // silver fields survive the table path
+    // silver fields derive from the payload
+    assert(Set("etag", "content_chars", "extracted_date")
+      .subsetOf(ManifestTable.read(spark, silver).columns.toSet))
     val row = ManifestTable.read(spark, silver)
       .filter(col("posting_id") === "p1").head()
     assert(row.getAs[String]("etag").length == 32)
@@ -333,31 +270,24 @@ class BronzePipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_mart_mt").toString
     val bronze = s"$root/bronze"
     val mart = s"$root/mart_table"
-    val checkpoint = s"$root/ckpt"
-    def landAt(batchId: String, ids: Seq[String], hour: Int): Unit = {
-      import spark.implicits._
-      val df = ids.map(id => (id, s"content-$id", "hh", f"2024-09-23 $hour%02d:10:00"))
-        .toDF("posting_id", "raw_content", "source", "extracted_at")
-        .withColumn("extracted_at", to_timestamp(col("extracted_at")))
-      BronzeLayer.writeRaw(df, bronze, batchId)
-    }
-    def drain(): Unit =
-      BronzePipeline.martRunOnceToTable(spark, bronze, mart, checkpoint).awaitTermination()
+    def drain(): Unit = martDrain(bronze, mart, s"$root/ckpt")
 
-    landAt("b1", Seq("p1", "p2"), hour = 10)
+    landAt(bronze, "b1", Seq("p1", "p2"), hour = 10)
     drain()
-    landAt("b2", Seq("p3"), hour = 12)
-    drain() // hour 10 closes here -> first mart commit
-    landAt("b3", Seq("p4"), hour = 14)
-    drain() // hour 12 closes here -> second commit
+    landAt(bronze, "b2", Seq("p3"), hour = 12)
+    drain()
+    landAt(bronze, "b3", Seq("p4"), hour = 14)
+    drain()
 
-    val rows = ManifestTable.read(spark, mart).collect()
-      .map(r => r.getAs[java.sql.Timestamp]("hour").toString ->
-        ((r.getAs[Long]("n_postings"), r.getAs[Long]("total_chars"))))
-    val h10 = rows.filter(_._1.startsWith("2024-09-23 10"))
+    val rows = goldRows(mart)
+    val h10 = rows.filter(_._1 == "hh|2024-09-23 10")
     assert(h10.length == 1 && h10.head._2 == ((2L, 20L)),
-      s"hour 10 must finalize exactly once, got ${rows.mkString(";")}")
-    assert(!rows.exists(_._1.startsWith("2024-09-23 14")), "open window must not emit")
+      s"hour 10 must land exactly once, got ${rows.mkString(";")}")
+    // hour 14 is still open (nothing later arrived): its row holds its
+    // bronze count so far, and the next drain touching it replaces it
+    assert(rows.filter(_._1 == "hh|2024-09-23 14").map(_._2) == Seq((1L, 10L)),
+      s"the open hour's row must equal its bronze count so far, got ${rows.mkString(";")}")
+    assert(rows.toMap == bronzeHours(bronze))
 
     // the "recent hours" dashboard read prunes on the commits' hour stats
     val recent = ManifestTable.readRange(spark, mart,
@@ -366,9 +296,115 @@ class BronzePipelineSpec extends SparkSpec {
     assert(ManifestTable.readRange(spark, mart,
       "hour", "2024-09-24 00:00:00", "2024-09-25 00:00:00").count() == 0)
 
-    // an empty drain is a scheduled no-op at the table level too
+    // an empty drain is a scheduled no-op: no version, no rows
     val v = ManifestTable.currentVersion(spark, mart)
     drain()
     assert(ManifestTable.currentVersion(spark, mart) == v)
+    assert(goldRows(mart) == rows)
   }
+
+  test("gold mart counts every row of a drain split across micro-batches, in any file order") {
+    val root = Files.createTempDirectory("graft_mart_split").toString
+    val bronze = s"$root/bronze"
+    val mart = s"$root/mart_table"
+    // hour 12's 32 files land BEFORE hour 10's 5, so the drain's first
+    // two 16-file micro-batches hold hour 12 only: a watermark on event
+    // time would pass hour 10 before any of its rows streamed. The file
+    // stream takes the oldest files first; the landing times are set
+    // apart explicitly, as a coarse mtime clock would tie them
+    landAt(bronze, "b1", (1 to 32).map(i => s"late$i"), hour = 12, files = 32)
+    landAt(bronze, "b2", (1 to 5).map(i => s"early$i"), hour = 10, files = 5)
+    Seq(12 -> 1700000000000L, 10 -> 1700000600000L).foreach { case (h, ms) =>
+      Files.walk(java.nio.file.Paths.get(bronze, s"p_source=hh/y=2024/m=09/d=23/h=$h"))
+        .filter(Files.isRegularFile(_)).forEach(f => f.toFile.setLastModified(ms))
+    }
+    val q = BronzePipeline.martRunOnceToTable(spark, bronze, mart, s"$root/ckpt")
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
+      "the drain must span several micro-batches")
+
+    val rows = goldRows(mart)
+    assert(rows.filter(_._1 == "hh|2024-09-23 10").map(_._2._1) == Seq(5L),
+      s"hour 10's rows streamed after hour 12's must all count, got ${rows.mkString(";")}")
+    assert(rows.map(_._2._1).sum == 37L, "the split drain must lose 0 postings")
+    assert(rows.toMap == bronzeHours(bronze))
+  }
+
+  test("gold mart: a late row corrects its already-published hour") {
+    val root = Files.createTempDirectory("graft_mart_late").toString
+    val bronze = s"$root/bronze"
+    val mart = s"$root/mart_table"
+    def drain(): Unit = martDrain(bronze, mart, s"$root/ckpt")
+
+    landAt(bronze, "b1", Seq("p1", "p2"), hour = 10)
+    drain()
+    landAt(bronze, "b2", Seq("p3"), hour = 12)
+    drain()
+    // an hour-10 posting arrives after hour 12's: it lands in hour 10
+    landAt(bronze, "b3", Seq("p4"), hour = 10)
+    drain()
+    val rows = goldRows(mart)
+    assert(rows.filter(_._1 == "hh|2024-09-23 10").map(_._2) == Seq((3L, 30L)),
+      s"the late row must correct hour 10, got ${rows.mkString(";")}")
+    assert(rows.toMap == bronzeHours(bronze))
+  }
+
+  test("gold mart replay: a micro-batch re-run after its commit marker is lost recomputes identical rows") {
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("graft_mart_replay").toString
+    val bronze = s"$root/bronze"
+    val mart = s"$root/mart_table"
+    val checkpoint = s"$root/ckpt"
+
+    landAt(bronze, "b1", Seq("p1", "p2"), hour = 10)
+    martDrain(bronze, mart, checkpoint)
+    landAt(bronze, "b2", Seq("p3"), hour = 12)
+    landAt(bronze, "b3", Seq("p4"), hour = 10)
+    martDrain(bronze, mart, checkpoint)
+    val before = goldRows(mart)
+    val v = ManifestTable.currentVersion(spark, mart)
+
+    // a crash after the gold commit but before the stream recorded it:
+    // the last micro-batch's commit marker is gone, so the next drain
+    // re-runs that batch over the same files
+    val commits = new java.io.File(s"$checkpoint/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Seq(last, s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    val q = BronzePipeline.martRunOnceToTable(spark, bronze, mart, checkpoint)
+    q.awaitTermination()
+    assert(q.recentProgress.exists(_.numInputRows > 0), "the lost batch must re-run")
+    assert(ManifestTable.currentVersion(spark, mart) > v, "the replay must recommit")
+    assert(goldRows(mart) == before, "a replayed batch must recompute identical rows")
+  }
+
+  private def martDrain(bronze: String, mart: String, checkpoint: String): Unit =
+    BronzePipeline.martRunOnceToTable(spark, bronze, mart, checkpoint).awaitTermination()
+
+  /** Land `ids` as bronze batch `batchId` at `hour`, one file per
+    * `ids.size / files` ids, written in order. */
+  private def landAt(bronze: String, batchId: String, ids: Seq[String], hour: Int,
+      files: Int = 1): Unit = {
+    import spark.implicits._
+    ids.grouped(math.max(1, ids.size / files)).foreach { part =>
+      val df = part.map(id => (id, s"content-$id", "hh", f"2024-09-23 $hour%02d:10:00"))
+        .toDF("posting_id", "raw_content", "source", "extracted_at")
+        .withColumn("extracted_at", to_timestamp(col("extracted_at")))
+      BronzeLayer.writeRaw(df.coalesce(1), bronze, batchId)
+    }
+  }
+
+  /** The gold mart's rows as ("source|yyyy-MM-dd HH", (n_postings, total_chars)). */
+  private def goldRows(mart: String): Seq[(String, (Long, Long))] =
+    graft.sources.ManifestTable.read(spark, mart)
+      .select(concat_ws("|", col("source"), date_format(col("hour"), "yyyy-MM-dd HH")),
+        col("n_postings"), col("total_chars"))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toSeq.sorted
+
+  /** The same figures counted straight from every bronze row. */
+  private def bronzeHours(bronze: String): Map[String, (Long, Long)] =
+    BronzeLayer.readRaw(spark, bronze).collect().groupBy(r =>
+      s"${r.getAs[String]("source")}|${r.getAs[String]("y")}-${r.getAs[String]("m")}-" +
+        s"${r.getAs[String]("d")} ${r.getAs[String]("h")}")
+      .map { case (k, rs) => k -> ((rs.length.toLong,
+        rs.map(_.getAs[String]("raw_content").length.toLong).sum)) }
 }

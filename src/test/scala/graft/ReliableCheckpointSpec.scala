@@ -8,20 +8,10 @@ import graft.operators.{ConnectedComponents, SemanticDedupGate, VectorOps}
   * rounds, the widthCappedPairs bucket frame, the BronzePipeline/gate
   * batch materializations) through a RELIABLE `checkpoint()` instead of
   * `localCheckpoint` — identical results, different executor-loss
-  * blast radius. shuffleRank's `reliable` parameter has its own spec in
-  * TextOpsSpec; this covers the conf-driven families.
+  * blast radius. shuffleRank's refusal without a dir has its own spec
+  * in TextOpsSpec; this covers the other families.
   */
 class ReliableCheckpointSpec extends SparkSpec {
-
-  private def withFlag[A](on: Boolean)(body: => A): A = {
-    val prior = spark.conf.getOption(CacheHygiene.ReliableFlag)
-    spark.conf.set(CacheHygiene.ReliableFlag, on.toString)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(CacheHygiene.ReliableFlag, v)
-      case None    => spark.conf.unset(CacheHygiene.ReliableFlag)
-    }
-  }
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
@@ -60,8 +50,7 @@ class ReliableCheckpointSpec extends SparkSpec {
         "reliable lexical term frame must serve identically to the local mode")
       assert(rows(graft.operators.TextOps
           .shuffleRank(docs.select($"doc_id"), $"doc_id", "spec:")) == localRank,
-        "shuffleRank must honor the session flag (reliable=false param or " +
-          "not, a flagged session gets reliable truncation) with identical ranks")
+        "shuffleRank must honor the session flag with identical ranks")
       assert(rows(VectorOps.pqTopk(emb)) == localPq,
         "the PQ family's shared score frame must rank identically under the flag")
       // the frames really did route through the reliable path: the

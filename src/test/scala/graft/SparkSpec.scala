@@ -9,6 +9,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Run `body` with `spark.graft.reliableCheckpoints` set to `on`. */
+  def withFlag[A](on: Boolean)(body: => A): A = {
+    val prior = spark.conf.getOption(CacheHygiene.ReliableFlag)
+    spark.conf.set(CacheHygiene.ReliableFlag, on.toString)
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(CacheHygiene.ReliableFlag, v)
+      case None    => spark.conf.unset(CacheHygiene.ReliableFlag)
+    }
+  }
+
   /** Raw-posting frame in BronzeLayer.rawColumns shape — the single
     * fixture for every ingest/runner/pipeline spec. */
   def rawPostings(rows: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {

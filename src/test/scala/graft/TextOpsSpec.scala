@@ -324,17 +324,20 @@ class TextOpsSpec extends SparkSpec {
     val prior = spark.sparkContext.getCheckpointDir
     assert(prior.isEmpty || prior.exists(_.nonEmpty)) // snapshot for restore
     if (prior.isEmpty) {
-      val e = intercept[IllegalArgumentException](
-        TextOps.shuffleRank(docs, $"doc_id", "spec:", reliable = true))
+      val e = intercept[IllegalArgumentException](withFlag(on = true)(
+        TextOps.shuffleRank(docs, $"doc_id", "spec:")))
       assert(e.getMessage.contains("checkpoint dir"), e.getMessage)
     }
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val rel = TextOps.shuffleRank(docs, $"doc_id", "spec:", reliable = true)
-        .select($"doc_id", $"shuffle_rank")
-      assert(rel.except(dist).isEmpty && dist.except(rel).isEmpty,
+      val rel = withFlag(on = true)(TextOps.shuffleRank(docs, $"doc_id", "spec:")
+        .select($"doc_id", $"shuffle_rank").collect().toSet)
+      assert(rel == dist.collect().toSet,
         "reliable and local checkpoint modes must produce identical ranks")
+      val ckpts = new java.io.File(dir).listFiles()
+      assert(ckpts != null && ckpts.nonEmpty,
+        "reliable mode must write under the checkpoint dir")
     } finally prior match {
       case Some(p) => spark.sparkContext.setCheckpointDir(p)
       case None    => // no public unset; later suites don't depend on it

@@ -9,7 +9,9 @@
 # tools/race_loop_results.txt so a 1-in-50 flake can't hide.
 #
 # The impact-index suites ride along because the serve-handle registry
-# (operators.ImpactHandle) is driver state shared by every session.
+# (operators.ImpactHandle) is driver state shared by every session;
+# BronzePipelineSpec because the gold mart commits each micro-batch
+# through ManifestTable.mergeCommit, i.e. through the same CAS loop.
 #
 # Usage: tools/race_loop.sh [iterations] [stress_cores]
 #   defaults: 50 iterations, half of `nproc` stressor cores (more
@@ -24,7 +26,8 @@ HALF=$(( $(nproc) / 2 ))
 STRESS="${2:-$(( HALF > 0 ? HALF : 1 ))}"
 SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec \
 graft.ManifestHardeningSpec graft.MergeCommitSpec graft.CloneRestoreSpec \
-graft.GraftDeleteSpec graft.ImpactIndexSpec graft.ImpactDedupGateSpec"
+graft.GraftDeleteSpec graft.ImpactIndexSpec graft.ImpactDedupGateSpec \
+graft.BronzePipelineSpec"
 OUT="tools/race_loop_results.txt"
 
 # append (never truncate): the results file is the round's cumulative
