@@ -156,6 +156,34 @@ class BronzePipelineSpec extends SparkSpec {
       "the store survives restarts; the filter is never the record")
   }
 
+  test("streaming gold mart finalizes each hour exactly once across drains") {
+    val root = Files.createTempDirectory("graft_mart").toString
+    val bronze = s"$root/bronze"
+    val mart = s"$root/mart"
+    def drain(): Unit = martDrain(bronze, mart, s"$root/ckpt")
+
+    landAt(bronze, "b1", Seq("p1", "p2"), hour = 10)
+    drain()
+    landAt(bronze, "b2", Seq("p3"), hour = 12)
+    drain()
+    landAt(bronze, "b3", Seq("p4"), hour = 14)
+    drain()
+
+    val rows = goldRows(mart)
+    // hour 10 closed by hour-12 data; one row with both postings
+    val h10 = rows.filter(_._1 == "hh|2024-09-23 10")
+    assert(h10.length == 1, s"hour 10 must finalize exactly once, got ${rows.mkString(";")}")
+    assert(h10.head._2 == ((2L, 20L)), s"got ${h10.head._2}")
+    // hour 14 is still open (nothing later arrived): its row equals its
+    // bronze count so far
+    assert(rows.filter(_._1 == "hh|2024-09-23 14").map(_._2) == Seq((1L, 10L)),
+      s"the open hour's row must equal its bronze count so far, got ${rows.mkString(";")}")
+
+    // an empty drain adds nothing (idempotent scheduled run)
+    drain()
+    assert(goldRows(mart) == rows)
+  }
+
   test("a rebuilt checkpoint gets a fresh batch namespace (no silent drops)") {
     val root = Files.createTempDirectory("graft_gated_ckpt").toString
     val staging = s"$root/staging"
@@ -179,6 +207,39 @@ class BronzePipelineSpec extends SparkSpec {
     // the replayed old file is content-gated, not duplicated
     assert(rows.count() == 2)
     assert(rows.select("raw_content").distinct().count() == 2)
+  }
+
+  test("bronze to silver drains incrementally, exactly once across restarts") {
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("graft_pipeline").toString
+    val bronze = s"$root/bronze"
+    val silver = s"$root/silver"
+    val checkpoint = s"$root/checkpoint"
+    def drain(): Unit =
+      BronzePipeline.runOnceToTable(spark, bronze, silver, checkpoint).awaitTermination()
+
+    writeRawBatch(bronze, "b1", Seq("p1", "p2"))
+    writeRawBatch(bronze, "b2", Seq("p3"))
+    drain()
+    val run1 = ManifestTable.read(spark, silver)
+    assert(run1.count() == 3)
+    assert(run1.columns.toSet.contains("etag") && run1.columns.toSet.contains("extracted_date"))
+
+    // new batch arrives; the next scheduled invocation drains ONLY it
+    writeRawBatch(bronze, "b3", Seq("p4", "p5"))
+    drain()
+    val run2 = ManifestTable.read(spark, silver)
+    assert(run2.count() == 5, "b1/b2 must not be reprocessed")
+    assert(run2.select("posting_id").distinct().count() == 5)
+
+    // idempotent no-op when nothing new arrived
+    drain()
+    assert(ManifestTable.read(spark, silver).count() == 5)
+
+    // silver fields derive from the payload
+    val row = ManifestTable.read(spark, silver).filter(col("posting_id") === "p1").head()
+    assert(row.getAs[String]("etag").length == 32)
+    assert(row.getAs[Long]("content_chars") == "content-p1".length.toLong)
   }
 
   test("silver as a manifest table: atomic per-drain commits, pruned date reads") {
