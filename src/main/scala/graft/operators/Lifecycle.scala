@@ -166,6 +166,14 @@ object Lifecycle {
     * the whole store per batch once it outgrows the broadcast
     * threshold. Spec-pinned with auto-broadcast disabled. Null incoming
     * keys match nothing and pass, as before.
+    *
+    * This is the one-plan form, for a batch query (q25) whose incoming
+    * side is read once. A streaming micro-batch that consumes the gated
+    * frame several times (`MetadataStore.ingestWithGate`,
+    * `BloomDedupGate.gate`) instead collects its key set once and asks
+    * [[seenAmong]] for the hits: each copy of this plan re-executes the
+    * incoming side under its broadcast, and that side is the whole gate
+    * chain above it.
     */
   def dedupGate(incoming: DataFrame, seen: DataFrame, key: String): DataFrame = {
     val hits = seen.select(key)
@@ -173,6 +181,16 @@ object Lifecycle {
       .distinct()
     incoming.join(broadcast(hits), Seq(key), "left_anti")
   }
+
+  /** The `keys` that the string column `key` of `seen` holds: one scan
+    * of `seen` under an IN-set filter, and one collect of the matching
+    * rows. The key set is the one [[dedupGate]] broadcasts, so it was on
+    * the driver there too; the store is scanned, never shuffled.
+    */
+  def seenAmong(seen: DataFrame, key: String, keys: Seq[String]): Set[String] =
+    if (keys.isEmpty) Set.empty
+    else seen.select(col(key)).filter(col(key).isInCollection(keys))
+      .collect().map(_.getString(0)).toSet
 
   def q25DedupIngestGate(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)

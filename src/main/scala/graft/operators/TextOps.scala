@@ -1826,11 +1826,9 @@ object TextOps {
     val bc = s.sparkContext.broadcast(
       BloomDedupGate.buildFilter(corpusFp, n, fpp)) // empty-corpus safe
     val batchFp = batch.select(col("doc_id"), fingerprint(col(textCol)).as("fp"))
-    // shared admit core (BloomDedupGate.admit): bloom negatives join
-    // nothing, suspects broadcast-verify against the corpus. No
-    // empty-suspect probe here — the one-shot form scans the corpus for
-    // the filter build anyway, so the early-out buys nothing.
-    BloomDedupGate.admit(batchFp, "fp", bc, corpusFp, probeEmpty = false)
+    // the one-shot admit plan (BloomDedupGate.admit): bloom negatives
+    // join nothing, suspects broadcast-verify against the corpus
+    BloomDedupGate.admit(batchFp, "fp", bc, corpusFp)
   }
 
   /** q86: the Bloom gate over `documents` — every third doc plays the
@@ -2516,10 +2514,12 @@ object TextOps {
     * window and compares every ingest batch against it. */
   def qualityHistogram(docs: DataFrame, grp: String, textCol: String,
       bins: Int = 10): DataFrame =
-    docs.select(col(grp), qualityExpr(col(textCol)).as("quality"))
-      .withColumn("bin",
-        least(floor(col("quality") * bins).cast("int"), lit(bins - 1)))
-      .groupBy(grp, "bin").agg(count(lit(1)).as("n"))
+    qualityBins(docs, grp, textCol, bins).groupBy(grp, "bin").agg(count(lit(1)).as("n"))
+
+  /** Each doc's (grp, bin): the rows [[qualityHistogram]] counts. */
+  def qualityBins(docs: DataFrame, grp: String, textCol: String, bins: Int): DataFrame =
+    docs.select(col(grp),
+      least(floor(qualityExpr(col(textCol)) * bins).cast("int"), lit(bins - 1)).as("bin"))
 
   /** The PSI tail over two (grp, bin, n) histograms — tiny inputs (e.g.
     * DriftMonitor's persisted reference vs a batch histogram), so the

@@ -13,12 +13,13 @@ import org.apache.spark.sql.types.StructType
   * Meta -..-> "Deduplication Check" in front of bronze).
   *
   * The store is append-only parquet keyed by content etag; the gate
-  * anti-joins incoming rows against it, so a re-delivered payload (same
-  * md5) never lands in bronze twice. At 100 TB the seen-set is the big
-  * side — which is exactly why the gate join BROADCASTS the incoming
-  * batch's keys and scans the store ([[graft.operators.Lifecycle
-  * .dedupGate]]): the store is read once per ingest and never shuffled,
-  * however large it grows.
+  * drops incoming rows whose etag it holds, so a re-delivered payload
+  * (same md5) never lands in bronze twice. At 100 TB the seen-set is the
+  * big side — which is exactly why the gate collects the incoming
+  * batch's etags once (the key set `Lifecycle.dedupGate` would
+  * broadcast) and scans the store for them
+  * ([[graft.operators.Lifecycle.seenAmong]]): the store is read once per
+  * ingest and never shuffled, however large it grows.
   */
 object MetadataStore {
 
@@ -84,9 +85,14 @@ object MetadataStore {
     * Streaming retries get this for free — `BronzePipeline.ingest`
     * derives batchId from the replayed micro-batch id.
     *
-    * The returned frame is an eager checkpoint (it must not re-read the
-    * store after the append) — callers should `graft.CacheHygiene.release`
-    * it once consumed, or its blocks outlive the batch.
+    * One pass over `incoming` decides everything: its etags are
+    * collected once; the store is probed for them once; the in-batch
+    * collapse (a window shuffle) runs only when some etag repeats; and a
+    * batch that lands nothing writes nothing. The returned frame holds
+    * the decision as a literal hit set, never a store read, and is a
+    * lazy checkpoint the bronze write fills — callers should
+    * `graft.CacheHygiene.release` it once consumed, or its blocks
+    * outlive the batch.
     */
   def ingestWithGate(incoming: DataFrame, bronzePath: String,
       metaPath: String, batchId: String): DataFrame = {
@@ -110,19 +116,26 @@ object MetadataStore {
       fs.delete(new Path(metaPath, s"batch_id=$batchId"), true)
     }
     if (!committed) { fs.mkdirs(new Path(metaPath)); fs.create(attemptMarker, true).close() }
-    val inBatchFirst = Window.partitionBy("etag").orderBy("posting_id")
-    val withEtag = incoming
-      .withColumn("etag", md5(col("raw_content")))
-      .withColumn("__rn", row_number().over(inBatchFirst))
-      .filter(col("__rn") === 1).drop("__rn")
-    val fresh = graft.operators.Lifecycle
-      .dedupGate(withEtag, read(spark, metaPath), "etag")
-      // materialize once: feeds the bronze write, the metadata append,
-      // and the caller - and must not re-read the store mid-flow
-      .transform(d => graft.CacheHygiene.materialize(d))
+    val withEtag = incoming.withColumn("etag", md5(col("raw_content")))
+    val etags = withEtag.select("etag").collect().map(_.getString(0)).toSeq
+    val distinctEtags = etags.distinct // a null etag is one group, as in the window
+    val hits = graft.operators.Lifecycle.seenAmong(
+      read(spark, metaPath), "etag", distinctEtags.filter(_ != null))
+    val firstPerEtag =
+      if (distinctEtags.size == etags.size) withEtag
+      else withEtag
+        .withColumn("__rn", row_number().over(Window.partitionBy("etag").orderBy("posting_id")))
+        .filter(col("__rn") === 1).drop("__rn")
+    // null etags match nothing in the store and pass
+    val fresh = graft.CacheHygiene.materializeLazy(
+      if (hits.isEmpty) firstPerEtag
+      else firstPerEtag.filter(coalesce(!col("etag").isInCollection(hits), lit(true))),
+      "gated ingest")
     if (!committed) {
-      BronzeLayer.writeRaw(fresh.drop("etag"), bronzePath, batchId)
-      append(BronzeLayer.storageMetadata(fresh, batchId), metaPath)
+      if (distinctEtags.exists(e => e == null || !hits(e))) {
+        BronzeLayer.writeRaw(fresh.drop("etag"), bronzePath, batchId)
+        append(BronzeLayer.storageMetadata(fresh, batchId), metaPath)
+      }
       fs.create(commitMarker, true).close()
     }
     fresh

@@ -5,8 +5,10 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.CacheHygiene
@@ -24,6 +26,19 @@ import graft.sources.{BronzeLayer, ManifestTable, MetadataStore}
 trait Gate {
   def keep(batch: DataFrame, batchId: String): DataFrame
   def afterCommit(committed: => DataFrame): Unit = ()
+  /** The gate's name in job descriptions and the per-batch counts. */
+  def name: String = Option(getClass.getSimpleName).filter(_.nonEmpty).getOrElse("gate")
+}
+
+object Gate {
+  /** A gate that only filters, under `name`. */
+  def apply(name: String)(keepFn: (DataFrame, String) => DataFrame): Gate = {
+    val gateName = name
+    new Gate {
+      def keep(batch: DataFrame, batchId: String): DataFrame = keepFn(batch, batchId)
+      override def name: String = gateName
+    }
+  }
 }
 
 /** End-to-end incremental bronze → silver → gold pipeline: the reference's daily
@@ -64,10 +79,11 @@ object BronzePipeline {
     * (new files, old payloads) land nowhere.
     *
     * Per micro-batch:
-    *   1. the staging read is materialized ONCE (only when `gates` is
-    *      non-empty): every gate's branches, probes and audit writes and
-    *      the ingest re-consume it, and un-checkpointed each action
-    *      would re-read and re-parse the staging JSON;
+    *   1. the staging read is checkpointed ONCE, lazily (only when
+    *      `gates` is non-empty): the first action over it — in the
+    *      curated chain, the drift histogram — persists it, and every
+    *      later gate branch, probe and audit write and the ingest read
+    *      the blocks instead of re-parsing the staging JSON;
     *   2. `keep` folds over the gates in order; the commit lands the
     *      last gate's rows in bronze + metadata;
     *   3. every checkpoint the chain minted is released (`releaseTree`
@@ -79,21 +95,91 @@ object BronzePipeline {
     *      already-committed batch (whose ingest lands nothing, the etags
     *      being in the store) still re-records its rows from the
     *      committed files instead of losing them forever.
+    *
+    * Every Spark job a stage runs carries its label as the job
+    * description — `<k>:<gate> keep`, `commit`, `<k>:<gate> afterCommit`
+    * (k counts gates from 1) — and the stream's own description is
+    * restored after each stage, so a listener splits a batch's jobs by
+    * stage. Each stage's output rows, the arrivals and the committed
+    * read-back are counted by an `Observation` riding the first action
+    * the chain already runs over that frame (zero added jobs), and the
+    * batch logs one INFO line on the `graft.ingest` logger: `<batch>:
+    * arrived=N <k>:<gate>=N ... committed=N`. A stage whose gate returns
+    * its input unchanged reuses its input's count, and a frame no action
+    * read logs `?`. A count is what that first action saw: a gate whose
+    * first action reads only part of its input (validateGate's
+    * emptiness probe is a `limit`) under-counts the stage before it, and
+    * one that starts with `.rdd` reports zero (the conversion fires the
+    * observation before its job runs); the curated chain's first actions
+    * read their frames whole (CuratedIngestJobsSpec pins its counts). The counts stay in the
+    * driver log: observations made inside `foreachBatch` do not reach
+    * `StreamingQueryProgress.observedMetrics`, which only sees the
+    * stream's own plan.
     */
   def ingest(spark: SparkSession, stagingPath: String, bronzePath: String,
       metaPath: String, checkpointPath: String, gates: Seq[Gate]): StreamingQuery =
     drainBatches(spark, spark.readStream.schema(StagingSchema).json(stagingPath),
         checkpointPath) { (batch, batchId) =>
-      val stages = ArrayBuffer(
-        if (gates.isEmpty) batch else CacheHygiene.materialize(batch, "bronze batch"))
+      val sc = batch.sparkSession.sparkContext
+      val streamLabel = sc.getLocalProperty("spark.job.description")
+      def labelled[T](label: String)(body: => T): T = {
+        sc.setJobDescription(label)
+        try body finally sc.setJobDescription(streamLabel)
+      }
+      val tally = new BatchTally(batchId)
+      val stages = ArrayBuffer(tally.observed("arrived",
+        if (gates.isEmpty) batch else CacheHygiene.materializeLazy(batch, "bronze batch")))
       try {
-        gates.foreach(g => stages += g.keep(stages.last, batchId))
-        CacheHygiene.release(
-          MetadataStore.ingestWithGate(stages.last, bronzePath, metaPath, batchId))
+        for ((g, k) <- gates.zip(Iterator.from(1))) {
+          val label = s"$k:${g.name}"
+          val in = stages.last
+          val out = labelled(s"$label keep")(g.keep(in, batchId))
+          stages += (if (out eq in) tally.same(label, in) else tally.observed(label, out))
+        }
+        labelled("commit")(CacheHygiene.release(
+          MetadataStore.ingestWithGate(stages.last, bronzePath, metaPath, batchId)))
       } finally if (gates.nonEmpty) CacheHygiene.releaseTree(stages.toSeq: _*)
-      lazy val committed = BronzeLayer.readBatch(spark, bronzePath, batchId)
-      gates.foreach(_.afterCommit(committed))
+      lazy val committed =
+        tally.observed("committed", BronzeLayer.readBatch(spark, bronzePath, batchId))
+      for ((g, k) <- gates.zip(Iterator.from(1)))
+        labelled(s"$k:${g.name} afterCommit")(g.afterCommit(committed))
+      tally.log(sc)
     }
+
+  /** One micro-batch's row counts: an `Observation` per counted frame,
+    * read once the listener bus has delivered the batch's actions. An
+    * observation no action fires stays registered with the stream's
+    * session, which ends with the drain. */
+  private final class BatchTally(batchId: String) {
+    private val counts = ArrayBuffer.empty[(String, Either[String, Observation])]
+
+    def observed(stage: String, df: DataFrame): DataFrame = {
+      val o = Observation(s"$batchId/$stage")
+      counts += stage -> Right(o)
+      df.observe(o, count(lit(1)).as("rows"))
+    }
+
+    /** `stage` kept exactly its input, `in`. */
+    def same(stage: String, in: DataFrame): DataFrame = {
+      counts += stage -> Left(counts.last._1)
+      in
+    }
+
+    def log(sc: SparkContext): Unit = if (IngestLog.isInfoEnabled) {
+      // observations complete on the listener bus; a bus slower than its
+      // drain timeout leaves them as `?`
+      scala.util.Try(ListenerBridge.drain(sc))
+      def rows(stage: String): String = counts.find(_._1 == stage).map(_._2) match {
+        case Some(Right(o)) => o.future.value.flatMap(_.toOption)
+          .map(_.getAs[Long]("rows").toString).getOrElse("?")
+        case Some(Left(from)) => rows(from)
+        case None => "?"
+      }
+      IngestLog.info(counts.map(c => s"${c._1}=${rows(c._1)}").mkString(s"$batchId: ", " ", ""))
+    }
+  }
+
+  private lazy val IngestLog = org.slf4j.LoggerFactory.getLogger("graft.ingest")
 
   /** The reference's model validation (finnoio/jobhouse
     * src/common/data.py RawJobPosting): each micro-batch splits on
@@ -107,7 +193,7 @@ object BronzePipeline {
     * appends: [[reAdmitQuarantine]]'s file-precise capture relies on
     * every write landing as fresh files.
     */
-  def validateGate(quarantinePath: String): Gate = (batch, batchId) => {
+  def validateGate(quarantinePath: String): Gate = Gate("validate") { (batch, batchId) =>
     val (valid, quarantined) = Validate.split(batch, Validate.rawPostingRules)
     if (!quarantined.isEmpty)
       quarantined.withColumn("batch_id", lit(batchId))
@@ -254,6 +340,7 @@ object BronzePipeline {
     * pairs are q30/q36's).
     */
   def nearDupGate(sigPath: String): Gate = new Gate {
+    override def name: String = "nearDup"
     def keep(batch: DataFrame, batchId: String): DataFrame =
       IncrementalDedup.gate(asDocs(batch), sigPath).drop("doc_id", "text")
     override def afterCommit(committed: => DataFrame): Unit =
@@ -275,6 +362,7 @@ object BronzePipeline {
     * deliberately doesn't tokenize a corpus per micro-batch.
     */
   def lexGate(indexPath: String, tau: Double = 0.8): Gate = new Gate {
+    override def name: String = "lexical"
     def keep(batch: DataFrame, batchId: String): DataFrame =
       ImpactDedupGate.gate(asDocs(batch), indexPath, tau).drop("doc_id", "text")
     override def afterCommit(committed: => DataFrame): Unit =
@@ -286,13 +374,17 @@ object BronzePipeline {
     * byte-exact etag misses and the near-dup gate would only catch past
     * its similarity threshold — are dropped before they land, and placed
     * ahead of the commit, Bloom negatives (the bulk of a mostly-fresh
-    * batch) reach the metadata join pre-shrunk. One filter per drain:
-    * construction rebuilds it from the fingerprint store, which IS the
-    * restart-recovery path; committed rows' fingerprints are recorded
-    * after the commit.
+    * batch) reach the metadata probe pre-shrunk. One filter per store
+    * for the session ([[BloomDedupGate.forStore]]): the first drain
+    * builds it from the fingerprint store, later drains reuse it and
+    * fold in only the store files it has not seen — a restarted driver
+    * rebuilds from the store, which IS the restart-recovery path.
+    * Committed rows' fingerprints are recorded after the commit, from
+    * one read of the bronze read-back.
     */
   def contentGate(spark: SparkSession, fpStorePath: String): Gate = new Gate {
-    private val bloom = new BloomDedupGate(spark, fpStorePath)
+    override def name: String = "content"
+    private val bloom = BloomDedupGate.forStore(spark, fpStorePath)
     def keep(batch: DataFrame, batchId: String): DataFrame =
       bloom.gate(batch, textCol = "raw_content")
     override def afterCommit(committed: => DataFrame): Unit =
@@ -310,15 +402,17 @@ object BronzePipeline {
     * null fingerprint: such rows drop explicitly (a groupBy would pool
     * ALL of them into one group and land a single null-content row,
     * merging unrelated malformed postings); a row with no content has no
-    * dedup identity and nothing to ingest. Checkpointed: the Bloom
-    * gate's empty-suspect probe and the ingest's materialization are
-    * separate ACTIONS, and the dedup shuffle + struct-min agg would
-    * re-execute per consumer.
+    * dedup identity and nothing to ingest. Checkpointed, lazily: the
+    * Bloom gate's suspect collect persists it, and the ingest's etag
+    * collect and bronze write read the blocks — un-checkpointed, the
+    * dedup shuffle + struct-min agg would re-execute per consumer. The
+    * keyed agg is deterministic under task retry, which the lazy form
+    * needs.
     */
-  val fingerprintDedupGate: Gate = (batch, _) => {
+  val fingerprintDedupGate: Gate = Gate("fingerprint") { (batch, _) =>
     val dataCols = batch.columns.toSeq
     val ordered = ("posting_id" +: dataCols.filterNot(_ == "posting_id")).map(col)
-    CacheHygiene.materialize(
+    CacheHygiene.materializeLazy(
       batch.withColumn("__fp", TextOps.fingerprint(col("raw_content")))
         .filter(col("__fp").isNotNull)
         .groupBy("__fp")

@@ -129,7 +129,7 @@ object CcnetGate {
     * it feeds both the score table and the survivor filter, and the LM
     * join would otherwise run twice.
     */
-  def gate(modelPath: String, scoresPath: String): Gate = (batch, batchId) => {
+  def gate(modelPath: String, scoresPath: String): Gate = Gate("ccnet") { (batch, batchId) =>
     val scored = CacheHygiene.materialize(
       scoreBatch(batch.sparkSession, modelPath, batch,
         "posting_id", "raw_content", TextOps.langIdExpr(col("raw_content"))),

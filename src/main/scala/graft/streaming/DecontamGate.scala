@@ -101,7 +101,7 @@ object DecontamGate {
     * filter, and the registry probe would otherwise run twice.
     */
   def gate(registryPath: String, scoresPath: String,
-      maxSharedGrams: Int = 0): Gate = (batch, batchId) => {
+      maxSharedGrams: Int = 0): Gate = Gate("decontam") { (batch, batchId) =>
     val screened = CacheHygiene.materialize(
       screenBatch(batch.sparkSession, registryPath, batch,
         "posting_id", "raw_content", maxSharedGrams),

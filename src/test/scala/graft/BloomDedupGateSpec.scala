@@ -87,4 +87,29 @@ class BloomDedupGateSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"no-suspect gate must not join:\n$plan")
   }
+
+  test("the session's filter folds in an out-of-band store append; one registry entry per store") {
+    val root = Files.createTempDirectory("bloomgate_registry").toString
+    val fps = s"$root/fps"
+    def drain(rows: Seq[(String, String)]): Set[String] = {
+      rawPostings(rows).coalesce(1).write.mode("append").json(s"$root/staging")
+      graft.streaming.BronzePipeline.ingest(spark, s"$root/staging", s"$root/bronze",
+        s"$root/meta", s"$root/ckpt",
+        Seq(graft.streaming.BronzePipeline.contentGate(spark, fps))).awaitTermination()
+      graft.sources.BronzeLayer.readRaw(spark, s"$root/bronze").collect()
+        .map(_.getAs[String]("posting_id")).toSet
+    }
+    assert(drain(Seq("a1" -> "first body here", "a2" -> "second body here")) == Set("a1", "a2"))
+    val entries = BloomDedupGate.registered
+    // a second writer records doc X's fingerprint with a plain parquet append
+    import spark.implicits._
+    Seq("x marks the spot").toDF("text").select(TextOps.fingerprint(col("text")).as("fp"))
+      .write.mode("append").parquet(fps)
+    val landed = drain(Seq("x1" -> "  X   Marks the SPOT ", "a3" -> "third body here"))
+    assert(landed == Set("a1", "a2", "a3"),
+      s"a normalized copy of the out-of-band doc must not land: $landed")
+    assert(BloomDedupGate.registered == entries, "a later drain of the same store reuses its gate")
+    assert(BloomDedupGate.forStore(spark, fps) eq BloomDedupGate.forStore(spark, s"file:$fps"),
+      "the registry keys by the qualified store path")
+  }
 }

@@ -103,4 +103,25 @@ class DriftMonitorSpec extends SparkSpec {
       DriftMonitor.psiAgainst(spark, legacy, batch, "source", "raw_content"))
     assert(e.getMessage.contains("bins"), e.getMessage)
   }
+
+  test("psiAgainst's driver-side PSI equals TextOps.psiFromHistograms bin for bin") {
+    val root = Files.createTempDirectory("graft_drift_same").toString
+    val refHist = s"$root/ref_hist"
+    DriftMonitor.writeReference(
+      rawPostings((1 to 12).map(i => s"r$i" -> soup(5 + 10 * (i % 4), s"r$i"))),
+      "source", "raw_content", refHist)
+    // shifted bins on the reference's source, one source it never saw,
+    // and rows with no content (null bin)
+    val batch = rawPostings((1 to 9).map(i => s"c$i" -> soup(8 + 15 * (i % 3), s"c$i")))
+      .unionByName(rawPostings((1 to 4).map(i => s"n$i" -> soup(30, s"n$i")))
+        .withColumn("source", lit("scraper-v2")))
+      .unionByName(rawPostings(Seq("z1" -> null, "z2" -> null)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val reference = graft.operators.TextOps.psiFromHistograms(
+      spark.read.parquet(refHist).drop("bins"),
+      graft.operators.TextOps.qualityHistogram(batch, "source", "raw_content"), "source")
+    assert(rows(DriftMonitor.psiAgainst(spark, refHist, batch, "source", "raw_content")) ==
+      rows(reference))
+  }
 }

@@ -12,6 +12,9 @@
 # (operators.ImpactHandle) is driver state shared by every session;
 # BronzePipelineSpec because the gold mart commits each micro-batch
 # through ManifestTable.mergeCommit, i.e. through the same CAS loop.
+# IngestChainSpec and BloomDedupGateSpec because the content gate's Bloom
+# filter is driver state too (BloomDedupGate.forStore, one per store
+# path), shared by every drain and folded forward from a store listing.
 #
 # Usage: tools/race_loop.sh [iterations] [stress_cores]
 #   defaults: 50 iterations, half of `nproc` stressor cores (more
@@ -27,7 +30,7 @@ STRESS="${2:-$(( HALF > 0 ? HALF : 1 ))}"
 SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec \
 graft.ManifestHardeningSpec graft.MergeCommitSpec graft.CloneRestoreSpec \
 graft.GraftDeleteSpec graft.ImpactIndexSpec graft.ImpactDedupGateSpec \
-graft.BronzePipelineSpec"
+graft.BronzePipelineSpec graft.IngestChainSpec graft.BloomDedupGateSpec"
 OUT="tools/race_loop_results.txt"
 
 # append (never truncate): the results file is the round's cumulative
