@@ -75,15 +75,19 @@ object BronzeLayer {
   /** The bronze hour dirs under `path` that hold `rows`' (source, hour)
     * pairs — the dirs [[writeRaw]] put them in, so reading them back
     * gives every row of those hours, from any batch. Rows without a
-    * source or a time are left out: they have no (source, hour).
+    * source or a time are left out: they have no (source, hour). One job
+    * and no shuffle: each partition renders and de-duplicates its own
+    * dirs, and the few that come back are merged after the collect.
     */
-  def hourDirs(rows: DataFrame, path: String): Seq[String] =
-    rows.filter(col("source").isNotNull && col("extracted_at").isNotNull)
-      .select(hourKeys: _*).distinct().collect().toSeq.map { r =>
-        r.schema.fieldNames.indices.map(i => ExternalCatalogUtils
-          .getPartitionPathString(r.schema.fieldNames(i), r.getString(i)))
-          .mkString(s"$path/", "/", "")
-      }
+  def hourDirs(rows: DataFrame, path: String): Seq[String] = {
+    val hours = rows.filter(col("source").isNotNull && col("extracted_at").isNotNull)
+      .select(hourKeys: _*)
+    val keys = hours.columns.toSeq
+    hours.rdd.mapPartitions(_.map(r => keys.indices.map(i => ExternalCatalogUtils
+        .getPartitionPathString(keys(i), r.getString(i))).mkString(s"$path/", "/", ""))
+        .toSet.iterator)
+      .collect().distinct.sorted.toSeq
+  }
 
   private[graft] def readRawPaths(spark: SparkSession, basePath: String,
       paths: Seq[String]): DataFrame = {

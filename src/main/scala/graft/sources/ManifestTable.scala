@@ -3,9 +3,13 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.util.{Base64, UUID}
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, date_format, lit, max, min, struct, to_json, unix_micros, when}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, date_format, lit, max, min, struct, sum, to_json, unix_micros, when}
+import org.apache.spark.sql.graft.SchemaBridge
 import org.apache.spark.sql.types._
 
 /** Minimal manifest-pinned table: atomic commits and snapshot-isolated
@@ -369,21 +373,42 @@ object ManifestTable {
   }
 
   /** Write `df` as data dir `dirName` and return its manifest entry.
-    * Min/max stats on `statsCols` are read back from the dir's own files —
-    * a column-pruned scan of just the new dir, never a recompute of the
-    * input plan.
+    * Everything the entry records is taken from the write itself, in its
+    * one job: the min/max/null stats on `statsCols` ride the write as an
+    * `Observation` (the same [[statAggs]] a read-back of the dir would
+    * compute, over the same rows), and the schema the files carry
+    * (`df.schema.asNullable`, what the parquet writer puts in every
+    * footer) goes into the per-dir schema cache, so no later snapshot
+    * schema opens this dir's footers. An observation that delivers no
+    * metrics (a write that ran no task) records no stats — unrecorded
+    * stats never prune, so that is never wrong.
     */
   private def writeEntry(df: DataFrame, table: String, statsCols: Seq[String],
       dirName: String = newDataDirName(), mode: String = "errorifexists"): Entry = {
-    val dirPath = new Path(table, dirName).toString
-    df.write.mode(mode).parquet(dirPath)
-    if (statsCols.isEmpty) return Entry(dirName, Map.empty)
-    val written = df.sparkSession.read.parquet(dirPath)
-    val tags = statTags(written.schema, statsCols)
-    if (tags.isEmpty) return Entry(dirName, Map.empty)
-    val aggs = statAggs(tags)
-    Entry(dirName, rowStats(tags, written.agg(aggs.head, aggs.tail: _*).head()))
+    val spark = df.sparkSession
+    val dir = new Path(table, dirName)
+    val tags = statTags(df.schema, statsCols)
+    val stats =
+      if (tags.isEmpty) { df.write.mode(mode).parquet(dir.toString); Map.empty[String, ColStat] }
+      else observed(df, statAggs(tags))(_.write.mode(mode).parquet(dir.toString))
+        .fold(Map.empty[String, ColStat])(rowStats(tags, _))
+    dirSchemas.put(dirKey(spark, dir), SchemaBridge.asNullable(df.schema))
+    Entry(dirName, stats)
   }
+
+  /** Run `action` over `df` with `aggs` observed on it (no added job) and
+    * return the observed row — None when no metrics came back, which an
+    * action that ran no task can leave, or none came within the wait.
+    * The metrics complete on the listener bus once the action's query
+    * ends.
+    */
+  private def observed(df: DataFrame, aggs: Seq[Column])(action: DataFrame => Unit): Option[Row] = {
+    val obs = Observation()
+    action(df.observe(obs, aggs.head, aggs.tail: _*))
+    scala.util.Try(Await.result(obs.future, ObservedWait)).toOption.filter(_.length > 0)
+  }
+
+  private val ObservedWait = 5.minutes
 
   /** Zero rows of `schema` in one partition: written, one footer. */
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
@@ -496,7 +521,7 @@ object ManifestTable {
     val entry = writeEntry(df, table, statsCols)
     publish(spark, table) { (base, entries) =>
       if (append && base > 0)
-        checkAppendSchema(spark, table, base, entries, df, allowEvolution)
+        checkAppendSchema(spark, table, entries, df, allowEvolution)
       Publish((if (append) entries else Nil) :+ entry, Seq(entry.dir))
     }
   }
@@ -530,18 +555,17 @@ object ManifestTable {
       statsCols = headStatsCols(spark, table), allowEvolution = true)
   }
 
-  private def checkAppendSchema(spark: SparkSession, table: String, base: Long,
+  private def checkAppendSchema(spark: SparkSession, table: String,
       entries: Seq[Entry], df: DataFrame, allowEvolution: Boolean): Unit = {
-    // the CACHED one-footer-per-dir union schema, not read(...).schema:
-    // planning the full snapshot with mergeSchema costs a footer read per
-    // FILE over ALL dirs, and this check runs on EVERY append attempt
-    // (and again per CAS-race retry) — exactly the planning cost the
-    // pruned-read path exists to avoid. Field ORDER from the footer walk
-    // is first-seen (not mergeSchema's), so the shape compare is by
-    // name+type SET: column order never matters to reads anyway
-    // ([[sliceRead]] selects by name and null-fills).
+    // the per-dir cached union schema, not read(...).schema: planning the
+    // full snapshot with mergeSchema costs a footer read per FILE over
+    // ALL dirs, and this check runs on EVERY append attempt (and again
+    // per CAS-race retry). Field ORDER of the union is first-seen (not
+    // mergeSchema's), so the shape compare is by name+type SET: column
+    // order never matters to reads anyway ([[sliceRead]] reads by name
+    // and null-fills).
     def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSet
-    val current = snapshotSchemaCached(spark, table, base, entries.map(_.dir))
+    val current = snapshotSchema(spark, table, entries.map(_.dir))
     if (allowEvolution) {
       val cur = current.fields.map(f => f.name -> f.dataType).toMap
       df.schema.fields.foreach(f => cur.get(f.name).foreach(t =>
@@ -600,7 +624,7 @@ object ManifestTable {
         if (entry.isEmpty)
           entry = Some(writeEntry(df, table, statsCols, dirName, "overwrite"))
         if (base > 0)
-          checkAppendSchema(df.sparkSession, table, base, entries, df, allowEvolution)
+          checkAppendSchema(df.sparkSession, table, entries, df, allowEvolution)
         Publish(entries ++ entry, Seq(dirName))
       }
     }
@@ -744,20 +768,8 @@ object ManifestTable {
       prunedDataDirs(spark, table, c, lo, hi, v).toSet
     }.reduce(_ intersect _)
     sliceRead(spark, table, dirs.toSeq.sorted,
-      snapshotSchemaCached(spark, table, v, dataDirs(spark, table, v)))
+      snapshotSchema(spark, table, dataDirs(spark, table, v)))
   }
-
-  // (table, version, dir list) -> union schema. A snapshot's dirs carry
-  // fresh UUIDs per commit and their contents never change, so the key
-  // identifies the snapshot CONTENT — including across a table deleted
-  // and re-created at the same path in one JVM, whose same-numbered
-  // versions get different dir UUIDs (keying on (table, version) alone
-  // would serve the dead table's schema there). Repeated pruned reads of
-  // one snapshot — a mart job probing many ranges, the bench's passes —
-  // pay the per-dir footer walk once per JVM, not per read. Bounded by
-  // wholesale clear: the cache is tiny and only ever an I/O saving.
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Seq[String]), StructType]()
 
   /** Whether `version`'s manifest is still present (committed and not
     * vacuumed) — the [[GraftCatalog]] time-travel existence probe.
@@ -767,11 +779,11 @@ object ManifestTable {
     version > 0 && store(spark).exists(manifestPath(table, version))
 
   /** A snapshot's full union schema — the [[GraftDataSource]] (DSv2 SQL
-    * surface) entry point into the cached footer-walk.
+    * surface) entry point into the per-dir schema cache.
     */
   private[graft] def snapshotSchemaOf(spark: SparkSession, table: String,
       version: Long): StructType =
-    snapshotSchemaCached(spark, table, version, dataDirs(spark, table, version))
+    snapshotSchema(spark, table, dataDirs(spark, table, version))
 
   /** Dir-subset snapshot read with the full-schema null-fill contract —
     * the [[GraftDataSource]] scan's entry point into [[sliceRead]].
@@ -780,61 +792,66 @@ object ManifestTable {
       dirs: Seq[String], fullSchema: StructType): DataFrame =
     sliceRead(spark, table, dirs, fullSchema)
 
-  private def snapshotSchemaCached(spark: SparkSession, table: String,
-      v: Long, dirs: Seq[String]): StructType = {
-    if (schemaCache.size > 1024) schemaCache.clear()
-    schemaCache.computeIfAbsent((table, v, dirs.sorted),
-      _ => snapshotSchema(spark, table, dirs))
-  }
+  // qualified data-dir path -> the schema of its files. A data dir is ONE
+  // write and its files never change, so its schema is a fact about the
+  // dir: [[writeEntry]] records it as it writes (a re-written token dir —
+  // a table deleted and re-created at the same path, a crashed attempt's
+  // garbage overwritten — replaces its entry there), and a dir nobody
+  // wrote in this JVM costs one footer read, once. Every snapshot schema
+  // — each append's schema check, each pruned read, each merge — is then
+  // a union of cached entries, never a job. A dir re-written by ANOTHER
+  // JVM under the same name keeps its old entry here until the bound
+  // below clears the cache. Bounded by wholesale clear: entries are
+  // small and only ever an I/O saving.
+  private val dirSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  private val MaxCachedDirs = 16384
 
-  /** The snapshot's union schema from ONE parquet footer per data dir —
-    * each dir is a single `df.write`, so all its files share a schema.
-    * This is what a pruned read uses instead of planning the full
-    * snapshot with mergeSchema (a footer read per FILE over ALL dirs,
-    * which made every pruned read pay full-snapshot planning cost at
-    * large file counts — the exact cost manifest-level skipping exists
-    * to avoid).
+  private def dirKey(spark: SparkSession, dir: Path): String =
+    fs(spark, dir).makeQualified(dir).toString
+
+  /** The snapshot's union schema over `dirs`, first-seen field order:
+    * one cached schema per data dir (see [[dirSchemas]]) — each dir is a
+    * single `df.write`, so all its files share one. This is what every
+    * protocol step uses instead of planning the full snapshot with
+    * mergeSchema (a footer read per FILE over ALL dirs, the exact cost
+    * manifest-level skipping exists to avoid).
     */
   private def snapshotSchema(spark: SparkSession, table: String,
       dirs: Seq[String]): StructType = {
+    if (dirSchemas.size > MaxCachedDirs) dirSchemas.clear()
     var seen = Set.empty[String]
     val fields = Seq.newBuilder[StructField]
     dirs.foreach { d =>
-      // per-DIR FileSystem, not the table root's: a shallow clone's
-      // entries are qualified absolute dirs that may live on a different
-      // filesystem than the clone root (s3a source, hdfs clone) — the
-      // root-bound fs would throw "Wrong FS" on them
       val p = new Path(table, d)
-      fs(spark, p).listStatus(p)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).headOption
-        .foreach { st =>
-          spark.read.parquet(st.getPath.toString).schema.fields.foreach { fld =>
-            if (!seen(fld.name)) { seen += fld.name; fields += fld }
-          }
-        }
+      dirSchemas.computeIfAbsent(dirKey(spark, p), _ => footerSchema(spark, p))
+        .fields.foreach { fld => if (!seen(fld.name)) { seen += fld.name; fields += fld } }
     }
     StructType(fields.result())
   }
 
+  /** One data dir's schema from the footer of its first parquet file. */
+  private def footerSchema(spark: SparkSession, p: Path): StructType =
+    // per-DIR FileSystem, not the table root's: a shallow clone's entries
+    // are qualified absolute dirs that may live on a different filesystem
+    // than the clone root (s3a source, hdfs clone) — the root-bound fs
+    // would throw "Wrong FS" on them
+    fs(spark, p).listStatus(p)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).headOption
+      .fold(new StructType())(st => spark.read.parquet(st.getPath.toString).schema)
+
   /** Read a subset of a snapshot's data dirs while keeping the FULL
-    * snapshot schema (columns living only in unselected commits
-    * null-fill) — the shared slice contract of [[readWhere]] and
-    * [[readAppendedSince]].
+    * snapshot schema — the shared slice contract of [[readWhere]] and
+    * [[readAppendedSince]]. The scan is planned with the known union
+    * schema, so it reads no footer to plan, and the parquet reader
+    * null-fills the columns that live only in unselected commits.
     */
   private def sliceRead(spark: SparkSession, table: String,
       dirs: Seq[String], fullSchema: StructType): DataFrame =
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema)
-    else {
-      val pruned = spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(d => new Path(table, d).toString): _*)
-      val have = pruned.columns.toSet
-      pruned.select(fullSchema.fields.map(f =>
-        if (have(f.name)) colExact(f.name)
-        else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)): _*)
-    }
+    else spark.read.schema(fullSchema).parquet(dirs.map(d => new Path(table, d).toString): _*)
 
   /** Incremental consumption: the rows ADDED to the table after
     * `fromVersion`, i.e. the union of data dirs present in `toVersion`
@@ -865,7 +882,7 @@ object ManifestTable {
       else math.max(hintVersion(spark, table), highestManifest(spark, table))
     val (toEntries, fresh) = appendedEntries(spark, table, fromVersion, to)
     sliceRead(spark, table, fresh.map(_.dir).sorted,
-      snapshotSchemaCached(spark, table, to, toEntries.map(_.dir)))
+      snapshotSchema(spark, table, toEntries.map(_.dir)))
   }
 
   /** The `to` snapshot's full entry list PLUS the entries ADDED after
@@ -930,7 +947,7 @@ object ManifestTable {
     val fromOnly = fromAll.filterNot(shared).sorted
     val toOnly = toAll.filterNot(shared).sorted
     def side(dirs: Seq[String], v: Long, all: Seq[String], as: String) = {
-      val schema = snapshotSchemaCached(spark, table, v, all)
+      val schema = snapshotSchema(spark, table, all)
       val df = if (dirs.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else sliceReadAs(spark, table, dirs, schema)
@@ -1041,7 +1058,7 @@ object ManifestTable {
     var anchor: Option[Entry] = None
     publish(spark, table) { (v, entries) =>
       require(v > 0, s"manifest-table: $table has no committed version")
-      val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
+      val schema = snapshotSchema(spark, table, entries.map(_.dir))
       val decided = entries.map(e => e -> classify(schema, e))
       val kept = decided.collect { case (e, CowKeep) => e }
       val toRewrite = decided.collect { case (e, CowRewrite) => e }
@@ -1083,9 +1100,11 @@ object ManifestTable {
     * head's recorded stats columns so pruning — including the NEXT
     * merge's — survives by inheritance.
     *
-    * `updates` is consumed several times (key-hygiene check, range agg,
-    * anti-join, write): it is eagerly checkpointed here and released
-    * before returning, so an expensive upstream plan computes once.
+    * `updates` is computed ONCE: it is checkpointed lazily, and the one
+    * aggregate action that checks it — row count, largest key
+    * multiplicity, key envelope and key null counts — computes and
+    * persists it; the anti-join and the write read the blocks, and they
+    * are released before returning.
     */
   def mergeCommit(spark: SparkSession, table: String, updates: DataFrame,
       keyCols: Seq[String], statsCols: Seq[String] = Nil): Long = {
@@ -1096,22 +1115,29 @@ object ManifestTable {
     keyCols.foreach(c => require(keyTags.contains(c),
       s"manifest-table: key column $c has no comparable stats type " +
         "(num/str/date/ts) - range pruning cannot bound the rewrite"))
-    if (updates.isEmpty) {
-      val v = currentVersion(spark, table)
-      require(v > 0, s"manifest-table: $table has no committed version")
-      return v
-    }
-    val u = updates.transform(d => graft.CacheHygiene.materialize(d))
+    val u = graft.CacheHygiene.materializeLazy(updates, "merge updates")
     try {
-      val dupes = u.groupBy(keyCols.map(colExact): _*).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(dupes == 0,
+      // one row per distinct key: its multiplicity proves key-uniqueness,
+      // and the key envelope over distinct keys is the rows' envelope.
+      // The envelope is in the SAME canonical forms the manifest stats
+      // use, so overlap compares apples to apples; a null-key group
+      // counts as a null there
+      val perKey = u.groupBy(keyCols.map(colExact): _*).agg(count(lit(1)).as("__graft_n"))
+      val checks = Seq(sum("__graft_n").as("__graft_rows"), max("__graft_n").as("__graft_maxn")) ++
+        statAggs(keyTags)
+      // observed on a discarding write: the global aggregate would add a
+      // single-partition shuffle (one more job) to the same answer
+      val check = observed(perKey, checks)(_.write.format("noop").mode("overwrite").save())
+        .getOrElse(perKey.agg(checks.head, checks.tail: _*).head())
+      if (check.isNullAt(0)) { // empty updates: a no-op
+        val v = currentVersion(spark, table)
+        require(v > 0, s"manifest-table: $table has no committed version")
+        return v
+      }
+      require(check.getLong(1) == 1L,
         s"manifest-table: updates are not key-unique on ${keyCols.mkString(",")} " +
           "(the SQL MERGE multiple-match rule)")
-      // the updates' key envelope, in the SAME canonical forms the
-      // manifest stats use - so overlap compares apples to apples
-      val aggs = statAggs(keyTags)
-      val kstats = rowStats(keyTags, u.agg(aggs.head, aggs.tail: _*).head())
+      val kstats = rowStats(keyTags, check)
       keyCols.foreach(c => require(kstats.get(c).exists(_.nulls.contains(0L)),
         s"manifest-table: null keys in updates column $c"))
 
@@ -1128,22 +1154,29 @@ object ManifestTable {
           Settled(commit(u, table, append = false,
             statsCols = if (statsCols.nonEmpty) statsCols else keyCols))
         else {
-          checkAppendSchema(spark, table, v, entries, u, allowEvolution = false)
+          checkAppendSchema(spark, table, entries, u, allowEvolution = false)
           val (affected, untouched) = entries.partition(affectedBy)
-          val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
-          // explicit join condition, not usingColumns: a usingColumns
-          // join PARSES the names, so a key literally called "a.b" would
-          // silently match nothing and duplicate its rows. The update
-          // keys are renamed to safe synthetic names so the condition's
-          // sides can't collide; null target keys still never match
-          // (=== with null is null) — the survive-contract above.
-          val uKeys = u.select(keyCols.zipWithIndex.map { case (c, i) =>
-            colExact(c).as(s"__graft_mk_$i") }: _*)
-          val antiCond = keyCols.zipWithIndex.map { case (c, i) =>
-            colExact(c) === uKeys(s"__graft_mk_$i") }.reduce(_ && _)
-          val survivors = sliceRead(spark, table, affected.map(_.dir).sorted, schema)
-            .join(uKeys, antiCond, "left_anti")
-          val entry = writeEntry(survivors.unionByName(u), table,
+          val schema = snapshotSchema(spark, table, entries.map(_.dir))
+          // snapshot column order, as the anti-join's union gives it
+          val inserted = u.select(schema.fieldNames.map(colExact).toIndexedSeq: _*)
+          val merged =
+            if (affected.isEmpty) inserted // a pure insert reads no target rows
+            else {
+              // explicit join condition, not usingColumns: a usingColumns
+              // join PARSES the names, so a key literally called "a.b"
+              // would silently match nothing and duplicate its rows. The
+              // update keys are renamed to safe synthetic names so the
+              // condition's sides can't collide; null target keys still
+              // never match (=== with null is null) — the survive-contract
+              // above.
+              val uKeys = u.select(keyCols.zipWithIndex.map { case (c, i) =>
+                colExact(c).as(s"__graft_mk_$i") }: _*)
+              val antiCond = keyCols.zipWithIndex.map { case (c, i) =>
+                colExact(c) === uKeys(s"__graft_mk_$i") }.reduce(_ && _)
+              sliceRead(spark, table, affected.map(_.dir).sorted, schema)
+                .join(uKeys, antiCond, "left_anti").unionByName(inserted)
+            }
+          val entry = writeEntry(merged, table,
             if (statsCols.nonEmpty) statsCols else statsColsOf(entries))
           Publish(untouched :+ entry, Seq(entry.dir), derived = true)
         }

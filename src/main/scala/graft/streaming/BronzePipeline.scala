@@ -121,11 +121,6 @@ object BronzePipeline {
     drainBatches(spark, spark.readStream.schema(StagingSchema).json(stagingPath),
         checkpointPath) { (batch, batchId) =>
       val sc = batch.sparkSession.sparkContext
-      val streamLabel = sc.getLocalProperty("spark.job.description")
-      def labelled[T](label: String)(body: => T): T = {
-        sc.setJobDescription(label)
-        try body finally sc.setJobDescription(streamLabel)
-      }
       val tally = new BatchTally(batchId)
       val stages = ArrayBuffer(tally.observed("arrived",
         if (gates.isEmpty) batch else CacheHygiene.materializeLazy(batch, "bronze batch")))
@@ -133,16 +128,16 @@ object BronzePipeline {
         for ((g, k) <- gates.zip(Iterator.from(1))) {
           val label = s"$k:${g.name}"
           val in = stages.last
-          val out = labelled(s"$label keep")(g.keep(in, batchId))
+          val out = labelled(sc, s"$label keep")(g.keep(in, batchId))
           stages += (if (out eq in) tally.same(label, in) else tally.observed(label, out))
         }
-        labelled("commit")(CacheHygiene.release(
+        labelled(sc, "commit")(CacheHygiene.release(
           MetadataStore.ingestWithGate(stages.last, bronzePath, metaPath, batchId)))
       } finally if (gates.nonEmpty) CacheHygiene.releaseTree(stages.toSeq: _*)
       lazy val committed =
         tally.observed("committed", BronzeLayer.readBatch(spark, bronzePath, batchId))
       for ((g, k) <- gates.zip(Iterator.from(1)))
-        labelled(s"$k:${g.name} afterCommit")(g.afterCommit(committed))
+        labelled(sc, s"$k:${g.name} afterCommit")(g.afterCommit(committed))
       tally.log(sc)
     }
 
@@ -180,6 +175,15 @@ object BronzePipeline {
   }
 
   private lazy val IngestLog = org.slf4j.LoggerFactory.getLogger("graft.ingest")
+
+  /** Run `body` with every Spark job it starts described as `label` (a
+    * listener splits a drain's jobs by stage on it), then restore the
+    * stream's own description. */
+  private def labelled[T](sc: SparkContext, label: String)(body: => T): T = {
+    val streamLabel = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(streamLabel)
+  }
 
   /** The reference's model validation (finnoio/jobhouse
     * src/common/data.py RawJobPosting): each micro-batch splits on
@@ -489,14 +493,19 @@ object BronzePipeline {
     * process once per run; [[ManifestTable.commitIdempotent]] makes the
     * crash-replay of a committed-but-unacknowledged micro-batch a no-op
     * (the commit CAS and the replay-visible token are one operation).
-    * Empty micro-batches commit nothing.
+    * Empty micro-batches commit nothing. A micro-batch's jobs carry the
+    * description `silver commit`: a warm one runs two, the emptiness
+    * probe and the write, whose stats and schema the commit takes from
+    * the write itself.
     */
   def runOnceToTable(spark: SparkSession, bronzePath: String,
       silverTable: String, checkpointPath: String): StreamingQuery =
     drainBatches(spark, silverStream(spark, bronzePath), checkpointPath) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        ManifestTable.commitIdempotent(batch, silverTable, batchId,
-          statsCols = Seq("extracted_date", "source"))
+      labelled(batch.sparkSession.sparkContext, "silver commit") {
+        if (!batch.isEmpty)
+          ManifestTable.commitIdempotent(batch, silverTable, batchId,
+            statsCols = Seq("extracted_date", "source"))
+      }
     }
 
   /** The gold mart — the reference's gold box (docs/Pipeline
@@ -512,20 +521,24 @@ object BronzePipeline {
     * hour's row holds its bronze count so far. Commits record (`hour`,
     * `source`) stats and the merge rewrites only the commits whose
     * ranges overlap the touched keys, so a "last 24 h" read prunes to
-    * the commits holding those hours.
+    * the commits holding those hours. A micro-batch's jobs carry the
+    * descriptions `gold hours` (naming the touched dirs) and `gold
+    * merge` (the recompute, checked and written once).
     */
   def martRunOnceToTable(spark: SparkSession, bronzePath: String,
       martTable: String, checkpointPath: String): StreamingQuery =
     drainBatches(spark, BronzeLayer.readRawStream(spark, bronzePath), checkpointPath) {
       (batch, _) =>
-        val hours = BronzeLayer.hourDirs(batch, bronzePath)
-        if (hours.nonEmpty)
+        val sc = batch.sparkSession.sparkContext
+        val hours = labelled(sc, "gold hours")(BronzeLayer.hourDirs(batch, bronzePath))
+        if (hours.nonEmpty) labelled(sc, "gold merge") {
           ManifestTable.mergeCommit(spark, martTable,
             BronzeLayer.readRawPaths(spark, bronzePath, hours)
               .groupBy(col("source"), date_trunc("hour", col("extracted_at")).as("hour"))
               .agg(count(lit(1)).as("n_postings"),
                 sum(length(col("raw_content"))).as("total_chars")),
             keyCols = Seq("source", "hour"), statsCols = Seq("hour", "source"))
+        }
     }
 
   /** The scaffold every foreachBatch drain shares: run `body` on each

@@ -127,3 +127,12 @@ object ListenerBridge {
       : Option[org.apache.spark.sql.execution.SparkPlan] =
     Option(end.qe).map(_.executedPlan)
 }
+
+/** A schema as the file writers store it: every field nullable, nested
+  * fields, array elements and map values included (`asNullable` is
+  * Spark-internal).
+  */
+object SchemaBridge {
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+}

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
 import graft.sources.ManifestTable
+import graft.sources.ManifestTable.ColStat
 
 class ManifestTableSpec extends SparkSpec {
 
@@ -684,5 +688,119 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.snapshotDiff(spark, table, Seq.empty, v3, v4))
     intercept[IllegalArgumentException](
       ManifestTable.snapshotDiff(spark, table, Seq("id"), v4, v3))
+  }
+
+  /** The stats a read-back of `dir`'s own files records — the per-column
+    * aggregate a commit would run over the dir it just wrote, typed the
+    * way the manifest types them (decimal and other types record none).
+    */
+  private def readBackStats(dir: String, statsCols: Seq[String]): Map[String, ColStat] = {
+    val written = spark.read.parquet(dir)
+    statsCols.flatMap { c =>
+      written.schema.find(_.name == c).map(_.dataType).collect {
+        case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
+             _: FloatType | _: DoubleType => "num"
+        case _: StringType | _: DateType => "str"
+        case _: TimestampType => "ts"
+        case _: TimestampNTZType => "tsn"
+      }.flatMap { tag =>
+        val e = tag match {
+          case "ts" => unix_micros(col(c))
+          case "tsn" => date_format(col(c), ManifestTable.TsPattern)
+          case _ => col(c)
+        }
+        val r = written.agg(min(e).cast("string"), max(e).cast("string"),
+          count(lit(1)) - count(col(c))).head()
+        if (r.isNullAt(0)) None
+        else if (tag == "ts") Some(c -> ColStat(tag, ManifestTable.tsCanon(r.getString(0).toLong),
+          ManifestTable.tsCanon(r.getString(1).toLong), Some(r.getLong(2))))
+        else Some(c -> ColStat(tag, r.getString(0), r.getString(1), Some(r.getLong(2))))
+      }
+    }.toMap
+  }
+
+  /** Commit `df` as a fresh table with stats on every column; assert the
+    * recorded stats equal a read-back of the written dir's. */
+  private def assertStatsAsReadBack(df: org.apache.spark.sql.DataFrame): Map[String, ColStat] = {
+    val table = Files.createTempDirectory("graft_stats_eq").toString + "/t"
+    val v = ManifestTable.commit(df, table, append = false, statsCols = df.columns.toSeq)
+    val Seq(entry) = ManifestTable.manifestEntries(spark, table, v)
+    val expected = readBackStats(s"$table/${entry.dir}", df.columns.toSeq)
+    assert(entry.stats == expected, s"recorded ${entry.stats} vs read-back $expected")
+    entry.stats
+  }
+
+  private val Strings = Seq("", "plain", "héllo wörld", "日本語テキスト", "emoji \uD83D\uDE00 x",
+    "\uE000 private use", null)
+
+  test("stats taken from the write equal a read-back: num, str, date, all-null, 4 partitions") {
+    import spark.implicits._
+    val df = Strings.zipWithIndex.map { case (s, i) =>
+      (i, i.toLong * 1000000007L - 3, if (i == 2) -0.5 else i * 1.25,
+        BigDecimal(i) * BigDecimal("12.34"), s, s"2024-0${i % 9 + 1}-1$i")
+    }.toDF("i", "l", "d", "dec", "s", "dt_s")
+      .withColumn("dt", to_date(col("dt_s"))).drop("dt_s")
+      .withColumn("nothing", lit(null).cast("string"))
+      .repartition(4)
+    val stats = assertStatsAsReadBack(df)
+    assert(stats.keySet == Set("i", "l", "d", "s", "dt"),
+      s"num, str and date columns record stats; decimal and all-null do not: ${stats.keySet}")
+    assert(stats("s").min == "" && stats("s").nulls.contains(1L), stats("s").toString)
+  }
+
+  test("stats taken from the write equal a read-back: ts under two session zones, tsn, zero rows") {
+    import spark.implicits._
+    val prior = spark.conf.get("spark.sql.session.timeZone")
+    try Seq("America/Los_Angeles", "Asia/Kolkata").foreach { tz =>
+      spark.conf.set("spark.sql.session.timeZone", tz)
+      val df = Seq("2024-03-10 01:59:59.123456", "2024-03-10 03:00:00", "1999-12-31 23:59:59",
+        null).toDF("raw")
+        .select(to_timestamp(col("raw")).as("ts"), to_timestamp_ntz(col("raw")).as("tsn"))
+        .repartition(2)
+      val stats = assertStatsAsReadBack(df)
+      assert(stats.keySet == Set("ts", "tsn") && stats("tsn").min == "1999-12-31 23:59:59.000000",
+        s"$tz: $stats")
+      assert(assertStatsAsReadBack(df.filter(lit(false))).isEmpty, "a zero-row commit records none")
+    } finally spark.conf.set("spark.sql.session.timeZone", prior)
+  }
+
+  test("a commit's write-time schema is its footer schema") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft_schema_eq").toString + "/t"
+    val meta = new MetadataBuilder().putString("comment", "kept").build()
+    val df = Seq((1L, "a", Seq(1, 2), Map("k" -> 1.5)), (2L, "b", Seq(3), Map.empty[String, Double]))
+      .toDF("id", "s", "xs", "m")
+      .withColumn("st", struct(col("id").as("inner"), lit(7).as("seven")))
+      .withColumn("one", lit(1))
+      .withColumn("dec", lit(BigDecimal("1.50")).cast("decimal(9,2)"))
+      .withColumn("ts", current_timestamp())
+      .withColumn("tsn", to_timestamp_ntz(lit("2024-01-01 00:00:00")))
+      .withColumn("dt", current_date())
+      .withColumn("bin", col("s").cast("binary"))
+      .withColumn("tagged", col("s").as("tagged", meta))
+    val v = ManifestTable.commit(df, table, append = false, statsCols = Seq("id"))
+    val Seq(entry) = ManifestTable.manifestEntries(spark, table, v)
+    assert(ManifestTable.snapshotSchemaOf(spark, table, v) ==
+      spark.read.parquet(s"$table/${entry.dir}").schema)
+  }
+
+  test("a table deleted and re-created under the same token reads its new schema") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft_recreate").toString + "/t"
+    ManifestTable.commitIdempotent(Seq((1L, "a")).toDF("id", "v"), table, "batch-0",
+      statsCols = Seq("id"))
+    assert(ManifestTable.snapshotSchemaOf(spark, table, 1L).fieldNames.toSeq == Seq("id", "v"))
+    val root = new org.apache.hadoop.fs.Path(table)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    ManifestTable.commitIdempotent(Seq((2L, 0.5, "x")).toDF("id", "score", "tag"), table,
+      "batch-0", statsCols = Seq("id"))
+    assert(ManifestTable.snapshotSchemaOf(spark, table, 1L).fieldNames.toSeq ==
+      Seq("id", "score", "tag"))
+    val got = ManifestTable.readRange(spark, table, "id", "0", "9")
+    assert(got.columns.toSeq == Seq("id", "score", "tag"))
+    assert(got.as[(Long, Double, String)].collect().toSeq == Seq((2L, 0.5, "x")))
+    // a same-schema append checks against the new schema, not the old one
+    assert(ManifestTable.commit(Seq((3L, 1.5, "y")).toDF("id", "score", "tag"), table,
+      append = true) == 2L)
   }
 }

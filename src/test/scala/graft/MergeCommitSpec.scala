@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.ManifestTable
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max, udf}
 
 /** Stats-pruned copy-on-write upsert: only commits whose key ranges can
   * contain an update key rewrite; everything else carries forward by
@@ -123,5 +123,23 @@ class MergeCommitSpec extends SparkSpec {
     assert(before.map(_.dir).intersect(after).isEmpty,
       "no disjointness proof -> both dirs rewritten")
     assert(ManifestTable.read(spark, table).count() == 20)
+  }
+
+  test("the updates plan is computed once: a UDF in it runs once per row") {
+    val table = Files.createTempDirectory("graft_merge7").toString + "/t"
+    landThree(table)
+    val calls = spark.sparkContext.longAccumulator("merge-updates-udf")
+    val tagged = udf((v: String) => { calls.add(1); v.toUpperCase })
+    // under an aggregate, as the gold recompute is: every evaluation of
+    // the plan runs its whole input
+    val updates = Seq((150L, "u150"), (250L, "u250"), (400L, "u400")).toDF("id", "v")
+      .withColumn("v", tagged(col("v")))
+      .groupBy("id").agg(max("v").as("v"))
+    ManifestTable.mergeCommit(spark, table, updates, Seq("id"))
+    assert(calls.value == 3L, s"the UDF ran ${calls.value} times for 3 update rows")
+    val snap = ManifestTable.read(spark, table)
+    assert(snap.count() == 301)
+    assert(snap.filter(col("id").isin(150L, 250L, 400L)).orderBy("id").collect()
+      .map(_.getString(1)).toSeq == Seq("U150", "U250", "U400"))
   }
 }

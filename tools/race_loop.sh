@@ -15,6 +15,9 @@
 # IngestChainSpec and BloomDedupGateSpec because the content gate's Bloom
 # filter is driver state too (BloomDedupGate.forStore, one per store
 # path), shared by every drain and folded forward from a store listing.
+# PacedExtractorSpec and GraftDataSourceSpec because they read manifest
+# tables through ManifestTable's per-dir schema cache, JVM-wide state that
+# every commit fills as it writes.
 #
 # Usage: tools/race_loop.sh [iterations] [stress_cores]
 #   defaults: 50 iterations, half of `nproc` stressor cores (more
@@ -30,7 +33,8 @@ STRESS="${2:-$(( HALF > 0 ? HALF : 1 ))}"
 SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec \
 graft.ManifestHardeningSpec graft.MergeCommitSpec graft.CloneRestoreSpec \
 graft.GraftDeleteSpec graft.ImpactIndexSpec graft.ImpactDedupGateSpec \
-graft.BronzePipelineSpec graft.IngestChainSpec graft.BloomDedupGateSpec"
+graft.BronzePipelineSpec graft.IngestChainSpec graft.BloomDedupGateSpec \
+graft.PacedExtractorSpec graft.GraftDataSourceSpec"
 OUT="tools/race_loop_results.txt"
 
 # append (never truncate): the results file is the round's cumulative
