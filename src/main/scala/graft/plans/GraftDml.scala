@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.util.Try
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,13 +7,13 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRe
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, Command, DeleteAction, InsertAction, InsertStarAction, LeafNode, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable, Filter => LogicalFilter}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.sources.{Filter => V2Filter}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{GraftCatalog, GraftDataSource, ManifestTable}
+import graft.sources.{ColStats, GraftCatalog, GraftDataSource, ManifestTable}
 
 /** SQL `MERGE INTO` and `UPDATE` for graft-catalog tables — the two DML
   * statements every Delta/Iceberg user reaches for first, wired onto the
@@ -51,10 +49,13 @@ import graft.sources.{GraftCatalog, GraftDataSource, ManifestTable}
   * update set, and [[ManifestTable.mergeCommit]] stats-prunes the
   * rewrite to the commits whose key ranges the delta can touch. The
   * explicit-assignment forms need target rows to compute updated values;
-  * that read is pruned to the source's key envelope via
-  * [[ManifestTable.readWhere]]. `UPDATE` classifies commits against the
-  * resolved predicate's pushable conjuncts and rewrites only the
-  * can-match subset ([[ManifestTable.cowRewriteCommit]]).
+  * that read is pruned to the commits the same key-envelope test keeps
+  * ([[ColStats.envelope]] and [[ColStats.mayHold]], mergeCommit's own),
+  * so timestamp keys compare as UTC instants in every session zone.
+  * `UPDATE` classifies commits against the resolved predicate's pushable
+  * conjuncts and rewrites only the can-match subset
+  * ([[ManifestTable.cowRewriteCommit]]). Every one of these decisions
+  * goes through [[ColStats]].
   */
 private[graft] final case class Opaque[T](value: T) {
   // catalyst trees must not leak into TreeNode argString either: a
@@ -350,27 +351,19 @@ object GraftDml {
       (if (starUpsert) " (star upsert, target unread)" else ""))
   }
 
-  /** The target rows an assignment-form merge can possibly touch: commits
-    * overlapping the source's key envelope, via [[ManifestTable.readWhere]]'s
-    * stats pruning. Falls back to the full snapshot on any surprise
-    * (non-string-able bounds, empty source) — correctness never depends
-    * on the prune.
+  /** The target rows an assignment-form merge can touch: the commits
+    * [[ManifestTable.mergeCommit]] itself would rewrite for these keys —
+    * the source keys' envelope ([[ColStats.envelope]], one aggregate
+    * action) tested per commit by the same [[ColStats.mayHold]]. A key
+    * whose source and target tags differ prunes nothing, and a source
+    * with no taggable key runs no envelope and reads every commit.
     */
   private def prunedTarget(spark: SparkSession, path: String,
-      keys: Seq[(String, String)], srcDf: DataFrame): DataFrame =
-    Try {
-      val aggs = keys.flatMap { case (_, s) => Seq(
-        min(col(s)).cast(StringType).as(s"mn_$s"),
-        max(col(s)).cast(StringType).as(s"mx_$s")) }
-      val row = srcDf.select(aggs: _*).head()
-      val ranges = keys.map { case (t, s) =>
-        val lo = row.getAs[String](s"mn_$s")
-        val hi = row.getAs[String](s"mx_$s")
-        require(lo != null && hi != null)
-        (t, lo, hi)
-      }
-      ManifestTable.readWhere(spark, path, ranges)
-    }.getOrElse(ManifestTable.read(spark, path))
+      keys: Seq[(String, String)], srcDf: DataFrame): DataFrame = {
+    val tags = keys.flatMap { case (_, s) => ColStats.tagOf(srcDf.schema, s).map(s -> _) }.toMap
+    val env = ColStats.envelope(srcDf, tags)._2
+    ManifestTable.readEntries(spark, path)(e => ColStats.mayHold(e.stats, env, keys))
+  }
 }
 
 /** Eager MERGE command: one result row reporting the committed version. */

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.functions.{coalesce, col, lit, not}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** SQL/catalog surface for [[ManifestTable]] — the lakehouse layer as a
@@ -40,7 +40,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - **Dir-level stats pruning.** Pushed range predicates are evaluated
   *     against each commit's recorded min/max ([[ManifestTable.Entry]]
   *     stats) and non-matching data dirs are dropped from the scan
-  *     entirely — the SQL-facing twin of [[ManifestTable.readWhere]].
+  *     entirely — the SQL-facing twin of [[ManifestTable.readWhere]],
+  *     deciding through the same [[ColStats]] tag map and comparators.
   *     Pruning is advisory: every pushed filter is ALSO returned as a
   *     residual, so Spark re-evaluates rows and correctness never
   *     depends on the stats (absent or unparseable stats simply keep
@@ -191,7 +192,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
 }
 
 private[graft] object GraftDataSource {
-  import ManifestTable.{ColStat, Entry}
+  import ManifestTable.Entry
 
   /** The single `path` option, trimmed and validated — ONE rule for all
     * four entry surfaces (table resolution, V1 save, stream setup,
@@ -366,81 +367,6 @@ private[graft] object GraftDataSource {
     (path, ManifestTable.snapshotSchemaOf(spark, path, head), since, maxV)
   }
 
-  /** Stats tag for a column type — MUST mirror [[ManifestTable.statTags]]
-    * (the write side): a read-side tag the write side never records is
-    * just "no stats = no pruning", but a mismatched canonical FORM would
-    * prune wrongly. None = type never carries stats, never prunes.
-    */
-  private def tagOf(schema: StructType, column: String): Option[String] =
-    schema.find(_.name == column).map(_.dataType).collect {
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType => "num"
-      case StringType | DateType => "str"
-      case TimestampType => "ts"
-      case TimestampNTZType => "tsn"
-    }
-
-  /** A filter value rendered in the stat tag's canonical string form, or
-    * None when it can't be (null literal, unexpected runtime type) — in
-    * which case the dir is kept, never pruned.
-    */
-  private def canon(tag: String, v: Any): Option[String] = v match {
-    case null => None
-    case _ => tag match {
-      case "num" => scala.util.Try(BigDecimal(v.toString).toString).toOption
-      case "ts" => v match {
-        case t: java.sql.Timestamp => // floorDiv: pre-epoch instants too
-          Some(ManifestTable.tsCanon(
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L))
-        case i: java.time.Instant =>
-          Some(ManifestTable.tsCanon(
-            i.getEpochSecond * 1000000L + i.getNano / 1000L))
-        case l: java.lang.Long =>
-          // defensive: a bare long against a TimestampType column (the
-          // tag came from the schema) can only sanely mean Catalyst's
-          // internal epoch micros. Spark's own filter translation
-          // (incl. the DELETE path's V2→V1 shim, which DOES run
-          // convertToScala on literals - verified in 4.1.2) never
-          // delivers this; a library caller building raw Filters might
-          Some(ManifestTable.tsCanon(l))
-        case _ => None
-      }
-      case "tsn" => v match { // NTZ: pure wall time, fixed-width render
-        case ldt: java.time.LocalDateTime =>
-          Some(java.time.format.DateTimeFormatter
-            .ofPattern(ManifestTable.TsPattern).format(ldt))
-        case l: java.lang.Long => // internal micros = wall-time-as-UTC
-          Some(ManifestTable.tsCanon(l))
-        // NO java.sql.Timestamp branch: a Timestamp is an INSTANT, and
-        // rendering it as NTZ wall time needs a zone nobody specified -
-        // toLocalDateTime would use the JVM default, making the proof
-        // bound zone-dependent (over-deletion risk). No canon = no
-        // proof = conservative.
-        case _ => None
-      }
-      case _ => v match { // "str": strings raw; dates as yyyy-MM-dd
-        case s: String => Some(s)
-        case d: java.sql.Date => Some(d.toString)
-        case d: java.time.LocalDate => Some(d.toString)
-        case _ => None
-      }
-    }
-  }
-
-  /** Can a commit's recorded [min,max] for one column intersect
-    * [lo, hi] (None = that side unbounded)? Bounds arrive already in the
-    * tag's canonical form. ONE comparator serves this, the merge path,
-    * and their parse-tolerance posture: [[ManifestTable.statOverlap]]
-    * (decimal for num; UTF-8 BINARY order for str/ts canonical forms —
-    * the order Spark's min/max recorded them in; any parse surprise
-    * keeps the dir). [[ManifestTable.prunedDataDirs]] stays separate on
-    * purpose: there an unparseable CALLER bound is a caller bug and
-    * throws, while a planner-path filter must never throw, only decline
-    * to prune.
-    */
-  private def statCanMatch(s: ColStat, lo: Option[String], hi: Option[String]): Boolean =
-    ManifestTable.statOverlap(s.tag, s, lo, hi)
-
   /** Dir-level answer to "can this commit hold rows matching `f`?" —
     * strictly conservative: true unless the stats PROVE no row can
     * match. Strict vs non-strict inequalities deliberately collapse
@@ -452,11 +378,11 @@ private[graft] object GraftDataSource {
   private[graft] def entryCanMatch(schema: StructType, e: Entry, f: Filter): Boolean = {
     def bounded(c: String, lo: Option[Any], hi: Option[Any]): Boolean =
       (for {
-        tag <- tagOf(schema, c)
-        stat <- e.stats.get(c)
-      } yield statCanMatch(stat,
-        lo.flatMap(canon(tag, _)), hi.flatMap(canon(tag, _))))
-        .getOrElse(true) // no stats / untagged type: never prune
+        tag <- ColStats.tagOf(schema, c)
+        stat <- e.stats.get(c).filter(_.tag == tag)
+      } yield ColStats.overlap(stat,
+        lo.flatMap(ColStats.literal(tag, _)), hi.flatMap(ColStats.literal(tag, _))))
+        .getOrElse(true) // no stats / untagged type / another tag: never prune
     f match {
       case AlwaysTrue() => true
       case AlwaysFalse() => false // no row can match FALSE: prunable, and
@@ -508,11 +434,11 @@ private[graft] object GraftDataSource {
     def within(c: String, lo: Option[Any], loStrict: Boolean,
         hi: Option[Any], hiStrict: Boolean): Boolean =
       noNulls(c) && (for {
-        tag <- tagOf(schema, c)
-        stat <- e.stats.get(c)
-        loC <- sequenceOpt(lo.map(canon(tag, _)))
-        hiC <- sequenceOpt(hi.map(canon(tag, _)))
-      } yield statAllIn(tag, stat, loC, loStrict, hiC, hiStrict))
+        tag <- ColStats.tagOf(schema, c)
+        stat <- e.stats.get(c).filter(_.tag == tag)
+        loC <- sequenceOpt(lo.map(ColStats.literal(tag, _)))
+        hiC <- sequenceOpt(hi.map(ColStats.literal(tag, _)))
+      } yield ColStats.allIn(stat, loC, loStrict, hiC, hiStrict))
         .getOrElse(false)
     f match {
       case AlwaysTrue() => true
@@ -538,25 +464,6 @@ private[graft] object GraftDataSource {
     }
   }
 
-  /** Recorded [mn,mx] ⊆ the bound interval, honoring strictness. False
-    * on any parse surprise — an unproven delete must refuse, never drop.
-    */
-  private def statAllIn(tag: String, s: ColStat, lo: Option[String],
-      loStrict: Boolean, hi: Option[String], hiStrict: Boolean): Boolean =
-    tag match {
-      case "num" => scala.util.Try {
-        lo.forall(l => if (loStrict) BigDecimal(s.min) > BigDecimal(l)
-          else BigDecimal(s.min) >= BigDecimal(l)) &&
-        hi.forall(h => if (hiStrict) BigDecimal(s.max) < BigDecimal(h)
-          else BigDecimal(s.max) <= BigDecimal(h))
-      }.getOrElse(false)
-      case _ => // ts + str canonical forms: UTF-8 binary order
-        lo.forall(l => { val c = ManifestTable.utf8Cmp(s.min, l)
-          if (loStrict) c > 0 else c >= 0 }) &&
-        hi.forall(h => { val c = ManifestTable.utf8Cmp(s.max, h)
-          if (hiStrict) c < 0 else c <= 0 })
-    }
-
   /** Some(None→None lifted): Some(x) iff the inner canon succeeded. */
   private def sequenceOpt(o: Option[Option[String]]): Option[Option[String]] =
     o match {
@@ -569,17 +476,20 @@ private[graft] object GraftDataSource {
     * reported back as "pushed" so `explain` shows exactly the filters
     * the manifest stats will be consulted for.
     */
-  private def prunable(schema: StructType, f: Filter): Boolean = f match {
-    case EqualTo(c, _) => tagOf(schema, c).isDefined
-    case GreaterThan(c, _) => tagOf(schema, c).isDefined
-    case GreaterThanOrEqual(c, _) => tagOf(schema, c).isDefined
-    case LessThan(c, _) => tagOf(schema, c).isDefined
-    case LessThanOrEqual(c, _) => tagOf(schema, c).isDefined
-    case In(c, _) => tagOf(schema, c).isDefined
-    case EqualNullSafe(c, v) => v != null && tagOf(schema, c).isDefined
-    case And(l, r) => prunable(schema, l) || prunable(schema, r)
-    case Or(l, r) => prunable(schema, l) && prunable(schema, r)
-    case _ => false
+  private def prunable(schema: StructType, f: Filter): Boolean = {
+    def tagged(c: String) = ColStats.tagOf(schema, c).isDefined
+    f match {
+      case EqualTo(c, _) => tagged(c)
+      case GreaterThan(c, _) => tagged(c)
+      case GreaterThanOrEqual(c, _) => tagged(c)
+      case LessThan(c, _) => tagged(c)
+      case LessThanOrEqual(c, _) => tagged(c)
+      case In(c, _) => tagged(c)
+      case EqualNullSafe(c, v) => v != null && tagged(c)
+      case And(l, r) => prunable(schema, l) || prunable(schema, r)
+      case Or(l, r) => prunable(schema, l) && prunable(schema, r)
+      case _ => false
+    }
   }
 
   /** Filter → Column for re-application inside the V1 scan, so parquet

@@ -3,12 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.util.{Base64, UUID}
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, count, date_format, lit, max, min, struct, sum, to_json, unix_micros, when}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, max, struct, sum, to_json, when}
 import org.apache.spark.sql.graft.SchemaBridge
 import org.apache.spark.sql.types._
 
@@ -151,8 +148,8 @@ object ManifestTable {
   // ---- manifest entry format ---------------------------------------------
   // one line per data dir:  <dir>[\t<col>:<tag>:<minB64>:<maxB64>[:<nulls>];...]
   // stats values are base64 so arbitrary string minima can't collide with
-  // the separators; tag is `num` (compare as decimal) or `str` (compare
-  // lexically — correct for strings and ISO dates). `nulls` (the column's
+  // the separators; the tag (`num`, `str`, `ts`, `tsn`) and the canonical
+  // form of min/max are [[ColStats]]'s. `nulls` (the column's
   // null-row count in the dir) is an optional FIFTH field: min/max prove
   // what a dir CANNOT contain, but an ALL-rows-match proof (metadata-only
   // DELETE) additionally needs "no rows where the predicate evaluates
@@ -275,7 +272,7 @@ object ManifestTable {
     * that have no way to name them. Self-sustaining: once any commit in
     * the snapshot carries stats on a column, every inheriting append
     * keeps recording it (columns absent from the written schema are
-    * skipped by [[statTags]], never wrong).
+    * skipped by [[ColStats.tags]], never wrong).
     */
   private[graft] def headStatsCols(spark: SparkSession, table: String): Seq[String] =
     statsColsOf(manifestEntries(spark, table, highestManifest(spark, table)))
@@ -283,99 +280,10 @@ object ManifestTable {
   private def statsColsOf(entries: Seq[Entry]): Seq[String] =
     entries.flatMap(_.stats.keys).distinct.sorted
 
-  /** Column → stats tag for the supported types; unsupported columns are
-    * skipped (absent stats = the dir is never pruned — always safe).
-    */
-  private def statTags(schema: StructType, statsCols: Seq[String]): Map[String, String] = {
-    // column names are manifest-format separators' namespace
-    statsCols.foreach(c => require(!c.exists(":;\t\n".contains(_)),
-      s"manifest-table: stats column name '$c' may not contain : ; tab or newline"))
-    statsCols.flatMap { c =>
-      schema.find(_.name == c).map(_.dataType).collect {
-        case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
-             _: FloatType | _: DoubleType => c -> "num"
-        case _: StringType | _: DateType => c -> "str"
-        // timestamps go through epoch micros, NOT a string cast: the
-        // rendered form depends on spark.sql.session.timeZone, so stats
-        // written by one session and bounds given to another would
-        // silently prune matching dirs. Micros are the tz-independent
-        // instant; [[tsCanon]] renders them canonically in UTC.
-        case _: TimestampType => c -> "ts"
-        // NTZ timestamps (what parquet timestamp columns with
-        // isAdjustedToUTC=false load as — e.g. every testdata ts) are
-        // pure WALL TIME: date_format renders them session-independently,
-        // and the fixed-width layout (same as tsCanon's) sorts lexically
-        // = chronologically. Going through micros here would be the bug
-        // the ts comment warns about — NTZ→LTZ casts interpret the wall
-        // time in the SESSION zone.
-        case _: TimestampNTZType => c -> "tsn"
-      }
-    }.toMap
-  }
-
-  private def statAggs(tags: Map[String, String]): Seq[org.apache.spark.sql.Column] =
-    tags.toSeq.sortBy(_._1).flatMap { case (c, tag) =>
-      val e = tag match {
-        case "ts" => unix_micros(colExact(c))
-        case "tsn" => date_format(colExact(c), TsPattern) // already canonical
-        case _ => colExact(c)
-      }
-      Seq(min(e).cast("string").as(s"mn_$c"), max(e).cast("string").as(s"mx_$c"),
-        // null count rides the same single agg pass: count(*) - count(c)
-        (count(lit(1)) - count(colExact(c))).as(s"nc_$c"))
-    }
-
-  private[graft] val TsPattern = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-  /** Canonical UTC rendering of an epoch-micros instant — fixed width, so
-    * lexical order IS chronological order (years 0001–9999).
-    */
-  private[graft] def tsCanon(micros: Long): String =
-    java.time.format.DateTimeFormatter.ofPattern(TsPattern)
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.EPOCH.plus(micros, java.time.temporal.ChronoUnit.MICROS))
-
-  /** A caller's timestamp bound, canonicalized: "yyyy-MM-dd[ HH:mm:ss
-    * [.fraction]]", interpreted as UTC (deliberately NOT the session
-    * timezone — stats must mean the same thing to every session).
-    */
-  private def tsCanonBound(s: String): String = {
-    val t = s.trim
-    val ldt =
-      try {
-        if (t.length == 10) java.time.LocalDate.parse(t).atStartOfDay()
-        else java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-      } catch {
-        case e: java.time.format.DateTimeParseException =>
-          throw new IllegalArgumentException(
-            s"manifest-table: timestamp bound '$s' is not yyyy-MM-dd[ HH:mm:ss[.f]]", e)
-      }
-    tsCanon(ldt.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L +
-      ldt.getNano / 1000L)
-  }
-
-  /** Decode one agg row (as produced by [[statAggs]]) into ColStats,
-    * dropping anything unrecordable — null bounds, non-finite numerics
-    * (NaN/Infinity minima or maxima would make every future
-    * prunedDataDirs call throw). Unrecorded = unprunable, never wrong.
-    */
-  private def rowStats(tags: Map[String, String],
-      row: org.apache.spark.sql.Row): Map[String, ColStat] = {
-    def finite(tag: String, s: String) =
-      tag != "num" || scala.util.Try(BigDecimal(s)).isSuccess
-    tags.flatMap { case (c, tag) =>
-      val (mn, mx) = (row.getAs[String](s"mn_$c"), row.getAs[String](s"mx_$c"))
-      val nulls = Option(row.getAs[Long](s"nc_$c"))
-      if (mn == null || mx == null || !finite(tag, mn) || !finite(tag, mx)) None
-      else if (tag == "ts") Some(c -> ColStat(tag, tsCanon(mn.toLong), tsCanon(mx.toLong), nulls))
-      else Some(c -> ColStat(tag, mn, mx, nulls))
-    }
-  }
-
   /** Write `df` as data dir `dirName` and return its manifest entry.
     * Everything the entry records is taken from the write itself, in its
     * one job: the min/max/null stats on `statsCols` ride the write as an
-    * `Observation` (the same [[statAggs]] a read-back of the dir would
+    * `Observation` (the same [[ColStats.aggs]] a read-back of the dir would
     * compute, over the same rows), and the schema the files carry
     * (`df.schema.asNullable`, what the parquet writer puts in every
     * footer) goes into the per-dir schema cache, so no later snapshot
@@ -387,28 +295,11 @@ object ManifestTable {
       dirName: String = newDataDirName(), mode: String = "errorifexists"): Entry = {
     val spark = df.sparkSession
     val dir = new Path(table, dirName)
-    val tags = statTags(df.schema, statsCols)
-    val stats =
-      if (tags.isEmpty) { df.write.mode(mode).parquet(dir.toString); Map.empty[String, ColStat] }
-      else observed(df, statAggs(tags))(_.write.mode(mode).parquet(dir.toString))
-        .fold(Map.empty[String, ColStat])(rowStats(tags, _))
+    val stats = ColStats.written(df, ColStats.tags(df.schema, statsCols))(
+      _.write.mode(mode).parquet(dir.toString))
     dirSchemas.put(dirKey(spark, dir), SchemaBridge.asNullable(df.schema))
     Entry(dirName, stats)
   }
-
-  /** Run `action` over `df` with `aggs` observed on it (no added job) and
-    * return the observed row — None when no metrics came back, which an
-    * action that ran no task can leave, or none came within the wait.
-    * The metrics complete on the listener bus once the action's query
-    * ends.
-    */
-  private def observed(df: DataFrame, aggs: Seq[Column])(action: DataFrame => Unit): Option[Row] = {
-    val obs = Observation()
-    action(df.observe(obs, aggs.head, aggs.tail: _*))
-    scala.util.Try(Await.result(obs.future, ObservedWait)).toOption.filter(_.length > 0)
-  }
-
-  private val ObservedWait = 5.minutes
 
   /** Zero rows of `schema` in one partition: written, one footer. */
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
@@ -663,9 +554,8 @@ object ManifestTable {
     * time-travel / long-running-job consistency.
     */
   def read(spark: SparkSession, table: String, version: Long = 0L): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    require(v > 0, s"manifest-table: $table has no committed version")
-    val paths = dataDirs(spark, table, v).map(d => new Path(table, d).toString)
+    val paths = dataDirs(spark, table, snapshotVersion(spark, table, version))
+      .map(d => new Path(table, d).toString)
     // mergeSchema: evolved snapshots read as the union of their commits'
     // schemas (missing columns null-fill); identical-schema tables read
     // unchanged. Cost is a footer read per file at planning - compact
@@ -673,69 +563,15 @@ object ManifestTable {
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
   }
 
-  /** The data dirs of a snapshot whose recorded [min,max] for `column`
-    * intersects [lo,hi] — plus any dir with no stats for the column
-    * (absent stats never prune: always safe, never complete-silently-
-    * wrong). Bounds are the stats' string form: decimal strings for
-    * numeric columns, raw values for string/date.
+  /** The data dirs of a snapshot whose recorded stats can hold `column`
+    * in [lo, hi] — [[readWhere]]'s pruning of one range, plus any dir with
+    * no stats for the column (absent stats never prune). Bounds are
+    * [[ColStats.bound]]'s caller strings.
     */
   private[graft] def prunedDataDirs(spark: SparkSession, table: String,
-      column: String, lo: String, hi: String, version: Long = 0L): Seq[String] = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    require(v > 0, s"manifest-table: $table has no committed version")
-    // caller bounds parse OUTSIDE the per-entry tolerance: a non-numeric
-    // bound against a num column is a caller bug that must fail loudly,
-    // not degrade into a silent full-table scan
-    lazy val callerBounds =
-      try (BigDecimal(lo), BigDecimal(hi))
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"manifest-table: non-numeric bounds [$lo,$hi] for numeric column $column")
-      }
-    // ts bounds likewise parse outside the per-entry tolerance - a
-    // malformed timestamp bound is a caller bug, not a full-scan request
-    lazy val tsBounds = (tsCanonBound(lo), tsCanonBound(hi))
-    manifestEntries(spark, table, v).filter { e =>
-      e.stats.get(column) match {
-        case None => true
-        case Some(ColStat("num", mn, mx, _)) =>
-          val (l, h) = callerBounds
-          // unparseable RECORDED bounds keep the dir - pruning must only
-          // ever skip what provably cannot match
-          scala.util.Try(BigDecimal(mx) >= l && BigDecimal(mn) <= h)
-            .getOrElse(true)
-        case Some(ColStat("ts", mn, mx, _)) =>
-          val (l, h) = tsBounds
-          mx >= l && mn <= h
-        case Some(ColStat("tsn", mn, mx, _)) =>
-          // NTZ: same canonical layout, bounds interpreted as wall time
-          val (l, h) = tsBounds
-          mx >= l && mn <= h
-        case Some(ColStat(_, mn, mx, _)) =>
-          utf8Leq(lo, mx) && utf8Leq(mn, hi)
-      }
-    }.map(_.dir)
-  }
-
-  /** UTF-8 binary `a <= b` — the ORDER THE RECORDED STATS USE. Spark's
-    * string min/max compare UTF8String bytes unsigned (code-point order);
-    * Scala's `<=` compares UTF-16 code units, and the two DISAGREE
-    * exactly on strings mixing BMP chars ≥ U+E000 with supplementary
-    * chars (surrogates 0xD800-0xDFFF sort below 0xE000 in UTF-16 but
-    * encode as higher UTF-8 bytes) — e.g. real text with emoji. Pruning
-    * string bounds with the wrong order silently DROPS matching dirs, so
-    * every string-stat comparison goes through here. (ts stats are
-    * fixed-width ASCII and date strings are ASCII — either order agrees —
-    * but they could route through here too without harm.)
-    */
-  private[graft] def utf8Leq(a: String, b: String): Boolean = utf8Cmp(a, b) <= 0
-
-  /** Three-way UTF-8 binary compare — for the strict-inequality side of
-    * all-rows-match proofs, where `<=` and `<` genuinely differ.
-    */
-  private[graft] def utf8Cmp(a: String, b: String): Int =
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))
+      column: String, lo: String, hi: String, version: Long = 0L): Seq[String] =
+    manifestEntries(spark, table, snapshotVersion(spark, table, version))
+      .filter(ColStats.inRanges(Seq((column, lo, hi)))).map(_.dir)
 
   /** Range-scoped snapshot read: scans only the commits whose recorded
     * stats can contain `column ∈ [lo, hi]`. The caller still applies its
@@ -748,27 +584,37 @@ object ManifestTable {
   /** Multi-predicate pruned read: a commit survives only if EVERY
     * (column, lo, hi) range can match its recorded stats — conjunctive
     * pruning, so each extra predicate can only shrink the scan (e.g. a
-    * time window AND a key range on a table committed by day).
-    *
-    * The result always carries the FULL snapshot schema: on an evolved
-    * table, a column living only in pruned-out commits null-fills rather
-    * than disappearing — otherwise the schema would depend on which
-    * commits a predicate happens to keep, breaking any caller that
-    * references an evolved column.
+    * time window AND a key range on a table committed by day). A bound
+    * that does not parse in the tag a commit recorded throws
+    * ([[ColStats.bound]]).
     */
   def readWhere(spark: SparkSession, table: String,
       ranges: Seq[(String, String, String)], version: Long = 0L): DataFrame = {
     require(ranges.nonEmpty, "readWhere needs at least one (column, lo, hi)")
-    // resolve the snapshot ONCE: per-predicate resolution could straddle a
-    // concurrent commit and intersect dir sets from different versions
-    // (typically an empty - silently wrong - result)
+    readEntries(spark, table, version)(ColStats.inRanges(ranges))
+  }
+
+  /** The commits of ONE snapshot (`version`, default the current one)
+    * that `keep` accepts, read from one manifest read. The result always
+    * carries the FULL snapshot schema: on an evolved table, a column
+    * living only in pruned-out commits null-fills rather than
+    * disappearing — otherwise the schema would depend on which commits a
+    * predicate happens to keep.
+    */
+  private[graft] def readEntries(spark: SparkSession, table: String,
+      version: Long = 0L)(keep: Entry => Boolean): DataFrame = {
+    val entries = manifestEntries(spark, table, snapshotVersion(spark, table, version))
+    sliceRead(spark, table, entries.filter(keep).map(_.dir).sorted,
+      snapshotSchema(spark, table, entries.map(_.dir)))
+  }
+
+  /** `version`, or the current one when 0; a table with no committed
+    * version refuses.
+    */
+  private def snapshotVersion(spark: SparkSession, table: String, version: Long): Long = {
     val v = if (version > 0) version else currentVersion(spark, table)
     require(v > 0, s"manifest-table: $table has no committed version")
-    val dirs = ranges.map { case (c, lo, hi) =>
-      prunedDataDirs(spark, table, c, lo, hi, v).toSet
-    }.reduce(_ intersect _)
-    sliceRead(spark, table, dirs.toSeq.sorted,
-      snapshotSchema(spark, table, dataDirs(spark, table, v)))
+    v
   }
 
   /** Whether `version`'s manifest is still present (committed and not
@@ -1111,43 +957,26 @@ object ManifestTable {
     require(keyCols.nonEmpty, "manifest-table: merge needs key columns")
     keyCols.foreach(c => require(updates.columns.contains(c),
       s"manifest-table: key column $c missing from updates"))
-    val keyTags = statTags(updates.schema, keyCols)
+    val keyTags = ColStats.tags(updates.schema, keyCols)
     keyCols.foreach(c => require(keyTags.contains(c),
       s"manifest-table: key column $c has no comparable stats type " +
         "(num/str/date/ts) - range pruning cannot bound the rewrite"))
     val u = graft.CacheHygiene.materializeLazy(updates, "merge updates")
     try {
       // one row per distinct key: its multiplicity proves key-uniqueness,
-      // and the key envelope over distinct keys is the rows' envelope.
-      // The envelope is in the SAME canonical forms the manifest stats
-      // use, so overlap compares apples to apples; a null-key group
-      // counts as a null there
+      // and the key envelope over distinct keys is the rows' envelope; a
+      // null-key group counts as a null there
       val perKey = u.groupBy(keyCols.map(colExact): _*).agg(count(lit(1)).as("__graft_n"))
-      val checks = Seq(sum("__graft_n").as("__graft_rows"), max("__graft_n").as("__graft_maxn")) ++
-        statAggs(keyTags)
-      // observed on a discarding write: the global aggregate would add a
-      // single-partition shuffle (one more job) to the same answer
-      val check = observed(perKey, checks)(_.write.format("noop").mode("overwrite").save())
-        .getOrElse(perKey.agg(checks.head, checks.tail: _*).head())
-      if (check.isNullAt(0)) { // empty updates: a no-op
-        val v = currentVersion(spark, table)
-        require(v > 0, s"manifest-table: $table has no committed version")
-        return v
-      }
+      val (check, kstats) = ColStats.envelope(perKey, keyTags,
+        Seq(sum("__graft_n").as("__graft_rows"), max("__graft_n").as("__graft_maxn")))
+      if (check.isNullAt(0)) // empty updates: a no-op
+        return snapshotVersion(spark, table, 0L)
       require(check.getLong(1) == 1L,
         s"manifest-table: updates are not key-unique on ${keyCols.mkString(",")} " +
           "(the SQL MERGE multiple-match rule)")
-      val kstats = rowStats(keyTags, check)
       keyCols.foreach(c => require(kstats.get(c).exists(_.nulls.contains(0L)),
         s"manifest-table: null keys in updates column $c"))
-
-      def affectedBy(e: Entry): Boolean = keyCols.forall { c =>
-        (e.stats.get(c), kstats.get(c)) match {
-          case (Some(s), Some(k)) if s.tag == k.tag =>
-            statOverlap(s.tag, s, Some(k.min), Some(k.max))
-          case _ => true // no/mismatched stats: cannot prove disjoint
-        }
-      }
+      val keys = keyCols.map(c => c -> c)
 
       publish(spark, table) { (v, entries) =>
         if (v == 0) // merge into nothing = create
@@ -1155,7 +984,8 @@ object ManifestTable {
             statsCols = if (statsCols.nonEmpty) statsCols else keyCols))
         else {
           checkAppendSchema(spark, table, entries, u, allowEvolution = false)
-          val (affected, untouched) = entries.partition(affectedBy)
+          val (affected, untouched) =
+            entries.partition(e => ColStats.mayHold(e.stats, kstats, keys))
           val schema = snapshotSchema(spark, table, entries.map(_.dir))
           // snapshot column order, as the anti-join's union gives it
           val inserted = u.select(schema.fieldNames.map(colExact).toIndexedSeq: _*)
@@ -1183,27 +1013,6 @@ object ManifestTable {
       }
     } finally graft.CacheHygiene.release(u)
   }
-
-  /** THE interval-intersection predicate over recorded stats: can a
-    * commit's [min,max] for one column intersect the canonical [lo, hi]
-    * (None = unbounded side)? Shared by [[mergeCommit]]'s affected-dir
-    * decision and the SQL scan's dir pruning
-    * ([[GraftDataSource]].statCanMatch delegates here) so the comparison
-    * semantics — decimal for num, UTF-8 binary for str/ts canonical
-    * forms — cannot drift between the merge path and the read path. Any
-    * parse surprise keeps the dir: never-prove-disjoint is the safe
-    * direction on both paths.
-    */
-  private[graft] def statOverlap(tag: String, s: ColStat,
-      lo: Option[String], hi: Option[String]): Boolean =
-    tag match {
-      case "num" => scala.util.Try {
-        lo.forall(l => BigDecimal(s.max) >= BigDecimal(l)) &&
-          hi.forall(h => BigDecimal(s.min) <= BigDecimal(h))
-      }.getOrElse(true)
-      case _ =>
-        lo.forall(l => utf8Leq(l, s.max)) && hi.forall(h => utf8Leq(s.min, h))
-    }
 
   /** Rewrite the current snapshot into ~targetBytes files and commit the
     * result as a new version — compaction with zero reader-visible
@@ -1327,15 +1136,15 @@ object ManifestTable {
       // Guarded on bucketDirs: an empty snapshot stages no partition dirs
       // and a discovery read of the bare _SUCCESS would fail schema
       // inference before the empty-table fallback below could run.
-      val tags = statTags(snapshot.schema, recordCols)
+      val tags = ColStats.tags(snapshot.schema, recordCols)
       val bucketStats: Map[Int, Map[String, ColStat]] =
         if (tags.isEmpty || bucketDirs.isEmpty) Map.empty
         else {
           val staged = spark.read.parquet(staging.toString)
-          val aggs = statAggs(tags)
+          val aggs = ColStats.aggs(tags)
           staged.groupBy(col(BucketCol)).agg(aggs.head, aggs.tail: _*)
             .collect()
-            .map(r => r.getAs[Number](BucketCol).intValue() -> rowStats(tags, r))
+            .map(r => r.getAs[Number](BucketCol).intValue() -> ColStats.decode(tags, r))
             .toMap
         }
       val entries =
@@ -1373,8 +1182,7 @@ object ManifestTable {
     */
   def cloneShallow(spark: SparkSession, source: String, target: String,
       version: Long = 0L): Long = {
-    val v = if (version > 0) version else currentVersion(spark, source)
-    require(v > 0, s"manifest-table: $source has no committed version")
+    val v = snapshotVersion(spark, source, version)
     require(versionExists(spark, source, v),
       s"manifest-table: clone source version $v of $source is not retained")
     val srcRoot = { val p = new Path(source); fs(spark, p).makeQualified(p) }

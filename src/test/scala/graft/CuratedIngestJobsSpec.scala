@@ -5,9 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.graft.ListenerBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.sources.BronzeLayer
@@ -32,23 +30,6 @@ class CuratedIngestJobsSpec extends SparkSpec {
     "p10" -> soup(20, "c10"), "p11" -> soup(20, "c10")) // in-batch duplicate pair
   private val landedAfter2 = Set("p1", "p2", "p3", "p4", "p5", "p6", "p7", "p10")
 
-  /** The descriptions of the jobs `body` runs, in start order; the
-    * listener bus is drained before and after, so no job is lost or
-    * borrowed. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBridge.drain(sc) } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
-
   /** A planted chain under `root`; returns drain 2's jobs. */
   private def plantedDrains(root: String): Seq[String] = {
     import spark.implicits._
@@ -66,7 +47,7 @@ class CuratedIngestJobsSpec extends SparkSpec {
     stage(drain1)
     drain()
     stage(drain2)
-    jobsOf(drain())
+    jobsOf(drain()).map(_.description)
   }
 
   private def landed(root: String): Set[String] =

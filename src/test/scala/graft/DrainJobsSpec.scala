@@ -1,13 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, to_timestamp}
-import org.apache.spark.sql.graft.ListenerBridge
 
 import graft.sources.{BronzeLayer, ManifestTable}
 import graft.streaming.BronzePipeline
@@ -21,23 +16,6 @@ import graft.streaming.BronzePipeline
   */
 class DrainJobsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** The descriptions of the jobs `body` runs, in start order; the
-    * listener bus is drained before and after, so no job is lost or
-    * borrowed. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBridge.drain(sc) } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
 
   /** Land (id, source, hour) rows as bronze batch `batchId`. */
   private def land(root: String, batchId: String, rows: Seq[(String, String, Int)]): Unit =
@@ -66,7 +44,7 @@ class DrainJobsSpec extends SparkSpec {
     val r = root("graft_silver_jobs")
     val jobs = (1 to 6).map { i =>
       land(r, s"b$i", Seq((s"p$i", "hh", 10), (s"q$i", "ix", 11)))
-      jobsOf(silverDrain(r))
+      jobsOf(silverDrain(r)).map(_.description)
     }
     val counts = jobs.map(_.size)
     info(s"jobs per silver drain: ${counts.mkString(" ")}; drain 6: ${perStage(jobs.last)}")
@@ -83,7 +61,7 @@ class DrainJobsSpec extends SparkSpec {
     // the drop continues the published hour 10 and opens hour 11, so the
     // merge rewrites the hour-10 commit and inserts the new hour
     land(r, "b2", Seq(("p3", "hh", 10), ("p4", "hh", 11), ("p5", "ix", 11)))
-    val jobs = jobsOf(goldDrain(r))
+    val jobs = jobsOf(goldDrain(r)).map(_.description)
     info(s"gold drain: ${jobs.size} jobs (${perStage(jobs)})")
     assert(jobs.size <= 6, s"gold drain ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
     val gold = ManifestTable.read(spark, s"$r/gold")
@@ -102,7 +80,7 @@ class DrainJobsSpec extends SparkSpec {
       hours = ManifestTable.readRange(spark, s"$r/gold", "hour",
         "2024-09-23 11:00:00", "2024-09-23 13:00:00")
         .select($"hour".cast("string")).as[String].collect().toSeq.sorted
-    }
+    }.map(_.description)
     info(s"readRange: ${jobs.size} jobs")
     assert(jobs.size == 1, s"readRange ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
     assert(hours == Seq("2024-09-23 11:00:00", "2024-09-23 12:00:00", "2024-09-23 13:00:00"))
@@ -114,8 +92,8 @@ class DrainJobsSpec extends SparkSpec {
     silverDrain(r)
     goldDrain(r)
     land(r, "b2", Seq(("p2", "hh", 10), ("p3", "hh", 11)))
-    val silver = jobsOf(silverDrain(r))
-    val gold = jobsOf(goldDrain(r))
+    val silver = jobsOf(silverDrain(r)).map(_.description)
+    val gold = jobsOf(goldDrain(r)).map(_.description)
     assert(silver.nonEmpty && silver.forall(_ == "silver commit"),
       s"silver jobs outside their label:\n${silver.mkString("\n")}")
     assert(gold.nonEmpty && gold.forall(Set("gold hours", "gold merge")),

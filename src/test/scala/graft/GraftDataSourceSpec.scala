@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.{GraftDataSource, ManifestTable}
+import graft.sources.{ColStats, GraftDataSource, ManifestTable}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 
@@ -294,7 +294,7 @@ class GraftDataSourceSpec extends SparkSpec {
     val privateUse = "x"
     val emoji = new String(Character.toChars(0x1F600))
     assert(privateUse > emoji && // UTF-16 order says privateUse is bigger...
-      ManifestTable.utf8Leq(privateUse, emoji), // ...UTF-8 disagrees
+      ColStats.utf8Leq(privateUse, emoji), // ...UTF-8 disagrees
       "precondition: this pair must expose the ordering divergence")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("name",

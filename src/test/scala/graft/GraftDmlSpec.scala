@@ -106,6 +106,39 @@ class GraftDmlSpec extends SparkSpec {
       == 300.0)
   }
 
+  /** An assignment-form MERGE on a timestamp key, run in session `zone`:
+    * one target commit holding 10:00 and 12:00 UTC with stats on ts, and
+    * a source row at the 10:00 instant. Returns the amts by ts.
+    */
+  private def mergeOnTimestamp(cat: String, zone: String): Seq[Double] = {
+    val (_, table) = freshTable(cat)
+    def at(utc: String) = java.sql.Timestamp.from(java.time.Instant.parse(utc))
+    ManifestTable.commit(Seq((at("2024-09-23T10:00:00Z"), 1.0), (at("2024-09-23T12:00:00Z"), 2.0))
+      .toDF("ts", "amt"), table, append = false, statsCols = Seq("ts"))
+    Seq((at("2024-09-23T10:00:00Z"), 0.5)).toDF("ts", "bump")
+      .createOrReplaceTempView(s"${cat}_bumps")
+    val saved = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      spark.sql(s"""
+        MERGE INTO $cat.t AS t USING ${cat}_bumps AS s
+        ON t.ts = s.ts
+        WHEN MATCHED THEN UPDATE SET amt = t.amt + s.bump
+      """)
+      spark.sql(s"SELECT amt FROM $cat.t ORDER BY ts").as[Double].collect().toSeq
+    } finally spark.conf.set("spark.sql.session.timeZone", saved)
+  }
+
+  test("assignment MERGE on a timestamp key updates the matched row in UTC") {
+    assert(mergeOnTimestamp("dmltu", "UTC") == Seq(1.5, 2.0))
+  }
+
+  test("assignment MERGE on a timestamp key updates the matched row outside UTC") {
+    // the target read is pruned by the source keys' envelope: compared as
+    // UTC instants, the 10:00 commit must survive in a New York session
+    assert(mergeOnTimestamp("dmltn", "America/New_York") == Seq(1.5, 2.0))
+  }
+
   test("MERGE refusals: shape, key assignment, duplicate source keys") {
     val (_, table) = freshTable("dmlr")
     seedSplit(table)

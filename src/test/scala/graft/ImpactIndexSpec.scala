@@ -1,14 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.ListenerBridge
 import graft.operators.{ImpactHandle, TextOps}
 import graft.streaming.BronzePipeline
 
@@ -23,7 +20,7 @@ import graft.streaming.BronzePipeline
   * byte copy of one of them.
   */
 class ImpactIndexSpec extends SparkSpec {
-  import ImpactIndexSpec.Job
+  import SparkSpec.Job
 
   private def split(dir: String): (DataFrame, DataFrame, DataFrame) = split(spark, dir)
 
@@ -68,23 +65,6 @@ class ImpactIndexSpec extends SparkSpec {
     TextOps.impactSearchServe(queries, path).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("c_id"),
         r.getAs[Long]("lex_u"), r.getAs[Long]("rk"))).toSet
-
-  private def jobsOf(s: SparkSession)(body: => Unit): Seq[Job] = {
-    val seen = new ConcurrentLinkedQueue[Job]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        seen.add(Job(
-          props.exists(_.getProperty("spark.sql.execution.id") != null),
-          props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")))
-      }
-    }
-    val sc = s.sparkContext
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBridge.drain(sc) } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
 
   private def discovery(jobs: Seq[Job]): Seq[Job] =
     jobs.filter(j => !j.inQuery || j.description.startsWith("Listing leaf files"))
@@ -366,7 +346,7 @@ class ImpactIndexSpec extends SparkSpec {
   test("serve job guard: a warm request runs at most 8 jobs and re-discovers nothing") {
     val (_, queries, _) = split(sfDir)
     TextOps.impactSearchServe(queries, store).collect() // opens the handle
-    val warm = Seq.fill(2)(jobsOf(spark)(TextOps.impactSearchServe(queries, store).collect()))
+    val warm = Seq.fill(2)(jobsOf(TextOps.impactSearchServe(queries, store).collect()))
     warm.foreach { jobs =>
       assert(jobs.size <= 8, s"a warm request ran ${jobs.size} jobs: $jobs")
       assert(discovery(jobs).isEmpty,
@@ -375,7 +355,7 @@ class ImpactIndexSpec extends SparkSpec {
     // the guard reads what it means to: a store with no handle yet pays
     // the listing and schema jobs outside any query
     val fresh = copyOf(store)
-    val cold = jobsOf(spark)(TextOps.impactSearchServe(queries, fresh).collect())
+    val cold = jobsOf(TextOps.impactSearchServe(queries, fresh).collect())
     assert(discovery(cold).nonEmpty, s"an open must discover the store: $cold")
   }
 
@@ -436,16 +416,16 @@ class ImpactIndexSpec extends SparkSpec {
     val path = copyOf(store)
     servedRows(queries, path)
     val stores = ImpactHandle.size
-    val warm = jobsOf(spark)(servedRows(queries, path))
+    val warm = jobsOf(servedRows(queries, path))
     assert(discovery(warm).isEmpty, s"same version, same session: $warm")
     val other = spark.newSession()
     val otherQueries = split(other, sfDir)._2
-    val shared = jobsOf(other)(TextOps.impactSearchServe(otherQueries, path).collect())
+    val shared = jobsOf(TextOps.impactSearchServe(otherQueries, path).collect())
     assert(discovery(shared).isEmpty, s"same version, another session: $shared")
     assert(ImpactHandle.size == stores, "a second session must not register a second handle")
     // a re-freeze in place (same files, new stamp) is a new version
     TextOps.writeImpactIndex(corpus, path)
-    val reopened = jobsOf(spark)(servedRows(queries, path))
+    val reopened = jobsOf(servedRows(queries, path))
     assert(discovery(reopened).nonEmpty, s"a new version must reopen: $reopened")
     assert(servedRows(queries, path) == servedRows(queries, store))
   }
@@ -464,7 +444,7 @@ class ImpactIndexSpec extends SparkSpec {
     // a session cloned for that query
     def drain(batch: Seq[(String, String)]): Seq[Job] = {
       rawPostings(batch).coalesce(1).write.mode("append").json(s"$root/staging")
-      jobsOf(spark)(BronzePipeline.ingest(spark, s"$root/staging", s"$root/bronze",
+      jobsOf(BronzePipeline.ingest(spark, s"$root/staging", s"$root/bronze",
         s"$root/meta", s"$root/ckpt", Seq(BronzePipeline.lexGate(idx))).awaitTermination())
     }
     def listings(jobs: Seq[Job], table: String): Seq[Job] = jobs.filter(j =>
@@ -493,12 +473,4 @@ class ImpactIndexSpec extends SparkSpec {
   private def xxhashOf(id: String): Long =
     spark.range(1).select(org.apache.spark.sql.functions.xxhash64(
       org.apache.spark.sql.functions.lit(id))).head().getLong(0)
-}
-
-object ImpactIndexSpec {
-  /** A job as the listener saw it: whether it ran inside a SQL execution
-    * (a query's own jobs do; the file listing and the parquet schema
-    * inference of resolving a relation do not) and its description.
-    */
-  final case class Job(inQuery: Boolean, description: String)
 }

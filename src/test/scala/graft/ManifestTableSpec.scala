@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.ManifestTable
+import graft.sources.{ColStats, ManifestTable}
 import graft.sources.ManifestTable.ColStat
 
 class ManifestTableSpec extends SparkSpec {
@@ -408,12 +408,12 @@ class ManifestTableSpec extends SparkSpec {
     val hi = 253402300799999999L // 9999-12-31T23:59:59.999999Z
     val micros = Seq.fill(2000)(lo + (rnd.nextDouble() * (hi.toDouble - lo)).toLong)
       .filter(m => m >= lo && m <= hi).sorted
-    val canons = micros.map(ManifestTable.tsCanon)
+    val canons = micros.map(ColStats.tsCanon)
     assert(canons.forall(_.length == 26), "fixed width is what makes lexical = chronological")
     assert(canons == canons.sorted, "lexical order must equal instant order")
     // spot anchors
-    assert(ManifestTable.tsCanon(0L) == "1970-01-01 00:00:00.000000")
-    assert(ManifestTable.tsCanon(1727085600000000L) == "2024-09-23 10:00:00.000000")
+    assert(ColStats.tsCanon(0L) == "1970-01-01 00:00:00.000000")
+    assert(ColStats.tsCanon(1727085600000000L) == "2024-09-23 10:00:00.000000")
   }
 
   test("incremental consumption reads only appended commits, refuses rewritten boundaries") {
@@ -706,14 +706,14 @@ class ManifestTableSpec extends SparkSpec {
       }.flatMap { tag =>
         val e = tag match {
           case "ts" => unix_micros(col(c))
-          case "tsn" => date_format(col(c), ManifestTable.TsPattern)
+          case "tsn" => date_format(col(c), ColStats.TsPattern)
           case _ => col(c)
         }
         val r = written.agg(min(e).cast("string"), max(e).cast("string"),
           count(lit(1)) - count(col(c))).head()
         if (r.isNullAt(0)) None
-        else if (tag == "ts") Some(c -> ColStat(tag, ManifestTable.tsCanon(r.getString(0).toLong),
-          ManifestTable.tsCanon(r.getString(1).toLong), Some(r.getLong(2))))
+        else if (tag == "ts") Some(c -> ColStat(tag, ColStats.tsCanon(r.getString(0).toLong),
+          ColStats.tsCanon(r.getString(1).toLong), Some(r.getLong(2))))
         else Some(c -> ColStat(tag, r.getString(0), r.getString(1), Some(r.getLong(2))))
       }
     }.toMap

@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -20,6 +26,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The jobs `body` runs, in start order. The listener bus is drained
+    * before and after, so no job is lost or borrowed; every session of
+    * the suite shares the one context the listener sits on.
+    */
+  def jobsOf(body: => Unit): Seq[SparkSpec.Job] = {
+    val seen = new ConcurrentLinkedQueue[SparkSpec.Job]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        seen.add(SparkSpec.Job(
+          props.exists(_.getProperty("spark.sql.execution.id") != null),
+          props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")))
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBridge.drain(sc) } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
   /** Raw-posting frame in BronzeLayer.rawColumns shape — the single
     * fixture for every ingest/runner/pipeline spec. */
   def rawPostings(rows: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
@@ -37,6 +64,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** A job as the listener saw it: whether it ran inside a SQL execution
+    * (a query's own jobs do; the file listing and the parquet schema
+    * inference of resolving a relation do not) and its description.
+    */
+  final case class Job(inQuery: Boolean, description: String)
+
+
   // pinned at 4 cores, whatever core count the test run exports
   lazy val session: SparkSession = GraftSession.local("graft-test", cpus = 4)
 }

@@ -18,6 +18,10 @@
 # PacedExtractorSpec and GraftDataSourceSpec because they read manifest
 # tables through ManifestTable's per-dir schema cache, JVM-wide state that
 # every commit fills as it writes.
+# GraftDmlSpec and DeleteProofPropertySpec because they prune through the
+# one stats comparator (sources.ColStats) every read, DELETE, UPDATE and
+# MERGE shares; GraftDmlSpec is also the only suite that drives SQL MERGE
+# and UPDATE through ManifestTable's commit loop (`publish`).
 #
 # Usage: tools/race_loop.sh [iterations] [stress_cores]
 #   defaults: 50 iterations, half of `nproc` stressor cores (more
@@ -34,7 +38,8 @@ SUITES="graft.ManifestTableSpec graft.CommitStoreSpec graft.GraftStreamSpec \
 graft.ManifestHardeningSpec graft.MergeCommitSpec graft.CloneRestoreSpec \
 graft.GraftDeleteSpec graft.ImpactIndexSpec graft.ImpactDedupGateSpec \
 graft.BronzePipelineSpec graft.IngestChainSpec graft.BloomDedupGateSpec \
-graft.PacedExtractorSpec graft.GraftDataSourceSpec"
+graft.PacedExtractorSpec graft.GraftDataSourceSpec graft.GraftDmlSpec \
+graft.DeleteProofPropertySpec"
 OUT="tools/race_loop_results.txt"
 
 # append (never truncate): the results file is the round's cumulative
